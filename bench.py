@@ -21,12 +21,11 @@ requiring a second out-of-band "builder" run: whatever run the driver
 captures IS the binding record.
 
 Cold arm (VERDICT r13 #2): ``SPARK_GRAFT_BENCH_COLD=1`` prices the
-session caches and the durable warehouse INTO the numbers instead of
-erasing them: the durable warehouse is disabled (and pointed at a temp
-dir, belt and braces), every session-scoped shared relation
-(edgecache/sigcache registry) is dropped before EACH query's first
-run, and run-1 (cold, from-parquet) is recorded next to min-of-3
-(warm) in bench_full.json (``cold_first_run``). The printed one-line
+session registry INTO the numbers instead of erasing it: every
+session-scoped shared relation (edgecache/sigcache registry) is
+released before EACH query's first run, and run-1 (cold,
+from-parquet) is recorded next to min-of-3 (warm) in bench_full.json
+(``cold_first_run``). The printed one-line
 JSON contract is unchanged; the default (no env) warm behavior is
 byte-identical to r13.
 """
@@ -80,17 +79,6 @@ def main() -> None:
         "yes",
         "on",
     }
-    if cold:
-        import tempfile
-
-        # no durable warehouse reads OR writes leak into (or out of)
-        # the cold arm: disable the read-or-build path and point the
-        # root at a throwaway dir in case anything ignores the flag
-        os.environ["SPARK_GRAFT_EDGE_WAREHOUSE"] = "0"
-        os.environ["SPARK_GRAFT_WAREHOUSE"] = tempfile.mkdtemp(
-            prefix="bench-cold-warehouse-"
-        )
-
     spark = get_spark("bench")
     queries = registry.get_queries()
 

@@ -1,25 +1,28 @@
-"""Session-scoped persisted co-purchase edge relations.
+"""Session-scoped shared relations: the one memo tier.
 
-The X37 stored-index discipline applied to the graph family (VERDICT
-r7 #4): eleven declared queries (pagerank, personalized pagerank, k-hop
+Eleven declared graph queries (pagerank, personalized pagerank, k-hop
 BFS, k-core, cheapest-path, clustering coefficient, triangle count,
 modularity, label propagation, 2-hop reach, assortativity) all start
-from the SAME base relation — the distinct (l_orderkey, l_partkey)
-items self-join — and each used to rebuild it from the lineitem
-parquet scan up (~2 s of the 2.3-6.7 s per graph query at sf0.1).
-This module builds it ONCE per (application, sf_dir) and persists it
-(MEMORY_AND_DISK), so every graph query after the first reads the
-in-memory edge relation instead of re-running the scan + self-join.
+from the SAME base relation: the distinct (l_orderkey, l_partkey) items
+self-join. This module builds it ONCE per (application, sf_dir) and
+registers it as an eager local checkpoint, so every graph query after
+the first reads the stored blocks instead of re-running the scan +
+self-join. :func:`session_cached` is the registry every other shared
+relation goes through too (``sigcache``'s document indexes, the
+recommender neighbour lists, the ER cluster labels, the winnowing
+fingerprints).
 
-At 100 TB the same discipline holds with a durable artifact instead of
-a cache: the edge list is the persisted table (bucketed by src) and
-every graph algorithm reads it — never re-deriving edges from the
-fact table per query. The in-session persist is the local-mode
-equivalent; `operators/graph.py` additionally repartitions its own
-copy on src per algorithm call (iteration-internal reuse), which this
-cache feeds.
+Each entry is an eager local checkpoint of ``build()``: the relation is
+computed once, its blocks are held MEMORY_AND_DISK by the block
+manager, and consumers plan against a ``Scan ExistingRDD`` with the
+build lineage cut, so neither re-analysis nor a recompute of the build
+reaches them. The checkpoint is taken from a briefly cached copy so it
+carries the relation's measured size and row count
+(:func:`_checkpoint`).
+:func:`clear_cache` releases every entry's blocks and forgets it (test
+hygiene, and the cold bench arm's per-query reset).
 
-Two base relations are cached, everything else is a projection:
+The graph family's two base relations:
 
 - ``copurchase_pairs``  — (u, v) with u < v, one row per co-purchasing
   ORDER (multiplicity preserved; parallel pairs act as weights).
@@ -27,17 +30,15 @@ Two base relations are cached, everything else is a projection:
   undirected graph).
 
 The symmetrized multigraph view (``copurchase_edges``) explodes each
-cached row into both directions — a narrow map over the cache, NOT
-persisted twice. The symmetrized SIMPLE relation
-(``copurchase_edges_distinct``) IS persisted (r9): it is the working
-relation of the iterative graph family (k-core, clustering
-coefficient, triangle count, 2-hop reach, ...), several of which scan
-it once per round — ~2|E| rows of two BIGINTs is far cheaper to hold
-than to re-explode inside every loop, and it lets kcore_peel run
-directly on the cached relation instead of persisting a private copy.
+registered row into both directions — a narrow map, NOT stored twice.
+The symmetrized SIMPLE relation (``copurchase_edges_distinct``) IS
+registered: it is the working relation of the iterative graph family
+(k-core, clustering coefficient, triangle count, 2-hop reach, ...),
+several of which scan it once per round — ~2|E| rows of two BIGINTs is
+far cheaper to hold than to re-explode inside every loop.
 
-Cache safety: entries are keyed by (applicationId, realpath(sf_dir))
-and additionally pin the owning SparkSession by identity — a new
+Cache safety: entries are keyed by (applicationId, realpath(sf_dir),
+kind) and additionally pin the owning SparkSession by identity — a new
 session (fresh driver run, test isolation) rebuilds rather than
 reusing DataFrames whose analyzer state belongs to a dead session.
 """
@@ -52,15 +53,52 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 _CACHE: dict[tuple[str, str, str], tuple[SparkSession, DataFrame]] = {}
-# RLock (ADVICE r8): `build` recurses into _cached (pairs -> items), and
-# concurrent first calls must not race to persist two copies of the same
-# relation (one would leak, unreferenced but persisted).
+# RLock (ADVICE r8): `build` recurses into session_cached (pairs ->
+# items), and concurrent first calls must not race to checkpoint two
+# copies of the same relation (one would leak, unreferenced but stored).
 _LOCK = threading.RLock()
 
 
-def _cached(
+def _release(df: DataFrame) -> None:
+    """Drop a registered checkpoint's blocks: the entry's logical plan
+    is the LogicalRDD over the locally checkpointed RDD, and
+    unpersisting that RDD frees what localCheckpoint stored."""
+    try:
+        df._jdf.queryExecution().logical().rdd().unpersist(True)
+    except Exception:
+        pass
+
+
+def _checkpoint(plan: DataFrame) -> DataFrame:
+    """Eager local checkpoint of ``plan`` that plans with the relation's
+    measured size and row count. A checkpoint carries its build plan's
+    estimated statistics (join and aggregate estimates run to GBs for a
+    relation of a few KB), which keeps the optimizer from broadcasting
+    small entries; a materialized cache reports what it stored, so the
+    checkpoint is taken from one and the cache is dropped."""
+    cached = plan.persist(StorageLevel.MEMORY_AND_DISK)
+    cached.count()
+    df = cached.localCheckpoint()
+    cached.unpersist()
+    return df
+
+
+def session_cached(
     spark: SparkSession, sf_dir: str, kind: str, build
 ) -> DataFrame:
+    """Register/read a session-scoped shared relation (ADVICE r13):
+    modules register their own relations under a unique ``kind``
+    without coupling to the registry internals (lock, eviction,
+    session-identity pinning). The relation is built ONCE per
+    (applicationId, realpath(sf_dir), kind) as an eager
+    ``localCheckpoint`` and released by :func:`clear_cache` or app exit.
+
+    Footprint note (ADVICE r13): every registered relation stays
+    stored until app exit / clear_cache(); multi-sf_dir sessions hold
+    one copy per sf_dir. Checkpoint blocks spill to disk under memory
+    pressure, and the largest entries are fact-grain incidences
+    (user_items) or |E|-grain edge lists — bounded well below the fact
+    table they are derived from."""
     app = spark.sparkContext.applicationId
     key = (app, os.path.realpath(sf_dir), kind)
     with _LOCK:
@@ -69,62 +107,43 @@ def _cached(
         # below misses them forever) and would otherwise linger in the
         # module dict for the process lifetime.
         for stale in [k for k in _CACHE if k[0] != app]:
-            _, old = _CACHE.pop(stale)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+            _release(_CACHE.pop(stale)[1])
         hit = _CACHE.get(key)
         if hit is not None:
-            cached_spark, df = hit
-            if cached_spark is spark:
-                return df
-            try:  # same app, different session: drop the stale entry
-                df.unpersist()
-            except Exception:
-                pass
-            del _CACHE[key]
-        df = build().persist(StorageLevel.MEMORY_AND_DISK)
+            if hit[0] is spark:
+                return hit[1]
+            # same app, different session: drop the stale entry
+            _release(_CACHE.pop(key)[1])
+        df = _checkpoint(build())
         _CACHE[key] = (spark, df)
         return df
 
 
-def session_cached(
-    spark: SparkSession, sf_dir: str, kind: str, build
-) -> DataFrame:
-    """Public register/read entry point for session-scoped persisted
-    relations (ADVICE r13): other modules (plans, sigcache) register
-    their own shared relations under a unique ``kind`` without coupling
-    to this module's private registry internals (lock, eviction,
-    session-identity pinning). The relation is built lazily ONCE per
-    (applicationId, realpath(sf_dir), kind), persisted MEMORY_AND_DISK,
-    and dropped by :func:`clear_cache` or app exit.
-
-    Footprint note (ADVICE r13): every registered relation stays
-    persisted until app exit / clear_cache(); multi-sf_dir sessions
-    hold one copy per sf_dir. All current entries spill to disk under
-    memory pressure (MEMORY_AND_DISK), and the largest are fact-grain
-    incidences (user_items) or |E|-grain edge lists — bounded well
-    below the fact table they are derived from."""
-    return _cached(spark, sf_dir, kind, build)
-
-
 def clear_cache() -> None:
-    """Unpersist and forget every cached edge relation (test hygiene,
-    and the cold bench arm's per-query reset)."""
+    """Release and forget every registered relation (test hygiene, and
+    the cold bench arm's per-query reset). A DataFrame derived from a
+    released entry can no longer run — its checkpoint has no lineage to
+    recompute from — so consumers re-read the registry afterwards."""
     with _LOCK:
-        for _, (_, df) in list(_CACHE.items()):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        for _, df in _CACHE.values():
+            _release(df)
         _CACHE.clear()
+
+
+def durable_read_or_build(*args, **kwargs):
+    """Removed with the durable warehouse tier: shared relations live
+    only in :func:`session_cached`. The name stays because the
+    benchmark tracer's LAYERS table (``perfbench/tracing.py``) looks it
+    up; it goes when LAYERS drops it. Nothing in the package calls it."""
+    raise NotImplementedError(
+        "the durable warehouse tier was removed; use session_cached"
+    )
 
 
 def copurchase_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT (l_orderkey, l_partkey) incidence — the base relation
     of the whole co-purchase family (pair build, per-part support,
-    3-itemsets, HITS hubs) — persisted once per (app, sf_dir)."""
+    3-itemsets, HITS hubs) — registered once per (app, sf_dir)."""
 
     def build() -> DataFrame:
         from ..io import load_table
@@ -132,12 +151,12 @@ def copurchase_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem")
         return li.select("l_orderkey", "l_partkey").distinct()
 
-    return _cached(spark, sf_dir, "items", build)
+    return session_cached(spark, sf_dir, "items", build)
 
 
 def _pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The raw (u, v) pair self-join plan — the expensive relation the
-    session cache and the durable warehouse both memoize."""
+    """The raw (u, v) pair self-join plan — the expensive relation
+    :func:`copurchase_pairs` registers."""
     items = copurchase_items(spark, sf_dir)
     a, b = items.alias("a"), items.alias("b")
     return a.join(
@@ -150,150 +169,19 @@ def _pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _warehouse_root() -> str | None:
-    """Durable-cache root (VERDICT r8 #4), or None when disabled.
-
-    ``SPARK_GRAFT_EDGE_WAREHOUSE=0`` opts out entirely;
-    ``SPARK_GRAFT_WAREHOUSE`` overrides the location (default:
-    ``<repo>/warehouse`` — gitignored)."""
-    flag = os.environ.get("SPARK_GRAFT_EDGE_WAREHOUSE", "1").strip().lower()
-    if flag in {"0", "false", "no", "off"}:
-        return None
-    root = os.environ.get("SPARK_GRAFT_WAREHOUSE")
-    if not root:
-        root = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(
-                os.path.abspath(__file__)))),
-            "warehouse",
-        )
-    return root
-
-
-def _durable_keys(
-    sf_dir: str, source: str = "lineitem.parquet", version: str = ""
-) -> tuple[str, str]:
-    """(sf_key, fingerprint): sf_key names the SOURCE DIRECTORY (one
-    subtree per sf_dir — sf0.001/0.01/0.1 coexist), fingerprint names
-    the CONTENT of ``source`` (total bytes + max mtime_ns of its
-    parquet files) SALTED with the artifact's ``version`` string
-    (ADVICE r10: the stored relation bakes in operator parameters —
-    n_bands/shingle_k/FP_TOKENS/... — so a parameter change must read
-    as a new fingerprint, not silently serve the old layout). A
-    regenerated fixture OR a bumped version gets a new fingerprint;
-    stale fingerprints are cleaned only inside their own sf_key
-    subtree."""
-    import hashlib
-
-    real = os.path.realpath(sf_dir)
-    path = os.path.join(real, source)
-    total, mtime = 0, 0
-    if os.path.isfile(path):  # single-file parquet (the fixtures)
-        st = os.stat(path)
-        total, mtime = st.st_size, st.st_mtime_ns
-    else:  # parquet directory
-        for droot, _, files in os.walk(path):
-            for f in files:
-                st = os.stat(os.path.join(droot, f))
-                total += st.st_size
-                mtime = max(mtime, st.st_mtime_ns)
-    sf_key = hashlib.sha256(real.encode()).hexdigest()[:12]
-    fp = hashlib.sha256(f"{total}|{mtime}|{version}".encode()).hexdigest()[:16]
-    return sf_key, fp
-
-
-def durable_read_or_build(
-    spark: SparkSession,
-    sf_dir: str,
-    family: str,
-    build_plan,
-    source: str = "lineitem.parquet",
-    version: str = "",
-) -> DataFrame | None:
-    """Read-or-build a WAREHOUSE parquet copy of an expensive relation.
-
-    The X37 stored-index discipline made durable (VERDICT r8 #4, made
-    generic for r9 #4's signature index): the relation is written ONCE
-    per (sf_dir, source-fingerprint) as parquet under
-    ``warehouse/<family>/<sf_key>/<fp>`` (crash-safe temp-dir + atomic
-    rename, like ``operators/maintenance.py``), and every later
-    session just scans it instead of re-deriving it from the fixture.
-    ``source`` names the fixture table whose bytes+mtime fingerprint
-    the artifact, and ``version`` salts that fingerprint with the
-    operator parameters the artifact bakes in (ADVICE r10) — a
-    regenerated fixture or a parameter change self-invalidates, and
-    stale fingerprints are cleaned only inside their own sf_key
-    subtree. At 100 TB this is exactly the durable index-table
-    artifact — bucketed on its join key on a real cluster; locally a
-    plain parquet directory. Returns None (caller falls back to the
-    in-memory plan) when the warehouse is disabled
-    (``SPARK_GRAFT_EDGE_WAREHOUSE=0``) or unwritable."""
-    root = _warehouse_root()
-    if root is None:
-        return None
-    try:
-        sf_key, fp = _durable_keys(sf_dir, source=source, version=version)
-        base = os.path.join(root, family, sf_key)
-        dst = os.path.join(base, fp)
-        if not os.path.isdir(dst):
-            import shutil
-
-            os.makedirs(base, exist_ok=True)
-            # GC breadcrumb (tools/warehouse_gc.py): record which source
-            # directory this sf_key hashes so orphaned subtrees (deleted
-            # test fixtures) are mechanically identifiable later.
-            try:
-                with open(os.path.join(base, "_SOURCE"), "w") as fh:
-                    fh.write(os.path.realpath(sf_dir))
-            except OSError:
-                pass
-            tmp = os.path.join(base, f".tmp-{fp}-{os.getpid()}")
-            build_plan().write.mode("overwrite").parquet(tmp)
-            try:
-                os.rename(tmp, dst)  # atomic publish
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-            # best-effort: drop stale fingerprints of THIS source dir
-            for old in os.listdir(base):
-                if old != fp and old != "_SOURCE" and not old.startswith(".tmp-"):
-                    shutil.rmtree(os.path.join(base, old), ignore_errors=True)
-        return spark.read.parquet(dst)
-    except Exception:
-        return None
-
-
-def _durable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The warehouse copy of the co-purchase pair relation: a FRESH
-    session used to pay the full lineitem scan + self-join (~2 s at
-    sf0.1) before the first of the ~15 graph queries; now it scans the
-    stored pair table."""
-    return durable_read_or_build(
-        spark,
-        sf_dir,
-        "copurchase_pairs",
-        lambda: _pairs_plan(spark, sf_dir),
-        version="pairs-v1",  # schema (u,v), u<v, order-multiplicity rows
-    )
-
-
 def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(u, v) part pairs with u < v, one row per co-purchasing order
-    (multiplicity preserved) — persisted once per (app, sf_dir), and
-    (r9) backed by a durable warehouse parquet copy so a FRESH session
-    scans the stored pair table instead of re-running the lineitem
-    self-join (VERDICT r8 #4)."""
-
-    def build() -> DataFrame:
-        durable = _durable_pairs(spark, sf_dir)
-        return durable if durable is not None else _pairs_plan(spark, sf_dir)
-
-    return _cached(spark, sf_dir, "pairs", build)
+    (multiplicity preserved) — registered once per (app, sf_dir)."""
+    return session_cached(
+        spark, sf_dir, "pairs", lambda: _pairs_plan(spark, sf_dir)
+    )
 
 
 def copurchase_und(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT (u, v) with u < v — the simple undirected co-purchase
-    graph, persisted once per (app, sf_dir); derived from the cached
+    graph, registered once per (app, sf_dir); derived from the cached
     pairs so the lineitem scan + self-join never reruns."""
-    return _cached(
+    return session_cached(
         spark,
         sf_dir,
         "und",
@@ -320,11 +208,11 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def copurchase_edges_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized simple-graph edge list (both directions, no parallel
-    edges) — persisted once per (app, sf_dir): the iterative graph
+    edges) — registered once per (app, sf_dir): the iterative graph
     family scans it once per ROUND, so caching the exploded form (two
     BIGINT columns) beats re-exploding the pair cache inside every
-    loop, and lets kcore_peel skip its private persisted copy."""
-    return _cached(
+    loop."""
+    return session_cached(
         spark,
         sf_dir,
         "edges_distinct",
@@ -334,7 +222,7 @@ def copurchase_edges_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def copurchase_user_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT (o_custkey, l_partkey) customer-part incidence —
-    persisted once per (app, sf_dir). Consumed by the bipartite HITS
+    registered once per (app, sf_dir). Consumed by the bipartite HITS
     query (three passes per run) and the user-recommendation serving
     query (candidate join + anti-join), each of which re-ran the
     orders x lineitem join + distinct per consumer."""
@@ -354,15 +242,15 @@ def copurchase_user_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return _cached(spark, sf_dir, "user_items", build)
+    return session_cached(spark, sf_dir, "user_items", build)
 
 
 def copurchase_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(l_partkey, n_ord) per-part order support — part-catalog grain,
-    persisted once per (app, sf_dir); the recommender family
+    registered once per (app, sf_dir); the recommender family
     (item-item cosine, user recs, association rules, exposure audit)
     each re-derived it from the incidence cache per query."""
-    return _cached(
+    return session_cached(
         spark,
         sf_dir,
         "supp",
@@ -376,9 +264,9 @@ def copurchase_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def copurchase_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(u, v, co) undirected co-occurrence counts (u < v) — the
-    aggregated form of the pair multiset, persisted once per
+    aggregated form of the pair multiset, registered once per
     (app, sf_dir) for the same four recommender consumers."""
-    return _cached(
+    return session_cached(
         spark,
         sf_dir,
         "pair_counts",
@@ -392,10 +280,10 @@ def copurchase_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def copurchase_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, d) exact degree table of the simple undirected graph —
-    persisted once per (app, sf_dir). Consumed by the degree-oriented
+    registered once per (app, sf_dir). Consumed by the degree-oriented
     wedge family (triangle count, clustering coefficient) which
     previously each re-derived it from the pair cache."""
-    return _cached(
+    return session_cached(
         spark,
         sf_dir,
         "deg",
@@ -433,15 +321,15 @@ def copurchase_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         )
 
-    return _cached(spark, sf_dir, "oriented", build)
+    return session_cached(spark, sf_dir, "oriented", build)
 
 
 def copurchase_oriented_adj(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, nbrs) sorted out-neighborhood arrays over the oriented
-    edges (max O(sqrt(m)) elements per row) — persisted once per
+    edges (max O(sqrt(m)) elements per row) — registered once per
     (app, sf_dir); the wedge queries each join it TWICE per run, and
     previously each rebuilt it from their private oriented copy."""
-    return _cached(
+    return session_cached(
         spark,
         sf_dir,
         "oriented_adj",

@@ -220,28 +220,24 @@ def kcore_peel(
     edge set is exactly the subgraph induced by the survivors (S_r is
     monotonically shrinking, so both-endpoints-in-S_r ≡ the iterated
     edge filtering), so each round localCheckpoints only a <= |V|-row
-    node table and re-derives its edges from the ONE persisted base
-    edge list. The previous form eagerly checkpointed the full |E|-row
-    edge list every round — vertex-sized state per round (the
-    pagerank/BFS/min-plus discipline) instead of edge-sized.
+    node table and re-derives its edges from the peel's ONE persisted
+    working copy of the edge list. The previous form eagerly
+    checkpointed the full |E|-row edge list every round — vertex-sized
+    state per round (the pagerank/BFS/min-plus discipline) instead of
+    edge-sized.
 
-    Resource discipline (round 9, ADVICE r8): when the input relation
-    is ALREADY persisted (the edge cache's symmetrized simple-graph
-    relation), the peel runs directly on it — no private copy, nothing
-    to clean up. Otherwise a repartitioned working copy is persisted
-    only for the duration of the peel loop (the survivor sets are
-    materialized eagerly inside it) and unpersisted before returning —
-    like pagerank/bfs_hops/min_plus_hops, repeated calls in one
-    session no longer accumulate MEMORY_AND_DISK copies; the returned
-    per-round edge views are then bound to the caller's ``edges``
+    Resource discipline (round 9, ADVICE r8): the repartitioned working
+    copy is persisted only for the duration of the peel loop (the
+    survivor sets are materialized eagerly inside it) and unpersisted
+    before returning — like pagerank/bfs_hops/min_plus_hops, repeated
+    calls in one session do not accumulate MEMORY_AND_DISK copies; the
+    returned per-round edge views are bound to the caller's ``edges``
     relation joined against the checkpointed <= |V|-row survivor sets
     — correct by the induced-subgraph property above."""
     spark = edges.sparkSession
     parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     base = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    lvl = edges.storageLevel
-    own_copy = not (lvl.useMemory or lvl.useDisk)
-    e0 = base.repartition(parts, "src").persist() if own_copy else base
+    e0 = base.repartition(parts, "src").persist()
     surv: list[DataFrame] = []
     cur = e0
     for _ in range(rounds):
@@ -255,11 +251,9 @@ def kcore_peel(
         cur = e0.join(s, "src").join(
             s.withColumnRenamed("src", "dst"), "dst"
         ).select("src", "dst")
-    if own_copy:
-        e0.unpersist()
-    out_base = base if own_copy else e0
+    e0.unpersist()
     return [
-        out_base.join(s, "src")
+        base.join(s, "src")
         .join(s.withColumnRenamed("src", "dst"), "dst")
         .select("src", "dst")
         for s in surv

@@ -1,43 +1,41 @@
-"""Session-scoped + durable document signature indexes (VERDICT r9 #4).
+"""Session-scoped document indexes for the dedup family (VERDICT r9 #4).
 
-The X37 stored-index discipline applied to the dedup family the way
-``edgecache`` applied it to the graph family: nine declared queries
-(minhash_lsh_pairs, jaccard_neardup_pairs, dedup_clusters_lsh,
-dedup_survivor_quality, containment_pairs_docs, lsh_quality_eval,
-split_leakage_audit, ensemble_neardup_vote, lsh_index_admission) all
-start from the SAME banded minhash signature relation over the
-documents table — and each used to re-tokenize, re-shingle and re-hash
-the corpus from the parquet scan up. ``incremental_dedup_ingest``
-likewise re-fingerprinted the corpus per run. This module builds each
-relation ONCE per (application, sf_dir), persists it in-session
-(MEMORY_AND_DISK via edgecache's cache), and backs it with a durable
-parquet artifact under ``warehouse/lsh_signatures/<sf_key>/<fp>``
-(resp. ``warehouse/doc_fingerprints``) with the same
-bytes+mtime fingerprint self-invalidation and crash-safe publish as
-``warehouse/copurchase_pairs`` — so a FRESH session scans the stored
-signature index instead of re-signing the corpus.
+Nine declared queries (minhash_lsh_pairs, jaccard_neardup_pairs,
+dedup_clusters_lsh, dedup_survivor_quality, containment_pairs_docs,
+lsh_quality_eval, split_leakage_audit, ensemble_neardup_vote,
+lsh_index_admission) all start from the SAME banded minhash signature
+relation over the documents table — and each used to re-tokenize,
+re-shingle and re-hash the corpus from the parquet scan up.
+``incremental_dedup_ingest`` likewise re-fingerprinted the corpus per
+run. This module builds each relation ONCE per (application, sf_dir)
+and registers it through ``edgecache.session_cached`` as an eager
+local checkpoint, so every consumer after the first reads the stored
+blocks instead of re-signing the corpus.
 
-At 100 TB this is exactly the live-corpus discipline the X119/X108
-docstrings describe: the corpus side of every admission join IS the
-persisted, (band, minhash)-bucketed signature table (locally a plain
-parquet directory written pre-spread on the bucket key); corpus TEXT
-is never re-read per ingest — only the new batch is signed. Signature
-values are deterministic (md5 minhash over distinct shingles, min is
-order-independent) and parquet-exact (strings + ints), so reading the
-stored index is value-identical to re-deriving it — the oracle twins
-are unaffected.
+At 100 TB this is the live-corpus discipline the X119/X108 docstrings
+describe: the corpus side of every admission join IS the maintained,
+(band, minhash)-bucketed signature table; corpus TEXT is never re-read
+per ingest — only the new batch is signed. Signature values are
+deterministic (md5 minhash over distinct shingles, min is
+order-independent), so a registered index is value-identical to
+re-deriving it — the oracle twins are unaffected.
 
-Cache safety mirrors edgecache: session entries are keyed by
-(applicationId, realpath(sf_dir)); ``SPARK_GRAFT_EDGE_WAREHOUSE=0``
-disables the durable leg for both modules.
+The three registered documents-derived relations (signatures,
+fingerprints, and the winnowing fingerprints in
+``plans/control_queries.py``) land on :func:`artifact_parts` partitions,
+scaled to the source size rather than to spark.sql.shuffle.partitions.
+The rarest-first shingle arrays are NOT registered
+(:func:`document_shingle_arrays` says why).
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .edgecache import durable_read_or_build, session_cached
+from .edgecache import session_cached
 
 FP_TOKENS = 8  # first-k-token exact fingerprint (X108's constant)
 
@@ -48,41 +46,15 @@ NEARDUP_JACCARD = 0.8
 NEARDUP_MAX_DF_FRAC = 0.5
 
 
-def _sig_version() -> str:
-    """Fingerprint salt for the signature artifact (ADVICE r10): the
-    stored relation bakes in minhash_signatures' banding/shingle
-    defaults, so the salt is derived FROM those defaults — changing
-    any of them re-fingerprints every stored signature index. The
-    leading ``sig-v1`` covers algorithm changes the signature line
-    can't see (tokenizer, hash function)."""
-    import inspect
-
-    from .dedup import minhash_signatures
-
-    p = inspect.signature(minhash_signatures).parameters
-    return (
-        f"sig-v1:b{p['n_bands'].default}"
-        f"r{p['rows_per_band'].default}k{p['shingle_k'].default}"
-    )
-
-
-def _fp_version() -> str:
-    """Fingerprint salt for the admission-fingerprint artifact — the
-    prefix length is the one baked-in parameter."""
-    return f"fp-v1:k{FP_TOKENS}"
-
-
-def _write_parts(sf_dir: str, source: str = "documents.parquet") -> int:
-    """Write-side partition count for the warehouse artifacts, scaled
-    to the SOURCE size (~32 MB of source text per output partition)
-    instead of spark.sql.shuffle.partitions (ADVICE r10: fixture-sized
-    corpora persisted ~200 tiny files, inflating the cold FileScan the
-    warehouse exists to speed up). The expensive signing work inside
-    minhash_signatures stays spread at full parallelism; only the
-    final pre-write exchange lands on this count."""
-    import os
-
-    path = os.path.join(os.path.realpath(sf_dir), source)
+def artifact_parts(sf_dir: str) -> int:
+    """Partition count of a documents-derived registry relation,
+    scaled to the documents table's size (~32 MB per partition, so one
+    partition at fixture size) instead of spark.sql.shuffle.partitions
+    (ADVICE r10). The expensive signing work stays spread at full
+    parallelism; only the final exchange before the checkpoint lands
+    on this count, which keeps the small relation's consumers from
+    scheduling a task per near-empty shuffle partition."""
+    path = os.path.join(os.path.realpath(sf_dir), "documents.parquet")
     total = 0
     if os.path.isfile(path):
         total = os.stat(path).st_size
@@ -94,126 +66,75 @@ def _write_parts(sf_dir: str, source: str = "documents.parquet") -> int:
     return max(1, min(2048, total // (32 << 20) + 1))
 
 
-def warehouse_write_parts(
-    sf_dir: str, source: str = "documents.parquet"
-) -> int:
-    """Public source-scaled write-partition count for warehouse
-    artifacts registered by OTHER modules (ADVICE r13 coupling rule:
-    plans code uses public entry points only)."""
-    return _write_parts(sf_dir, source=source)
-
-
-def _signatures_plan(
-    spark: SparkSession, sf_dir: str, write_parts: int | None = None
-) -> DataFrame:
+def _signatures_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw (doc_id, band, minhash) banded-signature plan — the
-    expensive relation (tokenize -> shingle -> 8 md5 minhashes) the
-    session cache and the durable warehouse both memoize. Written
-    pre-spread on the (band, minhash) bucket key so the stored index's
-    layout matches the join it serves; the durable leg passes a
-    source-scaled partition count so fixtures persist a handful of
-    right-sized files."""
+    expensive relation (tokenize -> shingle -> 8 md5 minhashes)
+    :func:`document_signatures` registers, spread on the (band, minhash)
+    bucket key so the index's layout matches the join it serves."""
     from ..io import load_table
     from .dedup import minhash_signatures
 
     docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(docs)
-    if write_parts is not None:
-        return sigs.repartition(write_parts, "band", "minhash")
-    return sigs.repartition("band", "minhash")
+    return minhash_signatures(docs).repartition(
+        artifact_parts(sf_dir), "band", "minhash"
+    )
 
 
-def _fingerprints_plan(
-    spark: SparkSession, sf_dir: str, write_parts: int | None = None
-) -> DataFrame:
+def _fingerprints_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw (doc_id, fp) exact-fingerprint plan (md5 of the first
     FP_TOKENS tokens — X108's admission key)."""
     from ..io import load_table
     from .textanalysis import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    fps = docs.select(
+    return docs.select(
         "doc_id",
         F.md5(
             F.concat_ws(" ", F.slice(tokens("text"), 1, FP_TOKENS))
         ).alias("fp"),
-    )
-    if write_parts is not None:
-        return fps.repartition(write_parts, "fp")
-    return fps.repartition("fp")
+    ).repartition(artifact_parts(sf_dir), "fp")
 
 
 def document_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, band, minhash) banded minhash signatures of the WHOLE
-    documents table (default parameters) — persisted once per
-    (app, sf_dir) and backed by the durable warehouse copy, so a fresh
-    session scans the stored signature index instead of re-signing the
-    corpus. Consumers filter this relation (e.g. the X119 batch/corpus
-    split) instead of calling minhash_signatures on their own scan."""
-
-    def build() -> DataFrame:
-        durable = durable_read_or_build(
-            spark,
-            sf_dir,
-            "lsh_signatures",
-            lambda: _signatures_plan(
-                spark, sf_dir, write_parts=_write_parts(sf_dir)
-            ),
-            source="documents.parquet",
-            version=_sig_version(),
-        )
-        return (
-            durable
-            if durable is not None
-            else _signatures_plan(spark, sf_dir)
-        )
-
-    return session_cached(spark, sf_dir, "doc_sigs", build)
+    documents table (default parameters) — registered once per
+    (app, sf_dir). Consumers filter this relation (e.g. the X119
+    batch/corpus split) instead of calling minhash_signatures on their
+    own scan."""
+    return session_cached(
+        spark, sf_dir, "doc_sigs", lambda: _signatures_plan(spark, sf_dir)
+    )
 
 
 def document_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, fp) exact first-FP_TOKENS fingerprints of the whole
-    documents table — the X108 admission index, persisted and
-    warehoused like :func:`document_signatures`."""
-
-    def build() -> DataFrame:
-        durable = durable_read_or_build(
-            spark,
-            sf_dir,
-            "doc_fingerprints",
-            lambda: _fingerprints_plan(
-                spark, sf_dir, write_parts=_write_parts(sf_dir)
-            ),
-            source="documents.parquet",
-            version=_fp_version(),
-        )
-        return (
-            durable
-            if durable is not None
-            else _fingerprints_plan(spark, sf_dir)
-        )
-
-    return session_cached(spark, sf_dir, "doc_fps", build)
+    documents table — the X108 admission index, registered like
+    :func:`document_signatures`."""
+    return session_cached(
+        spark, sf_dir, "doc_fps", lambda: _fingerprints_plan(spark, sf_dir)
+    )
 
 
 SHINGLE_K = 3  # the X124/E7 3-word shingle grain
 
 
-def _shingle_version() -> str:
-    """Fingerprint salt for the shingle-array artifact: shingle width
-    plus the ordering rule the arrays bake in."""
-    return f"shingle-v1:k{SHINGLE_K}:df-rarest-first"
+def document_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, arr): each document's DISTINCT 3-word shingles ordered
+    rarest-first (global doc-frequency asc, shingle bytes asc) — the
+    prefix-filter posting layout of X124, shared by
+    prefix_filter_jaccard_join and lsh_quality_eval's ground-truth leg.
+    Everything the consumers need (set size, prefix length) is derived
+    from the array in-row, and ordering is baked into the array, so
+    consumers are value-identical.
 
-
-def _shingle_arrays_plan(
-    spark: SparkSession, sf_dir: str, write_parts: int | None = None
-) -> DataFrame:
-    """The raw (doc_id, arr) plan: each document's DISTINCT 3-word
-    shingles ordered rarest-first (global doc-frequency asc, shingle
-    bytes asc) — the prefix-filter posting layout of X124. The
-    tokenize -> shingle -> corpus-wide df count -> per-doc sort chain
-    is the expensive part; everything the consumers need (set size,
-    prefix length) is derived from the array in-row."""
+    NOT registered: this is a plan, recomputed by each consumer. At
+    sf0.1, r13 found a checkpoint of the doc-grain shingle ARRAYS ~1 s
+    slower than recomputing them and reverted it; r14's
+    session-persisted read of a parquet copy regressed
+    prefix_filter_jaccard_join 2.26 -> 3.27 s (VERDICT r14 #2); a
+    registered eager checkpoint doubled the cold first run of
+    prefix_filter_jaccard_join (3.9 -> 7.9 s, 4 cores) and raised
+    lsh_quality_eval's from 5.2 to 8.5 s."""
     from ..io import load_table
     from .dedup import shingles_from_tokens
     from .textanalysis import tokens
@@ -232,7 +153,7 @@ def _shingle_arrays_plan(
     dfreq = dt.groupBy("tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("df")
     )
-    ordered = (
+    return (
         dt.join(dfreq, "tok")
         .groupBy("doc_id")
         .agg(
@@ -242,57 +163,20 @@ def _shingle_arrays_plan(
             ).alias("arr")
         )
     )
-    if write_parts is not None:
-        return ordered.repartition(write_parts, "doc_id")
-    return ordered
-
-
-def document_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, arr) rarest-first ordered distinct-shingle arrays — the
-    persisted columnar posting table of the exact set-similarity family
-    (VERDICT r13 #3): prefix_filter_jaccard_join consumed this relation
-    FOUR times per run (prefix explode + both verify sides) and
-    lsh_quality_eval re-ran the whole chain again for its ground-truth
-    leg, re-tokenizing and re-sorting the corpus each time. r13 proved
-    an in-session localCheckpoint of the exploded rows LOSES (boxed
-    row blocks vs the fused scan pipeline); the durable parquet copy is
-    the columnar artifact that wins — arrays scan vectorized, and the
-    corpus-wide df sort is paid once per fixture, priced by the cold
-    bench arm. Values are parquet-exact (strings), ordering is baked
-    into the array, so consumers are value-identical."""
-
-    def build() -> DataFrame:
-        durable = durable_read_or_build(
-            spark,
-            sf_dir,
-            "shingle_postings",
-            lambda: _shingle_arrays_plan(
-                spark, sf_dir, write_parts=_write_parts(sf_dir)
-            ),
-            source="documents.parquet",
-            version=_shingle_version(),
-        )
-        return (
-            durable
-            if durable is not None
-            else _shingle_arrays_plan(spark, sf_dir)
-        )
-
-    return session_cached(spark, sf_dir, "shingle_arrays", build)
 
 
 def document_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jaccard) VERIFIED near-dup pairs at the production
     thresholds (LSH candidates over :func:`document_signatures` ->
     token-set Jaccard >= ``NEARDUP_JACCARD`` with the
-    ``NEARDUP_MAX_DF_FRAC`` hot-token valve) — persisted once per
+    ``NEARDUP_MAX_DF_FRAC`` hot-token valve) — registered once per
     (app, sf_dir). Four declared queries (jaccard_neardup_pairs,
     dedup_clusters_lsh, dedup_survivor_quality, split_leakage_audit)
     each re-ran the whole candidate+verify pipeline per query — and the
     three cluster consumers re-ran it once per bench repetition on top
     of the CC loop (VERDICT r13 #1). At 100 TB this relation is the
     maintained near-dup pair table a production dedup pipeline keeps
-    next to the signature index; the in-session persist is the
+    next to the signature index; the session checkpoint is the
     local-mode equivalent, and the cold bench arm
     (``SPARK_GRAFT_BENCH_COLD=1``) prices its build per query."""
     from ..io import load_table
@@ -318,7 +202,7 @@ def document_neardup_components(
     dedup_survivor_quality and split_leakage_audit each previously ran
     their own LSH + verify + star-contraction loop for identical
     labels. connected_components returns an eagerly materialized
-    |V|-row checkpoint; the session persist on top makes it shareable
+    |V|-row checkpoint; registering it makes it shareable
     across consumers (and across a bench's repeated runs — the cold
     arm resets it per query so the build cost stays on the record)."""
     from .components import connected_components

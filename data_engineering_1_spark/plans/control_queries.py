@@ -72,14 +72,14 @@ _EWMA_FRAME = 50
 # ---- X263: winnowing fingerprints -------------------------------------------
 
 
-def _winnow_fps_plan(
-    spark: SparkSession, sf_dir: str, write_parts: int | None = None
-) -> DataFrame:
+def _winnow_fps_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw (doc_id, h, nfp) winnowed-fingerprint plan — every
     8-char k-gram hashed (md5 bridge), kept iff it is the min of its
     trailing 4-window, dual df cutoff applied, per-doc size counted
     AFTER the cutoff. Exactly the pre-r14 in-query pipeline; see the
     winnowing_fingerprints docstring for the semantics."""
+    from ..operators.sigcache import artifact_parts
+
     docs = load_table(spark, sf_dir, "documents")
     # the k-gram explode fans each doc into |chars| rows of md5 work;
     # a single-row-group parquet file would otherwise run that entire
@@ -124,7 +124,7 @@ def _winnow_fps_plan(
     # explode subtree has exactly one consumer chain, and no
     # |docs|-grain relation is ever broadcast or joined back; the only
     # broadcast is the 1-row corpus total.
-    fps = (
+    return (
         fps0.withColumn(
             "df",
             F.count(F.lit(1)).over(Window.partitionBy("h")),
@@ -141,43 +141,19 @@ def _winnow_fps_plan(
             .cast("bigint"),
         )
         .select("doc_id", "h", "nfp")
+        .repartition(artifact_parts(sf_dir), "h")
     )
-    if write_parts is not None:
-        return fps.repartition(write_parts, "h")
-    return fps
 
 
 def _winnow_fps_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, h, nfp) winnowed fingerprints — persisted columnar
-    index (durable ``warehouse/winnow_fps`` + session cache, VERDICT
-    r13 #3): the fingerprint index a MOSS-style overlap service
-    maintains next to the corpus. The artifact's fingerprint is salted
-    with every parameter it bakes in (k-gram width, window, both df
-    cutoffs), so a constant change self-invalidates."""
-    from ..operators.edgecache import durable_read_or_build, session_cached
-    from ..operators.sigcache import warehouse_write_parts
+    """(doc_id, h, nfp) winnowed fingerprints — a registered index
+    (edgecache.session_cached, VERDICT r13 #3): the fingerprint index a
+    MOSS-style overlap service maintains next to the corpus."""
+    from ..operators.edgecache import session_cached
 
-    def build() -> DataFrame:
-        durable = durable_read_or_build(
-            spark,
-            sf_dir,
-            "winnow_fps",
-            lambda: _winnow_fps_plan(
-                spark, sf_dir, write_parts=warehouse_write_parts(sf_dir)
-            ),
-            source="documents.parquet",
-            version=(
-                f"win-v1:k{_WIN_K}w{_WIN_W}"
-                f"pct{_WIN_MAX_DF_PCT}abs{_WIN_MAX_DF_ABS}"
-            ),
-        )
-        return (
-            durable
-            if durable is not None
-            else _winnow_fps_plan(spark, sf_dir)
-        )
-
-    return session_cached(spark, sf_dir, "winnow_fps", build)
+    return session_cached(
+        spark, sf_dir, "winnow_fps", lambda: _winnow_fps_plan(spark, sf_dir)
+    )
 
 
 @declared_query(
@@ -270,12 +246,11 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     total (plan-pinned in test_plan_shapes.py).
 
     r14 (VERDICT r13 #3): the (doc_id, h, nfp) fingerprint relation is
-    a persisted columnar index (``warehouse/winnow_fps``, the sigcache
-    durable pattern) + session cache — the k-gram md5 explode (the
-    query's genuine CPU, ~|corpus bytes| hashes) runs once per fixture
-    instead of once per run; the cold bench arm prices the build. The
-    artifact is value-exact (md5-bridge BIGINTs + exact counts) and
-    salts its fingerprint with every baked-in parameter."""
+    a session-registered index (the sigcache pattern) — the k-gram md5
+    explode (the query's genuine CPU, ~|corpus bytes| hashes) runs once
+    per session instead of once per run; the cold bench arm prices the
+    build. The index is value-exact (md5-bridge BIGINTs + exact
+    counts)."""
     parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     fps = _winnow_fps_cached(spark, sf_dir).repartition(parts, "h")
     # ^ pin the pair-join width: the self-join's OUTPUT is ~27x its

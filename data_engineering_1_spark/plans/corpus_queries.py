@@ -652,7 +652,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.edgecache import copurchase_edges
     from ..operators.graph import pagerank
 
-    # edge build served from the session-scoped persisted pair cache
+    # edge build served from the session-registered pair checkpoint
     # (operators/edgecache.py, VERDICT r7 #4) — shared with the other
     # ten graph queries instead of re-running the lineitem self-join
     edges = copurchase_edges(spark, sf_dir)
@@ -977,10 +977,9 @@ def incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale the corpus side is the persisted index table (X37's
     build/read pattern), bucketed on fp so the daily admission join is
     shuffle-free (X24); it is never the corpus text itself — and since
-    r10 that is literally what runs: both sides read the durable
-    (doc_id, fp) index (`operators/sigcache.py::document_fingerprints`,
-    warehouse/doc_fingerprints), so a cold session never re-tokenizes
-    the corpus."""
+    r10 that is literally what runs: both sides read the registered
+    (doc_id, fp) index (`operators/sigcache.py::document_fingerprints`),
+    so the corpus is tokenized once per session, not once per run."""
     from ..operators.sigcache import document_fingerprints
 
     f = document_fingerprints(spark, sf_dir)

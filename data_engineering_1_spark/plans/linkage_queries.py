@@ -61,10 +61,10 @@ _CMS_D = 3
 
 
 def _simple_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Served from the session-scoped persisted distinct-pair cache
+    # Served from the session-registered distinct-pair checkpoint
     # (operators/edgecache.py, VERDICT r7 #4): consumers that reuse the
     # relation 2-4 times (per LP/PPR round, per wedge leg) re-run only
-    # the narrow symmetrizing explode over the in-memory cache — the
+    # the narrow symmetrizing explode over the stored blocks — the
     # items self-join itself runs once per (app, sf_dir) across ALL
     # graph queries, replacing the per-query localCheckpoint.
     from ..operators.edgecache import copurchase_edges_distinct

@@ -838,11 +838,10 @@ def lsh_index_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     text is never re-read and never reshuffled; only the new batch is
     signed per ingest, and the join lands on the index's bucketing.
     Since r10 that is literally what runs: both sides filter the
-    durable signature index
-    (`operators/sigcache.py::document_signatures`,
-    warehouse/lsh_signatures) — a cold session reads the stored
-    (band, minhash) table and never re-signs the corpus; the values
-    are identical by construction, since the banded minhash is
+    registered signature index
+    (`operators/sigcache.py::document_signatures`) — the corpus is
+    signed once per session, not once per run; the values are
+    identical by construction, since the banded minhash is
     deterministic."""
     from ..operators.sigcache import document_signatures
 

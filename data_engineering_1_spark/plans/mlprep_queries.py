@@ -367,13 +367,12 @@ def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays; the keep-decision compares the ROUNDED Jaccard on both
     engines.
 
-    r14 (VERDICT r13 #3): the ordered-array relation is the persisted
-    columnar posting table ``document_shingle_arrays``
-    (operators/sigcache.py) — identical arrays (same shingles, same
-    rarest-first order), built once per fixture instead of
-    re-tokenizing + re-sorting the corpus here AND inside
-    lsh_quality_eval's ground-truth leg; the cold bench arm prices the
-    build."""
+    The ordered-array relation is the plan
+    ``document_shingle_arrays`` (operators/sigcache.py), shared in
+    code with lsh_quality_eval's ground-truth leg — identical arrays
+    (same shingles, same rarest-first order). It is recomputed per run,
+    not registered: a registered checkpoint of it measured slower (see
+    its docstring)."""
     from ..operators.sigcache import document_shingle_arrays
 
     ordered = document_shingle_arrays(spark, sf_dir)

@@ -107,7 +107,7 @@ def _spark_items_supp_pairs(spark: SparkSession, sf_dir: str):
     squared, never catalog-squared, and one orderkey partitioning
     serves distinct + join)."""
     # incidence, per-part support AND pair co-counts all served from
-    # the session-scoped persisted cache (operators/edgecache.py,
+    # the session-registered checkpoints (operators/edgecache.py,
     # VERDICT r7 #4; support/co-count aggregates promoted r13 — four
     # queries re-ran the same two aggregations per query)
     from ..operators.edgecache import (
@@ -187,7 +187,7 @@ def _spark_neighbors(supp: DataFrame, pairs: DataFrame) -> DataFrame:
 
 
 def _neighbors_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The X233 top-5 neighbor relation, persisted once per
+    """The X233 top-5 neighbor relation, registered once per
     (app, sf_dir) via the edge-cache registry: item_item_cosine_topk,
     user_part_recs_topn and rec_exposure_coverage all consume the SAME
     5-per-item list (catalog-bounded) and each used to rebuild it —

@@ -1,18 +1,22 @@
-"""Session-scoped co-purchase edge cache (operators/edgecache.py).
+"""The session registry of shared relations (operators/edgecache.py).
 
-VERDICT r7 #4: the graph family shares ONE persisted pair relation per
+VERDICT r7 #4: the graph family shares ONE registered pair relation per
 (application, sf_dir) instead of re-running the lineitem scan +
-items self-join per query. These tests pin (1) the cache actually
-reuses the same persisted DataFrame, (2) consumers read it through
-InMemoryTableScan, (3) the cache keys on sf_dir, and (4) clear_cache
-returns consumers to the parquet scan.
+items self-join per query. These tests pin (1) the registry reuses the
+same checkpointed DataFrame, (2) consumers read the checkpoint (Scan
+ExistingRDD) instead of the source scan, (3) entries key on sf_dir,
+(4) every registered relation equals its uncached plan, (5)
+clear_cache releases every entry's blocks and a rebuild equals the
+first build, and (6) entries plan with their measured size and row
+count.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from data_engineering_1_spark.operators import edgecache
+from data_engineering_1_spark.operators import edgecache, sigcache
+from data_engineering_1_spark.plans import control_queries
 
 
 @pytest.fixture(autouse=True)
@@ -34,17 +38,15 @@ def test_pairs_cached_and_reused(spark, sf_dir):
 
 
 def test_consumers_read_inmemory_scan(spark, sf_dir):
-    pairs = edgecache.copurchase_pairs(spark, sf_dir)
-    pairs.count()  # materialize the persist
+    edgecache.copurchase_pairs(spark, sf_dir)
     edges = edgecache.copurchase_edges(spark, sf_dir)
     plan = edges._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan
-    # the symmetrized view is a narrow explode: no shuffle ON TOP of
-    # the cache (the InMemoryRelation's description still prints its
-    # original build plan, exchanges included, so only the section
-    # above the cache boundary must be exchange-free)
-    above_cache = plan.split("InMemoryTableScan", 1)[0]
-    assert "Exchange" not in above_cache
+    # the consumer reads the registered checkpoint, with the build
+    # lineage cut: no lineitem FileScan, and the symmetrized view is a
+    # narrow explode with no shuffle on top of the stored blocks
+    assert "Scan ExistingRDD" in plan
+    assert "FileScan" not in plan and "lineitem" not in plan
+    assert "Exchange" not in plan
 
 
 def test_edges_match_uncached_build(spark, sf_dir):
@@ -93,117 +95,71 @@ def test_cache_keys_on_sf_dir(spark, sf_dir, tmp_path):
 
 def test_clear_cache_rebuilds(spark, sf_dir):
     p1 = edgecache.copurchase_pairs(spark, sf_dir)
-    p1.count()
     edgecache.clear_cache()
     p2 = edgecache.copurchase_pairs(spark, sf_dir)
     assert p1 is not p2
     plan = p2._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan parquet" in plan
+    assert "Scan ExistingRDD" in plan
 
 
-# ---- durable warehouse layer (VERDICT r8 #4) ---------------------------
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
-@pytest.fixture()
-def wh(tmp_path, monkeypatch):
-    """Point the durable edge warehouse at a hermetic tmp root."""
-    root = tmp_path / "wh"
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", str(root))
-    monkeypatch.delenv("SPARK_GRAFT_EDGE_WAREHOUSE", raising=False)
-    return root
-
-
-def _fps(path):
-    """Fingerprint subtrees only (skip the _SOURCE GC breadcrumb)."""
-    import os
-
-    return [
-        x for x in os.listdir(path)
-        if x != "_SOURCE" and not x.startswith(".tmp-")
-    ]
-
-
-def test_durable_pairs_value_equal_and_read_from_warehouse(
-    spark, sf_dir, wh
-):
-    import os
-
-    direct = sorted(
-        (r.u, r.v)
-        for r in edgecache._pairs_plan(spark, sf_dir).collect()
+def test_clear_cache_releases_blocks_and_rebuild_equals_first(spark, sf_dir):
+    """clear_cache() frees what every entry's localCheckpoint stored
+    (the memo-cold reset really starts empty), and a rebuilt entry is
+    row-for-row the first one (warm equals cold)."""
+    before = _persistent_rdds(spark)
+    first = sorted(
+        tuple(r) for r in edgecache.copurchase_edges_distinct(
+            spark, sf_dir
+        ).collect()
     )
-    p1 = edgecache.copurchase_pairs(spark, sf_dir)
-    got = sorted((r.u, r.v) for r in p1.collect())
-    assert got == direct
-    # the artifact was published (no temp dirs left behind)
-    base = wh / "copurchase_pairs"
-    sf_keys = os.listdir(base)
-    assert len(sf_keys) == 1
-    fps = _fps(base / sf_keys[0])
-    assert len(fps) == 1 and not fps[0].startswith(".tmp-")
-    # a FRESH session-cache entry reads the warehouse parquet, not the
-    # lineitem self-join: the plan's file scan points at the warehouse
+    sigcache.document_signatures(spark, sf_dir)
+    assert _persistent_rdds(spark) > before
     edgecache.clear_cache()
-    p2 = edgecache.copurchase_pairs(spark, sf_dir)
-    plan = p2._jdf.queryExecution().executedPlan().toString()
-    # scans the stored pair table (a bare parquet read of the warehouse
-    # artifact), NOT the lineitem self-join (paths are elided in the
-    # printed plan, so pin the absence of the source table + join)
-    assert "lineitem" not in plan
-    assert "FileScan parquet" in plan
-    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
-    assert sorted((r.u, r.v) for r in p2.collect()) == direct
-
-
-def test_durable_pairs_rebuild_on_source_change(spark, sf_dir, wh, tmp_path):
-    import os
-    import shutil
-
-    alt = tmp_path / "sfalt"
-    alt.mkdir()
-    shutil.copy(
-        os.path.join(sf_dir, "lineitem.parquet"), alt / "lineitem.parquet"
+    assert _persistent_rdds(spark) == before
+    again = sorted(
+        tuple(r) for r in edgecache.copurchase_edges_distinct(
+            spark, sf_dir
+        ).collect()
     )
-    edgecache.copurchase_pairs(spark, str(alt)).count()
-    base = wh / "copurchase_pairs"
-    (sf_key,) = [
-        k
-        for k in os.listdir(base)
-        if _fps(base / k)  # the alt dir's subtree
-    ]
-    (fp1,) = _fps(base / sf_key)
-    # "regenerate" the source: same bytes, new mtime -> new fingerprint
-    edgecache.clear_cache()
-    os.utime(alt / "lineitem.parquet")
-    edgecache.copurchase_pairs(spark, str(alt)).count()
-    (fp2,) = _fps(base / sf_key)  # stale fingerprint evicted
-    assert fp2 != fp1
+    assert again == first
 
 
-def test_warehouse_opt_out_keeps_selfjoin_build(
-    spark, sf_dir, tmp_path, monkeypatch
+@pytest.mark.parametrize(
+    "registered, uncached",
+    [
+        (edgecache.copurchase_pairs, edgecache._pairs_plan),
+        (sigcache.document_signatures, sigcache._signatures_plan),
+        (sigcache.document_fingerprints, sigcache._fingerprints_plan),
+        (
+            control_queries._winnow_fps_cached,
+            control_queries._winnow_fps_plan,
+        ),
+    ],
+    ids=["pairs", "doc_sigs", "doc_fps", "winnow_fps"],
+)
+def test_registered_relation_equals_uncached_plan(
+    spark, sf_dir, registered, uncached
 ):
-    import os
-
-    root = tmp_path / "wh-off"
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", str(root))
-    monkeypatch.setenv("SPARK_GRAFT_EDGE_WAREHOUSE", "0")
-    p = edgecache.copurchase_pairs(spark, sf_dir)
-    p.count()
-    assert not root.exists()  # nothing written
-    # and the build is the in-memory self-join over the lineitem scan
-    plan = p._jdf.queryExecution().executedPlan().toString()
-    assert "lineitem" in plan
+    got = registered(spark, sf_dir)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan and "FileScan" not in plan
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        tuple(r) for r in uncached(spark, sf_dir).collect()
+    )
 
 
-def test_fingerprint_salted_by_version(sf_dir):
-    """ADVICE r10: stored artifacts bake in operator parameters, so the
-    fingerprint must change when the declared artifact version does —
-    same source, different version string, different fp."""
-    k1, f1 = edgecache._durable_keys(sf_dir, version="v1")
-    k2, f2 = edgecache._durable_keys(sf_dir, version="v2")
-    assert k1 == k2
-    assert f1 != f2
-    # and the unsalted legacy key differs from any salted one
-    _, f0 = edgecache._durable_keys(sf_dir)
-    assert f0 not in {f1, f2}
+def test_entries_plan_with_measured_stats(spark, sf_dir):
+    """A bare checkpoint carries its build plan's estimate (tens of GB
+    for the degree table of a fixture-sized graph), which rules out a
+    broadcast of it; a registered entry reports its true row count and
+    a size under the broadcast threshold."""
+    deg = edgecache.copurchase_deg(spark, sf_dir)
+    stats = deg._jdf.queryExecution().optimizedPlan().stats()
+    assert stats.rowCount().isDefined()
+    assert int(str(stats.rowCount().get())) == deg.count()
+    threshold = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    assert int(str(stats.sizeInBytes())) <= threshold

@@ -233,12 +233,11 @@ def test_kcore_rounds_carry_node_sized_state(spark, sf_dir):
     checkpoints only the <= |V|-row survivor NODE set per round, and
     (ADVICE r8) unpersists its internal repartitioned working copy
     before returning — the returned round views join the CALLER's edge
-    relation (cache-backed when it is persisted) against the
-    checkpointed survivor tables (Scan ExistingRDD). Pinned: (a) no
-    persisted RDD leaks across the call, (b) rounds read the caller's
-    persisted relation through InMemoryTableScan plus ExistingRDD
-    survivors — with no eager |E|-row edge checkpoint (which would make
-    each round a bare ExistingRDD scan with no cache read)."""
+    relation against the checkpointed survivor tables (Scan
+    ExistingRDD). Pinned: (a) no persisted RDD leaks across the call,
+    (b) rounds read ExistingRDD survivors and no leftover cached
+    working copy (InMemoryTableScan) — with no eager |E|-row edge
+    checkpoint."""
     from data_engineering_1_spark.operators.graph import kcore_peel
 
     und = spark.createDataFrame(
@@ -248,8 +247,6 @@ def test_kcore_rounds_carry_node_sized_state(spark, sf_dir):
     edges = und.selectExpr("u as src", "v as dst").unionByName(
         und.selectExpr("v as src", "u as dst")
     )
-    edges = edges.persist()  # simulate the edge-cache-backed caller
-    edges.count()
     def persisted_ids() -> set[int]:
         m = spark.sparkContext._jsc.getPersistentRDDs()  # java.util.Map
         return {int(k) for k in m.keySet().toArray()}
@@ -264,11 +261,10 @@ def test_kcore_rounds_carry_node_sized_state(spark, sf_dir):
     assert len(persisted_ids() - before) <= 2
     for e in rounds:
         plan = e._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan  # caller's persisted relation
+        assert "InMemoryTableScan" not in plan  # working copy released
         assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan
         # and the view is still correct data: K7 survives k=3 fully
         assert e.count() == 42
-    edges.unpersist()
     # survivor-set semantics survive an actual peel: on a 7-clique with
     # one pendant node attached, the pendant dies in round 1
     und2 = und.unionByName(

@@ -260,8 +260,8 @@ def test_winnowing_size_joins_not_broadcast_hinted(spark, sf_dir):
     AQE may still pick broadcast strategies on their own at small SF,
     which is fine — this pins the absence of the FORCED hint.
 
-    r14: the fingerprint pipeline moved into the persisted
-    ``_winnow_fps_plan`` builder (cached/warehoused), so the pin walks
+    r14: the fingerprint pipeline moved into the session-registered
+    ``_winnow_fps_plan`` builder, so the pin walks
     the BUILDER plan (where the corpus-total cross and the df cutoff
     live) and separately asserts the consumer query's plan carries no
     forced broadcast on its pair self-join."""

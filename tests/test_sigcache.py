@@ -1,18 +1,15 @@
-"""Durable document signature/fingerprint indexes
+"""Session-registered document signature/fingerprint indexes
 (operators/sigcache.py, VERDICT r9 #4).
 
-Mirrors tests/test_edgecache.py for the dedup family: (1) the stored
-signature index is value-equal to an in-memory re-derivation, (2) a
-fresh session-cache entry reads the warehouse parquet instead of
-re-signing the corpus (no documents scan, no shingle explode in the
-plan), (3) the fingerprint self-invalidates when the source table
-regenerates, (4) the opt-out env keeps the in-memory build, and
-(5) the X119/X108 consumers skip the corpus re-scan cold.
+Mirrors tests/test_edgecache.py for the dedup family: (1) the X119/X108
+consumers read the registered index instead of re-signing the corpus
+(no md5 over the documents TEXT in their plans), and (2) the
+documents-derived relations land on the source-scaled partition count,
+not on spark.sql.shuffle.partitions. Value equality of every registered
+relation with its uncached plan is pinned in tests/test_edgecache.py.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -26,99 +23,12 @@ def _clean_cache():
     edgecache.clear_cache()
 
 
-@pytest.fixture()
-def wh(tmp_path, monkeypatch):
-    root = tmp_path / "wh"
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", str(root))
-    monkeypatch.delenv("SPARK_GRAFT_EDGE_WAREHOUSE", raising=False)
-    return root
-
-
-def _fps(path):
-    """Fingerprint subtrees only (skip the _SOURCE GC breadcrumb)."""
-    return [
-        x for x in os.listdir(path)
-        if x != "_SOURCE" and not x.startswith(".tmp-")
-    ]
-
-
-def test_signatures_value_equal_and_read_from_warehouse(spark, sf_dir, wh):
-    direct = sorted(
-        (r.doc_id, r.band, r.minhash)
-        for r in sigcache._signatures_plan(spark, sf_dir).collect()
-    )
-    s1 = sigcache.document_signatures(spark, sf_dir)
-    assert (
-        sorted((r.doc_id, r.band, r.minhash) for r in s1.collect())
-        == direct
-    )
-    base = wh / "lsh_signatures"
-    (sf_key,) = os.listdir(base)
-    (fp,) = _fps(base / sf_key)
-    assert not fp.startswith(".tmp-")
-    # a fresh session-cache entry reads the stored index: no documents
-    # scan, no tokenizer/shingle stage, no md5 rehash in the plan
-    edgecache.clear_cache()
-    s2 = sigcache.document_signatures(spark, sf_dir)
-    plan = s2._jdf.queryExecution().executedPlan().toString()
-    assert "documents" not in plan
-    assert "FileScan parquet" in plan
-    assert "md5" not in plan and "explode" not in plan
-    assert (
-        sorted((r.doc_id, r.band, r.minhash) for r in s2.collect())
-        == direct
-    )
-
-
-def test_fingerprints_value_equal_and_durable(spark, sf_dir, wh):
-    direct = sorted(
-        (r.doc_id, r.fp)
-        for r in sigcache._fingerprints_plan(spark, sf_dir).collect()
-    )
-    f1 = sigcache.document_fingerprints(spark, sf_dir)
-    assert sorted((r.doc_id, r.fp) for r in f1.collect()) == direct
-    edgecache.clear_cache()
-    f2 = sigcache.document_fingerprints(spark, sf_dir)
-    plan = f2._jdf.queryExecution().executedPlan().toString()
-    assert "documents" not in plan and "md5" not in plan
-    assert sorted((r.doc_id, r.fp) for r in f2.collect()) == direct
-
-
-def test_rebuild_on_source_change(spark, sf_dir, wh, tmp_path):
-    import shutil
-
-    alt = tmp_path / "sfalt"
-    alt.mkdir()
-    shutil.copy(
-        os.path.join(sf_dir, "documents.parquet"), alt / "documents.parquet"
-    )
-    sigcache.document_signatures(spark, str(alt)).count()
-    base = wh / "lsh_signatures"
-    (sf_key,) = os.listdir(base)
-    (fp1,) = _fps(base / sf_key)
-    edgecache.clear_cache()
-    os.utime(alt / "documents.parquet")  # same bytes, new mtime
-    sigcache.document_signatures(spark, str(alt)).count()
-    (fp2,) = _fps(base / sf_key)  # stale fingerprint evicted
-    assert fp2 != fp1
-
-
-def test_opt_out_keeps_inmemory_build(spark, sf_dir, tmp_path, monkeypatch):
-    root = tmp_path / "wh-off"
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", str(root))
-    monkeypatch.setenv("SPARK_GRAFT_EDGE_WAREHOUSE", "0")
-    s = sigcache.document_signatures(spark, sf_dir)
-    s.count()
-    assert not root.exists()
-    plan = s._jdf.queryExecution().executedPlan().toString()
-    assert "documents" in plan  # the in-memory signing plan
-
-
-def test_consumers_skip_corpus_rescan_cold(spark, sf_dir, wh):
-    """The VERDICT r9 #4 done-bar: cold-session lsh_index_admission /
-    incremental_dedup_ingest read the stored index — their plans hold
-    no tokenizer/shingle/md5 stage over the documents TEXT (admission
-    still scans nothing of the corpus but the index)."""
+def test_consumers_skip_corpus_rescan_cold(spark, sf_dir):
+    """The VERDICT r9 #4 done-bar: within one session,
+    lsh_index_admission / incremental_dedup_ingest read the registered
+    index checkpoint — their plans hold no tokenizer/shingle/md5 stage
+    over the documents TEXT (admission scans nothing of the corpus but
+    the index)."""
     from data_engineering_1_spark.plans.corpus_queries import (
         incremental_dedup_ingest,
     )
@@ -126,48 +36,36 @@ def test_consumers_skip_corpus_rescan_cold(spark, sf_dir, wh):
         lsh_index_admission,
     )
 
-    # warm the warehouse, then simulate a cold session
-    sigcache.document_signatures(spark, sf_dir).count()
-    sigcache.document_fingerprints(spark, sf_dir).count()
-    edgecache.clear_cache()
-
     adm = lsh_index_admission(spark, sf_dir)
     plan = adm._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan
     assert "md5" not in plan and "text" not in plan
     assert adm.count() > 0
 
-    edgecache.clear_cache()
     ing = incremental_dedup_ingest(spark, sf_dir)
     plan = ing._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan
     assert "md5" not in plan and "text" not in plan
     assert ing.count() > 0
 
 
-def test_version_salts_pin_operator_params(sf_dir):
-    """The signature artifact's fingerprint salt is derived from
-    minhash_signatures' banding/shingle defaults (ADVICE r10). Pinned
-    to the literal current values: changing any default must fail here,
-    forcing a conscious version acknowledgment (the salt then changes
-    with it, re-fingerprinting every stored index)."""
-    assert sigcache._sig_version() == "sig-v1:b4r2k3"
-    assert sigcache._fp_version() == "fp-v1:k8"
-
-
-def test_durable_write_is_source_scaled_not_shuffle_partitions(
-    spark, sf_dir, wh
+def test_documents_artifacts_are_source_scaled_not_shuffle_partitions(
+    spark, sf_dir
 ):
-    """ADVICE r10: fixture-sized corpora must not persist one file per
-    shuffle partition — the write-side partition count scales with the
-    source bytes (~32 MB per file), so the fixture artifact is a
-    handful of files, not ~32/200 tiny ones."""
-    assert sigcache._write_parts(sf_dir) <= 2
-    sigcache.document_signatures(spark, sf_dir).count()
-    base = wh / "lsh_signatures"
-    (sf_key,) = os.listdir(base)
-    (fp,) = _fps(base / sf_key)
-    parts = [
-        f
-        for f in os.listdir(base / sf_key / fp)
-        if f.startswith("part-")
-    ]
-    assert len(parts) <= 2
+    """ADVICE r10: a fixture-sized corpus must not land on one
+    partition per shuffle partition — the three registered
+    documents-derived relations take the source-scaled count (~32 MB of source per
+    partition), so at fixture size each is one partition."""
+    from data_engineering_1_spark.plans.control_queries import (
+        _winnow_fps_cached,
+    )
+
+    parts = sigcache.artifact_parts(sf_dir)
+    assert parts == 1
+    for registered in (
+        sigcache.document_signatures,
+        sigcache.document_fingerprints,
+        _winnow_fps_cached,
+    ):
+        df = registered(spark, sf_dir)
+        assert df.rdd.getNumPartitions() == parts, registered.__name__

@@ -1,14 +1,12 @@
-"""tools/warehouse_gc.py (VERDICT r10 #5): the durable warehouse is
-bounded — orphaned sf_key subtrees (source fixture deleted), crashed
-.tmp build dirs, and beyond-retention fingerprints are mechanically
-removable, and a rebuild leaves at most the retention count of
-fingerprint subtrees. Pure-filesystem tests (no Spark session)."""
+"""tools/warehouse_gc.py (VERDICT r10 #5): stored IVF index tags whose
+source fixture is gone are mechanically removable, live and unmarked
+tags are kept, and a dry run only reports. Pure-filesystem tests (no
+Spark session)."""
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
@@ -16,76 +14,44 @@ sys.path.insert(
 import warehouse_gc  # noqa: E402
 
 
-def _mk_subtree(base, sf_key, source, fps, tmp_age_s=None):
-    sub = base / sf_key
-    sub.mkdir(parents=True)
+def _mk_tag(root, tag, source):
+    """One ``ivf_index/<tag>`` directory as _ivf_index_dir leaves it."""
+    path = root / tag
+    path.mkdir(parents=True)
     if source is not None:
-        (sub / "_SOURCE").write_text(str(source))
-    now = time.time()
-    for i, fp in enumerate(fps):
-        d = sub / fp
-        d.mkdir()
-        (d / "part-00000.parquet").write_text("x")
-        # staggered mtimes: fps[0] oldest
-        ts = now - (len(fps) - i) * 100
-        os.utime(d, (ts, ts))
-    if tmp_age_s is not None:
-        t = sub / ".tmp-dead-123"
-        t.mkdir()
-        ts = now - tmp_age_s
-        os.utime(t, (ts, ts))
-    return sub
+        (path / "_SOURCE").write_text(str(source))
+    (path / "fingerprint.txt").write_text("1:2")
+    return path
 
 
 def test_orphan_subtrees_removed_live_kept(tmp_path):
-    root = tmp_path / "wh"
-    fam = root / "lsh_signatures"
+    root = tmp_path / "ivf_index"
     live_src = tmp_path / "live_fixture"
     live_src.mkdir()
-    _mk_subtree(fam, "live00000000", live_src, ["fp1"])
-    _mk_subtree(fam, "orphan000000", tmp_path / "deleted_fixture", ["fp1"])
-    _mk_subtree(fam, "unmarked0000", None, ["fp1"])
+    _mk_tag(root, "live", live_src)
+    _mk_tag(root, "orphan", tmp_path / "deleted_fixture")
+    _mk_tag(root, "unmarked", None)
 
-    log = warehouse_gc.gc([str(root)])
-    names = set(os.listdir(fam))
-    assert "live00000000" in names
-    assert "orphan000000" not in names
-    assert "unmarked0000" in names  # legacy layout kept by default
+    log = warehouse_gc.gc(str(root))
+    assert set(os.listdir(root)) == {"live", "unmarked"}
     assert any("orphan" in line for line in log)
-
-    warehouse_gc.gc([str(root)], drop_unmarked=True)
-    assert set(os.listdir(fam)) == {"live00000000"}
-
-
-def test_retention_keeps_newest_n_and_reaps_stale_tmp(tmp_path):
-    root = tmp_path / "wh"
-    fam = root / "copurchase_pairs"
-    src = tmp_path / "fix"
-    src.mkdir()
-    sub = _mk_subtree(
-        fam, "key000000000", src, ["fpA", "fpB", "fpC"], tmp_age_s=7200
-    )
-    # fresh tmp (a build in progress) survives; 2h-old one goes at 1h cutoff
-    fresh = sub / ".tmp-live-456"
-    fresh.mkdir()
-
-    warehouse_gc.gc([str(root)], keep=2, tmp_age_hours=1.0)
-    left = set(os.listdir(sub))
-    assert left == {"_SOURCE", "fpB", "fpC", ".tmp-live-456"}
 
 
 def test_dry_run_touches_nothing(tmp_path):
-    root = tmp_path / "wh"
-    fam = root / "doc_fingerprints"
-    _mk_subtree(fam, "orphan000000", tmp_path / "gone", ["fp1", "fp2"])
-    log = warehouse_gc.gc([str(root)], keep=1, dry=True)
-    assert log  # it reports
-    assert set(os.listdir(fam / "orphan000000")) == {"_SOURCE", "fp1", "fp2"}
+    root = tmp_path / "ivf_index"
+    _mk_tag(root, "gone_tag", tmp_path / "gone")
+    log = warehouse_gc.gc(str(root), dry=True)
+    assert log and log[0].startswith("would remove")
+    assert set(os.listdir(root / "gone_tag")) == {
+        "_SOURCE", "fingerprint.txt"
+    }
+    assert warehouse_gc.main(["--ivf-root", str(root), "--dry-run"]) == 0
+    assert (root / "gone_tag").is_dir()
 
 
 def test_ivf_index_tags_are_own_subtrees(tmp_path):
     """spark-warehouse/ivf_index/<tag> carries _SOURCE directly under
-    the family level — the GC must treat the tag dir as the subtree."""
+    the root — the GC must treat the tag dir as the unit it removes."""
     root = tmp_path / "ivf_index"
     live_src = tmp_path / "sf_live"
     live_src.mkdir()
@@ -97,39 +63,7 @@ def test_ivf_index_tags_are_own_subtrees(tmp_path):
     dead.mkdir()
     (dead / "_SOURCE").write_text(str(tmp_path / "gone"))
 
-    warehouse_gc.gc([str(root)])
+    warehouse_gc.gc(str(root))
     assert os.path.isdir(live)
     assert (live / "fingerprint.txt").exists()
     assert not dead.exists()
-
-
-def test_rebuild_leaves_at_most_keep_fingerprints(spark, sf_dir, tmp_path,
-                                                  monkeypatch):
-    """End-to-end with the real publish path: repeated source
-    regeneration + GC leaves at most --keep fingerprint subtrees (the
-    judge's done-bar for bounded warehouse growth)."""
-    import shutil
-
-    from data_engineering_1_spark.operators import edgecache
-
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", str(tmp_path / "wh"))
-    monkeypatch.delenv("SPARK_GRAFT_EDGE_WAREHOUSE", raising=False)
-    alt = tmp_path / "sfalt"
-    alt.mkdir()
-    shutil.copy(
-        os.path.join(sf_dir, "lineitem.parquet"), alt / "lineitem.parquet"
-    )
-    for _ in range(3):  # three "regenerations"
-        edgecache.clear_cache()
-        os.utime(alt / "lineitem.parquet")
-        edgecache.copurchase_pairs(spark, str(alt)).count()
-    warehouse_gc.gc([str(tmp_path / "wh")], keep=2)
-    base = tmp_path / "wh" / "copurchase_pairs"
-    (sf_key,) = os.listdir(base)
-    fps = [
-        x
-        for x in os.listdir(base / sf_key)
-        if x != "_SOURCE" and not x.startswith(".tmp-")
-    ]
-    assert len(fps) <= 2
-    edgecache.clear_cache()

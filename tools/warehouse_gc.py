@@ -1,33 +1,17 @@
-"""Garbage-collect the durable warehouse trees (VERDICT r10 #5).
+"""Garbage-collect stored IVF index tags (VERDICT r10 #5).
 
-The durable caches are self-invalidating but not self-shrinking:
-publish-time cleanup (operators/edgecache.py::durable_read_or_build)
-drops stale fingerprints inside a LIVE ``<family>/<sf_key>`` subtree,
-but nothing ever removes
-
-  (a) sf_key subtrees whose source fixture no longer exists — every
-      pytest tmp fixture leaves one behind (~dozens per full suite run),
-  (b) crashed ``.tmp-*`` build directories (a build that died between
-      write and atomic rename),
-  (c) ``spark-warehouse/ivf_index/<tag>`` trees whose fixture is gone.
-
-This tool bounds that growth mechanically. Each subtree carries a
-``_SOURCE`` breadcrumb (the realpath of the fixture that built it);
-a breadcrumb pointing at a missing directory marks the subtree
-orphaned. Retention inside live subtrees keeps the newest ``--keep``
-fingerprints (publish-time cleanup already keeps exactly one; the knob
-exists for deployments that disable it).
+``plans/similarity_queries.py::_ivf_index_dir`` stores one index per
+fixture under ``spark-warehouse/ivf_index/<tag>`` and rewrites the
+tag's ``_SOURCE`` breadcrumb (the realpath of the fixture that built
+it) on every call. Nothing removes a tag whose fixture is gone — every
+pytest tmp fixture leaves one behind. A breadcrumb pointing at a
+missing directory marks the tag orphaned, and this tool removes it;
+tags without a breadcrumb are kept.
 
 Usage:
-    python tools/warehouse_gc.py [--root WAREHOUSE] [--ivf-root DIR]
-        [--keep N] [--tmp-age-hours H] [--keep-orphans]
-        [--drop-unmarked] [--dry-run]
+    python tools/warehouse_gc.py [--ivf-root DIR] [--dry-run]
 
-Defaults GC both repo trees (``<repo>/warehouse`` and
-``<repo>/spark-warehouse/ivf_index``), drop orphans, keep 2
-fingerprints, and reap .tmp dirs older than 6 hours. ``--dry-run``
-prints what would go without touching anything. Subtrees WITHOUT a
-breadcrumb (pre-r11 layouts) are kept unless ``--drop-unmarked``.
+``--dry-run`` prints what would go without touching anything.
 """
 
 from __future__ import annotations
@@ -36,167 +20,48 @@ import argparse
 import os
 import shutil
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _rm(path: str, dry: bool, log: list[str], why: str) -> None:
-    log.append(f"{'would remove' if dry else 'removed'} [{why}] {path}")
-    if not dry:
-        if os.path.isdir(path) and not os.path.islink(path):
-            shutil.rmtree(path, ignore_errors=True)
-        else:
-            try:
-                os.remove(path)
-            except OSError:
-                pass
-
-
-def _source_of(subtree: str) -> str | None:
+def _source_of(tag_dir: str) -> str | None:
     try:
-        with open(os.path.join(subtree, "_SOURCE")) as fh:
+        with open(os.path.join(tag_dir, "_SOURCE")) as fh:
             return fh.read().strip()
     except OSError:
         return None
 
 
-def _gc_subtree(
-    subtree: str,
-    *,
-    keep: int,
-    tmp_age_s: float,
-    drop_orphans: bool,
-    drop_unmarked: bool,
-    dry: bool,
-    log: list[str],
-) -> bool:
-    """GC one ``<family>/<sf_key>`` (or ivf ``<tag>``) directory.
-    Returns True when the whole subtree was removed."""
-    src = _source_of(subtree)
-    if src is None:
-        if drop_unmarked:
-            _rm(subtree, dry, log, "unmarked")
-            return True
-    elif drop_orphans and not os.path.isdir(src):
-        _rm(subtree, dry, log, f"orphan of {src}")
-        return True
-
-    now = time.time()
-    entries = []
-    for name in os.listdir(subtree):
-        if name == "_SOURCE":
-            continue
-        path = os.path.join(subtree, name)
-        if name.startswith(".tmp-"):
-            # crashed build leftovers: reap past the age cutoff (a
-            # build IN PROGRESS is younger than any sane cutoff)
-            if now - os.path.getmtime(path) > tmp_age_s:
-                _rm(path, dry, log, "stale tmp")
-            continue
-        entries.append((os.path.getmtime(path), name, path))
-    # newest --keep fingerprints survive; for the ivf_index layout the
-    # entries are the two live tables + fingerprint.txt, which _rewrite
-    # overwrites in place (nothing accumulates), so keep applies only
-    # to fingerprint-named subdirectories
-    fps = sorted(
-        (e for e in entries if os.path.isdir(e[2])), reverse=True
-    )
-    for _, _, path in fps[keep:]:
-        _rm(path, dry, log, f"beyond keep={keep}")
-    return False
-
-
-def gc(
-    roots: list[str],
-    *,
-    keep: int = 2,
-    tmp_age_hours: float = 6.0,
-    drop_orphans: bool = True,
-    drop_unmarked: bool = False,
-    dry: bool = False,
-) -> list[str]:
-    """GC every family/sf_key subtree under each root. Returns the
-    action log (one line per removal)."""
+def gc(root: str, *, dry: bool = False) -> list[str]:
+    """Remove every tag under ``root`` whose source fixture is gone.
+    Returns the action log (one line per removal)."""
     log: list[str] = []
-    for root in roots:
-        if not os.path.isdir(root):
+    if not os.path.isdir(root):
+        return log
+    for tag in sorted(os.listdir(root)):
+        path = os.path.join(root, tag)
+        src = _source_of(path)
+        if src is None or os.path.isdir(src):
             continue
-        for family in sorted(os.listdir(root)):
-            fam_dir = os.path.join(root, family)
-            if not os.path.isdir(fam_dir):
-                continue
-            # ivf_index tags carry their own _SOURCE (they ARE the
-            # subtree); warehouse families hold sf_key subtrees
-            if _source_of(fam_dir) is not None:
-                _gc_subtree(
-                    fam_dir,
-                    keep=keep,
-                    tmp_age_s=tmp_age_hours * 3600,
-                    drop_orphans=drop_orphans,
-                    drop_unmarked=drop_unmarked,
-                    dry=dry,
-                    log=log,
-                )
-                continue
-            removed_all = True
-            for sf_key in sorted(os.listdir(fam_dir)):
-                sub = os.path.join(fam_dir, sf_key)
-                if not os.path.isdir(sub):
-                    removed_all = False
-                    continue
-                if not _gc_subtree(
-                    sub,
-                    keep=keep,
-                    tmp_age_s=tmp_age_hours * 3600,
-                    drop_orphans=drop_orphans,
-                    drop_unmarked=drop_unmarked,
-                    dry=dry,
-                    log=log,
-                ):
-                    removed_all = False
-            if removed_all and not dry and not os.listdir(fam_dir):
-                _rm(fam_dir, dry, log, "empty family")
+        log.append(
+            f"{'would remove' if dry else 'removed'} [orphan of {src}] {path}"
+        )
+        if not dry:
+            shutil.rmtree(path, ignore_errors=True)
     return log
 
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument(
-        "--root",
-        default=os.environ.get(
-            "SPARK_GRAFT_WAREHOUSE", os.path.join(REPO, "warehouse")
-        ),
-        help="durable warehouse root (default: repo warehouse/)",
-    )
-    ap.add_argument(
         "--ivf-root",
         default=os.path.join(REPO, "spark-warehouse", "ivf_index"),
         help="stored IVF index root",
     )
-    ap.add_argument("--keep", type=int, default=2)
-    ap.add_argument("--tmp-age-hours", type=float, default=6.0)
-    ap.add_argument(
-        "--keep-orphans",
-        action="store_true",
-        help="do not remove subtrees whose source fixture is gone",
-    )
-    ap.add_argument(
-        "--drop-unmarked",
-        action="store_true",
-        help="also remove subtrees without a _SOURCE breadcrumb",
-    )
     ap.add_argument("--dry-run", action="store_true")
     args = ap.parse_args(argv)
 
-    log = gc(
-        [args.root, args.ivf_root],
-        keep=args.keep,
-        tmp_age_hours=args.tmp_age_hours,
-        drop_orphans=not args.keep_orphans,
-        drop_unmarked=args.drop_unmarked,
-        dry=args.dry_run,
-    )
+    log = gc(args.ivf_root, dry=args.dry_run)
     for line in log:
         print(line)
     print(f"{len(log)} removal(s){' (dry run)' if args.dry_run else ''}")
