@@ -15,6 +15,8 @@ list_transform in element order, so oracle comparisons are bit-stable.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -76,9 +78,17 @@ def vec_norm(a: Column | str, dim: int | None = None) -> Column:
     return F.sqrt(vec_dot(a, a))
 
 
+def vec_literal(vec: Sequence[float]) -> Column:
+    """A driver-held vector as an ``array<float>`` plan literal: double
+    literals cast to float (``Double.toFloat``, the conversion a
+    Python-built ``array<float>`` DataFrame applies), so the values equal
+    a one-row DataFrame's without a Python-built relation in the plan."""
+    return F.array(*[F.lit(float(x)) for x in vec]).cast("array<float>")
+
+
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    """Exact cosine similarity; IEEE double division (0-norm -> NaN/Inf
-    propagates rather than erroring, same as DuckDB)."""
+    """Exact cosine similarity; IEEE double division (a 0-norm raises
+    DIVIDE_BY_ZERO under ANSI mode, Spark 4's default)."""
     return vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.embedding import DEFAULT_DIM, hash_embed_texts
+from ..functions.vector import vec_literal
 from .similarity import topk_by_cosine
 
 # Q2: prompt templates, verbatim from src/qa_system.py:52-66 (including the
@@ -166,7 +167,9 @@ def answer_with_sources(
     ``method`` selects the retrieval plan (VERDICT r8 #8):
 
     - ``"exact"`` (default) — exact cosine top-k, a full corpus scan.
-      Correctness gold standard; at 100 TB it reads every vector.
+      Correctness gold standard; at 100 TB it reads every vector. The
+      query vector enters the plan as a literal, so a question is one
+      Spark job over the chunk table's partitions with no Python worker.
     - ``"ivf"`` — FAISS-style probed IVF over
       :func:`operators.similarity.ivf_topk_search`: vectors are
       coarse-bucketed into ``n_clusters`` (an existing ``label``
@@ -183,7 +186,6 @@ def answer_with_sources(
     than a ``.first()`` sniff of the vector column — the only driver
     action here is the by-design collect of the k retrieved rows."""
     qvec = hash_embed_texts(pd.Series([query]), dim=dim)[0]
-    qdf = spark.createDataFrame([(qvec,)], "query_vec array<float>")
     if method == "ivf":
         from .similarity import ivf_topk_search
 
@@ -201,6 +203,9 @@ def answer_with_sources(
         # ride along through the candidate semi-join into the final
         # top-k); only the synthesized bucket label is dropped when we
         # added it
+        qdf = spark.range(1, numPartitions=1).select(
+            vec_literal(qvec).alias("query_vec")
+        )
         hits = ivf_topk_search(
             labeled,
             qdf,
@@ -213,7 +218,7 @@ def answer_with_sources(
             hits = hits.drop("label")
     elif method == "exact":
         hits = topk_by_cosine(
-            chunks, qdf, k=top_k, vec_col=vec_col, id_col=id_col
+            chunks, qvec, k=top_k, vec_col=vec_col, id_col=id_col
         )
     else:
         raise ValueError(f"unknown retrieval method: {method!r}")

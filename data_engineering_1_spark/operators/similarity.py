@@ -3,10 +3,12 @@
 Reproduces (and generalizes) the reference's retrieval surface:
   - E2 cosine top-k search (src/vector_store.py:152-175: Chroma
     ``collection.query(query_texts=[q], n_results=top_k)``, cosine space,
-    default top_k=5) — here exact and distributed: the query vector
-    broadcasts, scoring is a narrow map, and ``orderBy().limit(k)``
-    compiles to TakeOrderedAndProject (per-partition top-k + driver merge,
-    no global sort shuffle);
+    default top_k=5) — here exact and distributed: the query vector is
+    an ``array<float>`` literal column on the vectors side (a one-row
+    DataFrame, broadcast, when the query comes from a table), scoring is
+    a narrow map, and ``orderBy().limit(k)`` compiles to
+    TakeOrderedAndProject (per-partition top-k + driver merge, no global
+    sort shuffle);
   - E5 k-NN join (many queries at once): broadcast the query side, score,
     per-query window top-k — one shuffle on query_id;
   - label centroids + IVF assignment: the scale path for ANN — at 100 TB
@@ -17,13 +19,15 @@ Reproduces (and generalizes) the reference's retrieval surface:
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import (
-    cosine_similarity,
     vec_dot,
     vec_dot_fixed,
+    vec_literal,
     vec_norm,
 )
 
@@ -59,33 +63,38 @@ def paired_cosine(
 
 def topk_by_cosine(
     vectors: DataFrame,
-    query: DataFrame,
+    query: DataFrame | Sequence[float],
     k: int = DEFAULT_TOP_K,
     vec_col: str = "embedding",
     query_vec_col: str = "query_vec",
     id_col: str = "vec_id",
     dim: int | None = None,
 ) -> DataFrame:
-    """Exact top-k cosine search for a single query vector (1-row DF).
+    """Exact top-k cosine search for one query: a driver-held vector or,
+    for queries derived from a table, a 1-row DataFrame (same values).
 
-    The broadcast cross-join attaches the query vector without shuffling
-    the (large) vectors side; orderBy+limit avoids a global sort.
-    Deterministic tie-break on id_col.
+    A vector is an ``array<float>`` literal column on the vectors side:
+    no join, no broadcast, one job over the vectors' partitions. A
+    DataFrame row is broadcast and cross-joined without shuffling the
+    vectors side. orderBy+limit avoids a global sort; deterministic
+    tie-break on id_col.
     """
-    scored = (
-        with_norm(vectors, vec_col, "__norm_v", dim)
-        .crossJoin(
+    side = with_norm(vectors, vec_col, "__norm_v", dim)
+    if isinstance(query, DataFrame):
+        side = side.crossJoin(
             F.broadcast(with_norm(query, query_vec_col, "__norm_q", dim))
         )
-        .withColumn(
-            "cosine_sim",
-            F.round(
-                paired_cosine(
-                    vec_col, query_vec_col, "__norm_v", "__norm_q", dim
-                ),
-                6,
-            ),
+    else:
+        side = with_norm(
+            side.withColumn(query_vec_col, vec_literal(query)),
+            query_vec_col, "__norm_q", dim,
         )
+    scored = side.withColumn(
+        "cosine_sim",
+        F.round(
+            paired_cosine(vec_col, query_vec_col, "__norm_v", "__norm_q", dim),
+            6,
+        ),
     )
     return (
         scored.orderBy(F.desc("cosine_sim"), F.asc(id_col))

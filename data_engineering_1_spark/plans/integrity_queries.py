@@ -642,10 +642,10 @@ def _mbm_exact_dots(spark: SparkSession, qv: DataFrame) -> DataFrame:
         .cast("int")
         .alias("blk"),
     )
-    grid = spark.createDataFrame(
-        [(i, j) for i in range(_MBM_B) for j in range(i, _MBM_B)],
-        "b1 int, b2 int",
-    )
+    grid = spark.range(_MBM_B * _MBM_B, numPartitions=1).selectExpr(
+        f"CAST(id DIV {_MBM_B} AS INT) AS b1",
+        f"CAST(id % {_MBM_B} AS INT) AS b2",
+    ).where("b1 <= b2")
     left = qb.select(
         F.col("vec_id").alias("va"),
         F.col("qvec").alias("qa"),

@@ -159,13 +159,12 @@ def stratified_exact_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     strata = docs.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    splits = strata.crossJoin(
-        F.broadcast(
-            docs.sparkSession.createDataFrame(
-                [("train", 1), ("val", 2), ("test", 3)], "split string, ord int"
-            )
-        )
-    ).select(
+    split_rows = spark.range(1, numPartitions=1).selectExpr(
+        "inline(array(named_struct('split', 'train', 'ord', 1),"
+        " named_struct('split', 'val', 'ord', 2),"
+        " named_struct('split', 'test', 'ord', 3)))"
+    )
+    splits = strata.crossJoin(F.broadcast(split_rows)).select(
         "lang",
         "n",
         "split",

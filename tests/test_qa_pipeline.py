@@ -153,6 +153,42 @@ class TestFullPipeline:
         with pytest.raises(ValueError):
             qa.answer_with_sources(spark, q, emb, method="annoy", **kw)
 
+    def test_exact_question_is_one_job(self, spark, sf_dir):
+        """An exact question submits one Spark job: the query vector is a
+        plan literal, so no Python-built relation is scanned and nothing
+        is broadcast."""
+        from data_engineering_1_spark.io import load_table
+
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            F.col("vec_id").alias("doc_id"),
+            F.concat(F.lit("doc "), F.col("vec_id")).alias("text"),
+            "embedding",
+        )
+        sc = spark.sparkContext
+        store = spark._jsparkSession.sharedState().statusStore()
+
+        def executions():
+            lst = store.executionsList()
+            return [lst.apply(i) for i in range(lst.size())]
+
+        before = max((e.executionId() for e in executions()), default=-1)
+        group = "test-qa-exact-one-job"
+        sc.setJobGroup(group, "one exact question")
+        try:
+            qa.answer_with_sources(spark, "distributed query engine", emb)
+        finally:
+            sc.setJobGroup("", "")
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        plans = [
+            e.physicalPlanDescription()
+            for e in executions()
+            if e.executionId() > before
+        ]
+        assert plans
+        for plan in plans:
+            assert "ExistingRDD" not in plan
+            assert "BroadcastExchange" not in plan
+
     def test_answer_with_sources(self, spark, chunk_table):
         resp = qa.answer_with_sources(
             spark,

@@ -90,6 +90,89 @@ def test_topk_deterministic_tiebreak(vec_df):
     assert [r.vec_id for r in rows] == [1, 3, 6]
 
 
+class TestTopkVectorQuery:
+    """``topk_by_cosine`` with a driver-held vector (a plan literal) must
+    return what it returns for the equivalent one-row DataFrame, row for
+    row."""
+
+    @pytest.fixture(scope="class")
+    def emb(self, spark, sf_dir):
+        from data_engineering_1_spark.io import load_table
+
+        return load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
+        )
+
+    @staticmethod
+    def _both(vectors, qvec, k=5):
+        qdf = vectors.sparkSession.createDataFrame(
+            [(qvec,)], "query_vec array<float>"
+        )
+        return [
+            [
+                (r.vec_id, r.cosine_sim)
+                for r in topk_by_cosine(vectors, q, k=k)
+                .select("vec_id", "cosine_sim")
+                .collect()
+            ]
+            for q in (qvec, qdf)
+        ]
+
+    def test_components_not_float32_representable(self, emb):
+        from data_engineering_1_spark.functions.embedding import (
+            hash_embed_texts,
+        )
+
+        dim = len(emb.first().embedding)
+        for qvec in (
+            [0.1 if i % 2 else 1 / 3 for i in range(dim)],
+            [(i % 7 - 3) / 3 + 0.1 for i in range(dim)],
+            hash_embed_texts(pd.Series(["distributed query engine"]))[0],
+        ):
+            assert np.any(np.float32(qvec) != np.float64(qvec))
+            by_vec, by_df = self._both(emb, qvec)
+            assert len(by_vec) == 5
+            assert by_vec == by_df
+
+    def test_tie_at_kth_similarity(self, emb):
+        row = emb.filter(F.col("vec_id") == 3).first()
+        qvec = [float(x) for x in row.embedding]
+        kth = topk_by_cosine(emb, qvec, k=5).collect()[-1]
+        tied = emb.unionByName(
+            emb.filter(F.col("vec_id") == kth.vec_id).withColumn(
+                "vec_id", F.lit(-1).cast("long")
+            )
+        )
+        by_vec, by_df = self._both(tied, qvec, k=6)
+        assert by_vec[4][1] == by_vec[5][1]  # the copy ties the 5th
+        assert by_vec == by_df
+        by5_vec, by5_df = self._both(tied, qvec, k=5)
+        assert by5_vec == by5_df == by_vec[:5]
+
+    def test_zero_vector_behaves_the_same(self, emb):
+        """An empty or token-less question embeds to the all-zero vector,
+        whose cosine divides by a zero norm. Whatever that does today
+        (under the session's default ANSI mode: DIVIDE_BY_ZERO), it must
+        do under both query forms."""
+        from data_engineering_1_spark.functions.embedding import (
+            hash_embed_texts,
+        )
+
+        def outcome(q):
+            try:
+                return topk_by_cosine(emb, q, k=5).collect()
+            except Exception as exc:  # noqa: BLE001 — the outcome compared
+                return type(exc).__name__, getattr(exc, "getCondition", str)()
+
+        for text in ("", "?!"):
+            zero = hash_embed_texts(pd.Series([text]))[0]
+            assert not any(zero)
+            qdf = emb.sparkSession.createDataFrame(
+                [(zero,)], "query_vec array<float>"
+            )
+            assert outcome(zero) == outcome(qdf)
+
+
 def test_knn_join_excludes_self(vec_df):
     queries = vec_df.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
