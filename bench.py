@@ -1,48 +1,65 @@
-"""Benchmark harness: runs every declared query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric", "value" (total sec), "unit", "queries": {name: sec},
-"sf"}.
+"""Per-query timing rig for the declared queries.
 
-Each query is fully materialized through the noop sink (count() would let
-Catalyst prune the projection work away and under-report). Three timed
-runs per query, min taken (VERDICT r8 #3: at min-of-2 a single local-mode
-scheduler spike on a sub-second query reads as a 2x regression; min-of-3
-absorbs it) — the later runs benefit from Spark's warmed code cache the
-same way a resident cluster would.
+Usage:
+  python bench.py [QUERY ...] [--conf k=v ...] [--scaled DIR]
 
-Self-annotating noise guard (VERDICT r10 #1): any row whose suite min
-lands over 1.5x its BASELINE.md PySpark column is RE-MEASURED after the
-suite — min-of-5, after the shared session has quiesced (full gc, no
-neighboring heavy queries in flight) — and BOTH numbers are recorded
-(`remeasured` in bench_full.json and the emitted line). The reported
-per-query value is the min across all runs of the same code, so a
-single captured run self-corrects its own scheduler spikes instead of
-requiring a second out-of-band "builder" run: whatever run the driver
-captures IS the binding record.
+Runs the named declared queries (default: the whole registry) at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric", "value"
+(total sec), "unit", "queries": {name: sec}, "sf"}. The full record, with
+per-query raw samples and stage totals, goes to bench_full.json.
 
-Cold arm (VERDICT r13 #2): ``SPARK_GRAFT_BENCH_COLD=1`` prices the
-session registry INTO the numbers instead of erasing it: every
-session-scoped shared relation (edgecache/sigcache registry) is
-released before EACH query's first run, and run-1 (cold,
-from-parquet) is recorded next to min-of-3 (warm) in bench_full.json
-(``cold_first_run``). The printed one-line
-JSON contract is unchanged; the default (no env) warm behavior is
-byte-identical to r13.
+- Each query is fully materialized through the noop sink (count() would
+  let Catalyst prune the projection work away and under-report). It runs
+  $SPARK_GRAFT_BENCH_RUNS times (default 3) and the min is kept: at
+  min-of-2 a single local-mode scheduler spike on a sub-second query
+  reads as a 2x regression.
+- The suite runs of a query are tagged with the job group
+  ``bench:<name>``. After its first run the rig reads the group's
+  complete stages from Spark's status store (no UI server needed) and
+  records ``stages``: stage count, tasks, shuffle read/write bytes and
+  records, input bytes, and the one-task stages moving more than 64 MB.
+- ``--conf k=v`` (repeatable) is passed to the session builder, for
+  config A/B arms run as separate processes.
+- ``--scaled DIR`` runs each query again at DIR in the same session and
+  records ``scaled_sec``, ``wall_ratio`` and ``scaled_stages``.
+- ``SPARK_GRAFT_BENCH_COLD=1`` releases every session-shared relation
+  (the edgecache/sigcache registry) before each query's first run and
+  records that run as ``cold_first_run``.
+- At sf0.1, a query whose min lands over 1.5x its BASELINE.md PySpark
+  column is re-measured min-of-5 after the suite has drained, both
+  numbers are recorded under ``remeasured``, and the min is reported.
+- A query that raises is recorded under ``errors``; the run still covers
+  every other query, then exits non-zero WITHOUT the result line, so a
+  total is never printed short of a query.
 """
 
 from __future__ import annotations
 
+import argparse
+import difflib
+import gc
 import json
 import os
 import re
 import sys
 import time
+import traceback
+
+from py4j.protocol import Py4JJavaError
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 from data_engineering_1_spark.plans import registry  # noqa: E402
 from data_engineering_1_spark.session import get_spark  # noqa: E402
+
+# A stage is a scale hazard when ONE task carries real data volume (the
+# shape of the r12 MBM regression, where AQE broadcast a 72M-pair grid and
+# serialized the whole computation into a single task). One-task stages
+# moving less (driver-side 1-row aggregates, broadcast builds, LIMIT
+# tails) are normal.
+_ONE_TASK_BYTES = 64 * 1024 * 1024
 
 
 def materialize(df) -> None:
@@ -68,7 +85,110 @@ def baseline_rows(path: str) -> dict[str, float]:
     return rows
 
 
-def main() -> None:
+def stage_totals(spark, group: str) -> dict:
+    """Totals over the complete stages of the jobs run under ``group``,
+    read from the application status store."""
+    jsc = spark.sparkContext._jsc.sc()
+    # the status listener consumes job/stage events asynchronously
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    store = jsc.statusStore()
+    stage_ids: set[int] = set()
+    for job_id in spark.sparkContext.statusTracker().getJobIdsForGroup(group):
+        ids = store.job(job_id).stageIds()
+        stage_ids.update(ids.apply(i) for i in range(ids.length()))
+    tot = {
+        "n_stages": 0,
+        "tasks": 0,
+        "shuffle_read_bytes": 0,
+        "shuffle_read_records": 0,
+        "shuffle_write_bytes": 0,
+        "shuffle_write_records": 0,
+        "input_bytes": 0,
+        "one_task_stages": [],
+    }
+    for sid in sorted(stage_ids):
+        try:
+            st = store.lastStageAttempt(sid)
+        except Py4JJavaError as e:
+            # past spark.ui.retainedStages the store evicts the stages
+            # with the oldest completion time; skipped stages have none,
+            # so they go first
+            if "NoSuchElementException" not in str(e.java_exception):
+                raise
+            continue
+        if st.status().toString() != "COMPLETE":
+            continue  # skipped: its shuffle output was reused
+        tot["n_stages"] += 1
+        tot["tasks"] += st.numTasks()
+        tot["shuffle_read_bytes"] += st.shuffleReadBytes()
+        tot["shuffle_read_records"] += st.shuffleReadRecords()
+        tot["shuffle_write_bytes"] += st.shuffleWriteBytes()
+        tot["shuffle_write_records"] += st.shuffleWriteRecords()
+        tot["input_bytes"] += st.inputBytes()
+        moved = st.inputBytes() + st.shuffleReadBytes()
+        if st.numTasks() == 1 and moved > _ONE_TASK_BYTES:
+            tot["one_task_stages"].append(
+                {"stage_id": sid, "name": st.name()[:80], "bytes_moved": moved}
+            )
+    return tot
+
+
+def time_runs(spark, fn, sf_dir: str, runs: int, group: str):
+    """``runs`` noop-materialized wall times of ``fn`` at ``sf_dir``
+    under job group ``group``, plus the first run's stage totals."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    samples: list[float] = []
+    stages: dict = {}
+    try:
+        for i in range(runs):
+            t0 = time.perf_counter()
+            materialize(fn(spark, sf_dir))
+            samples.append(round(time.perf_counter() - t0, 4))
+            if i == 0:
+                stages = stage_totals(spark, group)
+    finally:
+        sc._jsc.clearJobGroup()
+    return samples, stages
+
+
+def parse_args(argv: list[str] | None, names) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("queries", nargs="*", help="query names (default: all)")
+    ap.add_argument(
+        "--conf",
+        action="append",
+        default=[],
+        metavar="K=V",
+        help="extra Spark conf for the session (repeatable)",
+    )
+    ap.add_argument(
+        "--scaled",
+        metavar="DIR",
+        help="also run each query at this fixture, in the same session",
+    )
+    args = ap.parse_args(argv)
+    unknown = [q for q in args.queries if q not in names]
+    if unknown:
+        near = {
+            q: [n for n in sorted(names) if q.lower() in n]
+            or difflib.get_close_matches(q, names)
+            for q in unknown
+        }
+        ap.error(
+            "unknown queries: "
+            + "; ".join(f"{q} (did you mean {near[q]!r}?)" for q in unknown)
+        )
+    bad = [c for c in args.conf if "=" not in c]
+    if bad:
+        ap.error(f"--conf takes k=v, got {bad!r}")
+    return args
+
+
+def main(argv: list[str] | None = None) -> None:
+    queries = registry.get_queries()
+    args = parse_args(argv, queries)
+    names = args.queries or sorted(queries)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
@@ -79,19 +199,23 @@ def main() -> None:
         "yes",
         "on",
     }
-    spark = get_spark("bench")
-    queries = registry.get_queries()
+    extra = dict(c.split("=", 1) for c in args.conf)
+    spark = get_spark("bench", extra_conf=extra or None)
 
     # warm the JVM/parquet footprint once so query 1 doesn't pay session
     # startup costs
     materialize(spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")))
 
-    import gc
-
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
+    stages: dict[str, dict] = {}
     cold_first: dict[str, float] = {}
-    for name, fn in sorted(queries.items()):
+    scaled_sec: dict[str, float] = {}
+    wall_ratio: dict[str, float] = {}
+    scaled_stages: dict[str, dict] = {}
+    errors: dict[str, dict] = {}
+    for name in names:
+        fn = queries[name]
         if cold:
             # drop every session-shared relation (edgecache + sigcache
             # + plans registrations share one registry) so run 1 pays
@@ -102,17 +226,27 @@ def main() -> None:
 
             clear_cache()
             spark.catalog.clearCache()
-        best = float("inf")
-        samples: list[float] = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            materialize(fn(spark, sf_dir))
-            samples.append(round(time.perf_counter() - t0, 4))
-            best = min(best, samples[-1])
-        timings[name] = round(best, 4)
-        all_runs[name] = samples
-        if cold:
-            cold_first[name] = samples[0]
+        at = sf_dir
+        try:
+            samples, stages[name] = time_runs(
+                spark, fn, sf_dir, runs, f"bench:{name}"
+            )
+            timings[name] = min(samples)
+            all_runs[name] = samples
+            if cold:
+                cold_first[name] = samples[0]
+            if args.scaled:
+                at = args.scaled
+                big, scaled_stages[name] = time_runs(
+                    spark, fn, args.scaled, runs, f"bench:{name}:scaled"
+                )
+                scaled_sec[name] = min(big)
+                wall_ratio[name] = round(min(big) / timings[name], 2)
+        except Exception as e:  # noqa: BLE001 — one failing query must
+            # not end the sweep; it is reported and fails the run below
+            traceback.print_exc()
+            msg = f"{type(e).__name__}: {e}".splitlines()[0]
+            errors[name] = {"at": at, "error": msg}
         # drop Python references to the finished query's DataFrames so
         # the ContextCleaner can free their checkpoint/broadcast blocks
         # between queries — accumulated dead blocks were the heap
@@ -121,12 +255,10 @@ def main() -> None:
         # outlasts all of min-of-3)
         gc.collect()
 
-    # VERDICT r10 #1: re-measure suite-inflated rows in-run. A row over
-    # 1.5x its baseline after min-of-3 is almost always shared-session
-    # scheduler/GC noise from neighboring heavy queries (r9/r10 showed
-    # every such row re-measuring under 1.5x in isolation); re-measure
-    # min-of-5 now that the suite has drained, record both numbers, and
-    # report the min — the captured run then binds, self-annotated.
+    # A row over 1.5x its baseline after min-of-3 is almost always
+    # shared-session scheduler/GC noise from neighboring heavy queries;
+    # re-measure min-of-5 now that the suite has drained, record both
+    # numbers, and report the min.
     remeasured: dict[str, dict] = {}
     if sf == 0.1:  # baseline rows exist only at the recorded SF
         base = baseline_rows(os.path.join(REPO, "BASELINE.md"))
@@ -160,15 +292,31 @@ def main() -> None:
     if remeasured:
         result["remeasured"] = remeasured
     # The driver captures only the tail of stdout, which has truncated the
-    # head of this (long) JSON line before (BENCH_r02's "parsed": null) —
-    # persist the full result, plus per-query raw samples, to a file too.
-    full = {**result, "runs_per_query": runs, "samples": all_runs}
+    # head of this (long) JSON line before — persist the full result, plus
+    # per-query raw samples, to a file too.
+    full = {
+        **result,
+        "runs_per_query": runs,
+        "samples": all_runs,
+        "stages": stages,
+    }
+    if extra:
+        full["conf"] = extra
     if cold:
         full["cold_arm"] = True
         full["cold_first_run"] = cold_first
         full["cold_total_sec"] = round(sum(cold_first.values()), 4)
+    if args.scaled:
+        full["scaled_dir"] = args.scaled
+        full["scaled_sec"] = scaled_sec
+        full["wall_ratio"] = wall_ratio
+        full["scaled_stages"] = scaled_stages
+    if errors:
+        full["errors"] = errors
     with open(os.path.join(REPO, "bench_full.json"), "w") as f:
         json.dump(full, f, indent=1)
+    if errors:
+        sys.exit(f"bench: {len(errors)} queries failed: {sorted(errors)}")
     print(json.dumps(result))
 
 

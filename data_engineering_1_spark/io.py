@@ -33,8 +33,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Resolved-DataFrame memo: keyed by (session id, sf_dir, table). Fixture
 # tables are immutable, but driver-side schema resolution (file listing +
 # parquet footer read + the nanos retry) costs tens of ms per call — the

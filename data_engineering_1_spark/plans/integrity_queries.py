@@ -846,11 +846,6 @@ def _mbm_leg(spark: SparkSession, sf_dir: str) -> str:
     return "exact"
 
 
-def _mbm_use_ivf(spark: SparkSession, sf_dir: str) -> bool:
-    """Back-compat boolean view of _mbm_leg (pre-r12 callers/tests)."""
-    return _mbm_leg(spark, sf_dir) == "ivf"
-
-
 def mbm_ivf_pair_recall(
     spark: SparkSession,
     sf_dir: str,
@@ -954,7 +949,7 @@ def mutual_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall is CORPUS-DEPENDENT — measured 1.0 on near-dup-structured
     data and 0.2-0.5 on decorrelated data (tools/mbm_recall.py, the
     r11 curves), which is why auto mode never takes it silently (see
-    _mbm_use_ivf). Parity always exercises the exact leg."""
+    _mbm_leg). Parity always exercises the exact leg."""
     qv = _mbm_anchor_qvecs(spark, sf_dir)
     leg = _mbm_leg(spark, sf_dir)
     if leg == "ivf":

@@ -69,11 +69,11 @@ def test_default_nprobe_output_is_valid_mutual_set(spark, sf_dir, qv):
 def test_leg_selection_auto_and_overrides(spark, sf_dir, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_MBM_MODE", raising=False)
     # fixture anchors are far below the threshold -> exact in auto mode
-    assert iq._mbm_use_ivf(spark, sf_dir) is False
+    assert iq._mbm_leg(spark, sf_dir) == "exact"
     monkeypatch.setenv("SPARK_GRAFT_MBM_MODE", "ivf")
-    assert iq._mbm_use_ivf(spark, sf_dir) is True
+    assert iq._mbm_leg(spark, sf_dir) == "ivf"
     monkeypatch.setenv("SPARK_GRAFT_MBM_MODE", "exact")
-    assert iq._mbm_use_ivf(spark, sf_dir) is False
+    assert iq._mbm_leg(spark, sf_dir) == "exact"
 
 
 def test_declared_query_matches_forced_ivf_at_full_probe(
@@ -107,14 +107,14 @@ def test_auto_stays_exact_at_scale_warns_and_memoizes(
     iq._MBM_COUNT_CACHE.clear()
     monkeypatch.setattr(iq, "_MBM_IVF_MIN_ANCHORS", 1)
     with pytest.warns(UserWarning, match="EXACT quadratic leg"):
-        assert iq._mbm_use_ivf(spark, sf_dir) is False
+        assert iq._mbm_leg(spark, sf_dir) == "exact"
     key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
     assert key in iq._MBM_COUNT_CACHE
     cached = iq._MBM_COUNT_CACHE[key]
     # second call reuses the memo (poison the cache and observe reuse)
     iq._MBM_COUNT_CACHE[key] = cached + 1_000_000
     with pytest.warns(UserWarning, match="EXACT quadratic leg"):
-        iq._mbm_use_ivf(spark, sf_dir)
+        iq._mbm_leg(spark, sf_dir)
     assert iq._MBM_COUNT_CACHE[key] == cached + 1_000_000
     iq._MBM_COUNT_CACHE.clear()
 
@@ -176,7 +176,7 @@ def test_rescore_recall_dominates_one_sided_probe(spark, sf_dir, qv):
 def test_leg_selection_ivf_rescore_mode(spark, sf_dir, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_MBM_MODE", "ivf-rescore")
     assert iq._mbm_leg(spark, sf_dir) == "ivf-rescore"
-    assert iq._mbm_use_ivf(spark, sf_dir) is False  # rescore != ivf
+    assert iq._mbm_leg(spark, sf_dir) != "ivf"  # rescore != ivf
     monkeypatch.setenv("SPARK_GRAFT_MBM_MODE", "ivf_rescore")
     assert iq._mbm_leg(spark, sf_dir) == "ivf-rescore"
 
