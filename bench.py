@@ -26,9 +26,6 @@ per-query raw samples and stage totals, goes to bench_full.json.
 - ``SPARK_GRAFT_BENCH_COLD=1`` releases every session-shared relation
   (the edgecache/sigcache registry) before each query's first run and
   records that run as ``cold_first_run``.
-- At sf0.1, a query whose min lands over 1.5x its BASELINE.md PySpark
-  column is re-measured min-of-5 after the suite has drained, both
-  numbers are recorded under ``remeasured``, and the min is reported.
 - A query that raises is recorded under ``errors``; the run still covers
   every other query, then exits non-zero WITHOUT the result line, so a
   total is never printed short of a query.
@@ -64,25 +61,6 @@ _ONE_TASK_BYTES = 64 * 1024 * 1024
 
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def baseline_rows(path: str) -> dict[str, float]:
-    """Per-query PySpark baseline seconds from BASELINE.md's
-    ``| query | DuckDB s | PySpark s |`` tables (last occurrence wins —
-    later refresh sections override earlier ones)."""
-    rows: dict[str, float] = {}
-    try:
-        with open(path) as fh:
-            for line in fh:
-                m = re.match(
-                    r"\|\s*([a-z0-9_]+)\s*\|\s*([0-9.]+)\s*\|\s*([0-9.]+)\s*\|",
-                    line,
-                )
-                if m:
-                    rows[m.group(1)] = float(m.group(3))
-    except OSError:
-        pass
-    return rows
 
 
 def stage_totals(spark, group: str) -> dict:
@@ -255,32 +233,6 @@ def main(argv: list[str] | None = None) -> None:
         # outlasts all of min-of-3)
         gc.collect()
 
-    # A row over 1.5x its baseline after min-of-3 is almost always
-    # shared-session scheduler/GC noise from neighboring heavy queries;
-    # re-measure min-of-5 now that the suite has drained, record both
-    # numbers, and report the min.
-    remeasured: dict[str, dict] = {}
-    if sf == 0.1:  # baseline rows exist only at the recorded SF
-        base = baseline_rows(os.path.join(REPO, "BASELINE.md"))
-        flagged = [
-            n
-            for n, sec in timings.items()
-            if n in base and sec > 1.5 * base[n]
-        ]
-        for name in flagged:
-            gc.collect()
-            best = float("inf")
-            for _ in range(5):
-                t0 = time.perf_counter()
-                materialize(queries[name](spark, sf_dir))
-                best = min(best, time.perf_counter() - t0)
-            remeasured[name] = {
-                "suite_sec": timings[name],
-                "isolated_min5_sec": round(best, 4),
-                "baseline_sec": base[name],
-            }
-            timings[name] = round(min(timings[name], best), 4)
-
     total = round(sum(timings.values()), 4)
     result = {
         "metric": "declared_query_suite_total_sec",
@@ -289,8 +241,6 @@ def main(argv: list[str] | None = None) -> None:
         "queries": timings,
         "sf": sf,
     }
-    if remeasured:
-        result["remeasured"] = remeasured
     # The driver captures only the tail of stdout, which has truncated the
     # head of this (long) JSON line before — persist the full result, plus
     # per-query raw samples, to a file too.

@@ -10,7 +10,7 @@ the first reads the stored blocks instead of re-running the scan +
 self-join. :func:`session_cached` is the registry every other shared
 relation goes through too (``sigcache``'s document indexes, the
 recommender neighbour lists, the ER cluster labels, the winnowing
-fingerprints).
+fingerprints, the IVF index's centroids and assignment).
 
 Each entry is an eager local checkpoint of ``build()``: the relation is
 computed once, its blocks are held MEMORY_AND_DISK by the block

@@ -516,83 +516,6 @@ def ivf_knn_join(
     )
 
 
-IVF_INDEX_CENTROIDS = "centroids"
-IVF_INDEX_ASSIGNMENT = "assignment"
-
-
-def build_ivf_index(
-    vectors: DataFrame,
-    index_dir: str,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    force: bool = False,
-    fingerprint: str | None = None,
-) -> tuple[str, str]:
-    """Materialize the IVF index — (label, pos, centroid_val) centroids
-    and (vec_id, assigned_label) assignment — as parquet tables under
-    ``index_dir``, so steady-state ANN queries read the stored index
-    instead of rebuilding it per lookup (at 100 TB an in-query rebuild
-    is a full corpus aggregate per search; the stored index amortizes it
-    across every query until the next build).
-
-    The assignment is computed FROM the read-back stored centroids, so
-    both tables reflect exactly the same (rounded, parquet-roundtripped)
-    values a query will read. Writes go through maintenance._rewrite:
-    old-or-new under crashes, never half-built. Returns the two paths.
-    """
-    import os
-
-    from .maintenance import _rewrite
-
-    cent_path = os.path.join(index_dir, IVF_INDEX_CENTROIDS)
-    asg_path = os.path.join(index_dir, IVF_INDEX_ASSIGNMENT)
-    spark = vectors.sparkSession
-    # Staleness guard: an index must never outlive its corpus. Callers
-    # pass a fingerprint of the source (e.g. file mtime+size); a mismatch
-    # with the stored one forces a rebuild — otherwise a regenerated
-    # fixture would silently serve a stale index.
-    fp_path = os.path.join(index_dir, "fingerprint.txt")
-    if fingerprint is not None:
-        stored = None
-        try:
-            with open(fp_path) as fh:
-                stored = fh.read()
-        except OSError:
-            pass
-        if stored != fingerprint:
-            force = True
-    if force or not _parquet_exists(spark, cent_path):
-        _rewrite(
-            label_centroids(vectors, label_col=label_col, vec_col=vec_col),
-            cent_path,
-        )
-    if force or not _parquet_exists(spark, asg_path):
-        _rewrite(
-            ivf_assign(
-                vectors,
-                spark.read.parquet(cent_path),
-                label_col=label_col,
-                vec_col=vec_col,
-                id_col=id_col,
-            ),
-            asg_path,
-        )
-    if fingerprint is not None:
-        os.makedirs(index_dir, exist_ok=True)
-        with open(fp_path, "w") as fh:
-            fh.write(fingerprint)
-    return cent_path, asg_path
-
-
-def _parquet_exists(spark, path: str) -> bool:
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:
-        return False
-
-
 def approx_neighbor_pairs_lsh(
     vectors: DataFrame,
     max_distance: float,

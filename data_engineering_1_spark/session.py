@@ -23,6 +23,15 @@ def cpu_count() -> int:
         return os.cpu_count() or 8
 
 
+def default_driver_memory() -> str:
+    """Half the machine's physical memory in whole GB, between 1g and
+    16g, so the driver heap (which in local mode holds every executor's
+    blocks) can never be sized past what the machine has.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16, max(1, phys // 2 // 1024**3))}g"
+
+
 def get_spark(
     app_name: str = "data_engineering_1_spark",
     shuffle_partitions: int | None = None,
@@ -49,7 +58,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Wide unrolled kernels (functions.vector.vec_dot_fixed) generate

@@ -14,8 +14,15 @@ from data_engineering_1_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = get_spark("tests", shuffle_partitions=4)
+def spark(tmp_path_factory):
+    # managed tables (saveAsTable without a path) land in a temp dir,
+    # not in spark-warehouse/ under the working directory
+    warehouse = str(tmp_path_factory.mktemp("warehouse"))
+    s = get_spark(
+        "tests",
+        shuffle_partitions=4,
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
+    )
     yield s
 
 

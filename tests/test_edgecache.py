@@ -15,8 +15,24 @@ from __future__ import annotations
 
 import pytest
 
+from data_engineering_1_spark.io import load_table
 from data_engineering_1_spark.operators import edgecache, sigcache
-from data_engineering_1_spark.plans import control_queries
+from data_engineering_1_spark.operators.similarity import (
+    ivf_assign,
+    label_centroids,
+)
+from data_engineering_1_spark.plans import control_queries, similarity_queries
+
+
+def _ivf_centroids_plan(spark, sf_dir):
+    return label_centroids(load_table(spark, sf_dir, "embeddings"))
+
+
+def _ivf_assignment_plan(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    return ivf_assign(emb, label_centroids(emb)).select(
+        "vec_id", "assigned_label"
+    )
 
 
 @pytest.fixture(autouse=True)
@@ -138,8 +154,17 @@ def test_clear_cache_releases_blocks_and_rebuild_equals_first(spark, sf_dir):
             control_queries._winnow_fps_cached,
             control_queries._winnow_fps_plan,
         ),
+        (similarity_queries._ivf_centroids, _ivf_centroids_plan),
+        (similarity_queries._ivf_assignment, _ivf_assignment_plan),
     ],
-    ids=["pairs", "doc_sigs", "doc_fps", "winnow_fps"],
+    ids=[
+        "pairs",
+        "doc_sigs",
+        "doc_fps",
+        "winnow_fps",
+        "ivf_centroids",
+        "ivf_assignment",
+    ],
 )
 def test_registered_relation_equals_uncached_plan(
     spark, sf_dir, registered, uncached

@@ -152,23 +152,23 @@ def test_events_by_segment_dim_broadcast(plans):
 
 
 def test_cached_ivf_search_no_index_rebuild(plans):
-    """The cached-index ANN query must READ the stored centroids +
+    """The cached-index ANN query must READ the registered centroids +
     assignment, never rebuild them: the centroid build's posexplode
     fan-out (one row per vector x dimension, then a full-corpus
     aggregate) may not appear anywhere in the query plan — at 100 TB
     that generate+aggregate is an index rebuild per lookup."""
     p = plans("ivf_topk_search_cached_vec0")
     assert "posexplode" not in p  # the centroid build's signature op
-    assert "ivf_index" in p  # scans of the stored index tables
+    assert "Scan ExistingRDD" in p  # reads of the registered index
     assert "TakeOrderedAndProject" in p  # final top-k, no global sort
 
 
 def test_ivf_knn_join_no_index_rebuild(plans):
-    """The batched IVF lookup must also read the stored index — no
+    """The batched IVF lookup must also read the registered index — no
     centroid-build posexplode in its plan."""
     p = plans("ivf_knn_join_mod100")
     assert "posexplode" not in p
-    assert "ivf_index" in p
+    assert "Scan ExistingRDD" in p
 
 
 def test_uncached_ivf_search_does_rebuild(plans):

@@ -343,51 +343,32 @@ class TestIvfTopkSearch:
                 list(zip(mine["vec_id"], mine["cosine_sim"])) == exp
             ), f"query {qid} diverged from its single-query search"
 
-    def test_build_ivf_index_roundtrip(self, spark, sf_dir, tmp_path):
-        """The stored index must read back exactly what the in-query
-        build produces (rounded doubles parquet-roundtrip losslessly),
-        and a rebuild must be skipped when the tables exist."""
+    def test_cached_ivf_queries_write_nothing_to_repo(
+        self, spark, sf_dir, tmp_path
+    ):
+        """The cached IVF queries keep their index in the session
+        registry: running them on a fresh fixture leaves no index tree
+        for it in the repository."""
         import os
+        import shutil
+        import uuid
 
-        from data_engineering_1_spark.io import load_table
-        from data_engineering_1_spark.operators.similarity import (
-            build_ivf_index,
-            ivf_assign,
-            label_centroids,
-        )
+        from data_engineering_1_spark.operators.edgecache import clear_cache
+        from data_engineering_1_spark.plans import registry
 
-        emb = load_table(spark, sf_dir, "embeddings")
-        idx = str(tmp_path / "ivf")
-        cent_path, asg_path = build_ivf_index(emb, idx)
-        stored_c = {
-            (r.label, r.pos): r.centroid_val
-            for r in spark.read.parquet(cent_path).collect()
-        }
-        fresh_c = {
-            (r.label, r.pos): r.centroid_val
-            for r in label_centroids(emb).collect()
-        }
-        assert stored_c == fresh_c
-        stored_a = {
-            r.vec_id: r.assigned_label
-            for r in spark.read.parquet(asg_path).collect()
-        }
-        fresh_a = {
-            r.vec_id: r.assigned_label
-            for r in ivf_assign(emb, label_centroids(emb)).collect()
-        }
-        assert stored_a == fresh_a
-        mtime = os.path.getmtime(cent_path)
-        build_ivf_index(emb, idx)  # second call: no rewrite
-        assert os.path.getmtime(cent_path) == mtime
-        # same fingerprint: still cached; changed fingerprint (source
-        # data regenerated): forced rebuild — stale indexes must die
-        build_ivf_index(emb, idx, fingerprint="src-v1")
-        m2 = os.path.getmtime(cent_path)
-        build_ivf_index(emb, idx, fingerprint="src-v1")
-        assert os.path.getmtime(cent_path) == m2
-        build_ivf_index(emb, idx, fingerprint="src-v2")
-        assert os.path.getmtime(cent_path) > m2
+        # a fresh tag, so a tree left by an older checkout cannot match
+        fixture = tmp_path / f"ivf{uuid.uuid4().hex}"
+        fixture.mkdir()
+        shutil.copy(os.path.join(sf_dir, "embeddings.parquet"), fixture)
+        q = registry.get_queries()
+        try:
+            for name in ("ivf_topk_search_cached_vec0", "ivf_knn_join_mod100"):
+                assert q[name](spark, str(fixture)).collect()
+        finally:
+            clear_cache()
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        tree = os.path.join(repo, "spark-warehouse", "ivf_index")
+        assert not os.path.exists(os.path.join(tree, fixture.name))
 
     def test_probed_search_candidates_only_from_probed_clusters(
         self, spark, sf_dir
