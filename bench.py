@@ -23,9 +23,14 @@ per-query raw samples and stage totals, goes to bench_full.json.
   config A/B arms run as separate processes.
 - ``--scaled DIR`` runs each query again at DIR in the same session and
   records ``scaled_sec``, ``wall_ratio`` and ``scaled_stages``.
+- Before the timed loop one untimed tiny query runs a parquet scan, a
+  pandas UDF, whole-stage codegen and a shuffle, so the session's
+  warm-up does not land on run 1 of the first query.
 - ``SPARK_GRAFT_BENCH_COLD=1`` releases every session-shared relation
-  (the edgecache/sigcache registry) before each query's first run and
-  records that run as ``cold_first_run``.
+  (the edgecache/sigcache registry) once, before the suite, and records
+  each query's first run as ``cold_first_run``: as in a fresh
+  deployment, a relation shared by several queries is built once, by
+  the first of them.
 - A query that raises is recorded under ``errors``; the run still covers
   every other query, then exits non-zero WITHOUT the result line, so a
   total is never printed short of a query.
@@ -43,7 +48,9 @@ import sys
 import time
 import traceback
 
+import pandas as pd
 from py4j.protocol import Py4JJavaError
+from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -61,6 +68,23 @@ _ONE_TASK_BYTES = 64 * 1024 * 1024
 
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """One untimed tiny query through what the first timed query would
+    otherwise start: a parquet scan, a Python worker (pandas UDF),
+    whole-stage codegen and a shuffle."""
+
+    @F.pandas_udf("long")
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
+    materialize(
+        nation.select(plus_one(F.col("n_nationkey")).alias("k"))
+        .groupBy((F.col("k") % 5).alias("g"))
+        .agg(F.sum("k").alias("s"))
+    )
 
 
 def stage_totals(spark, group: str) -> dict:
@@ -180,9 +204,14 @@ def main(argv: list[str] | None = None) -> None:
     extra = dict(c.split("=", 1) for c in args.conf)
     spark = get_spark("bench", extra_conf=extra or None)
 
-    # warm the JVM/parquet footprint once so query 1 doesn't pay session
-    # startup costs
-    materialize(spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")))
+    warm_up(spark, sf_dir)
+    if cold:
+        # one empty registry for the whole suite, like a fresh deployment
+        # (edgecache + sigcache + plans registrations share it)
+        from data_engineering_1_spark.operators import edgecache
+
+        edgecache.clear_cache()
+        spark.catalog.clearCache()
 
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
@@ -194,16 +223,6 @@ def main(argv: list[str] | None = None) -> None:
     errors: dict[str, dict] = {}
     for name in names:
         fn = queries[name]
-        if cold:
-            # drop every session-shared relation (edgecache + sigcache
-            # + plans registrations share one registry) so run 1 pays
-            # the full from-parquet build, like a fresh deployment
-            from data_engineering_1_spark.operators.edgecache import (
-                clear_cache,
-            )
-
-            clear_cache()
-            spark.catalog.clearCache()
         at = sf_dir
         try:
             samples, stages[name] = time_runs(

@@ -33,6 +33,21 @@ DEFAULT_DIM = 64  # matches the fixture embeddings table (TESTDATA.md)
 _TOKEN_RE = re.compile(r"\w+", re.UNICODE)
 
 
+_FNV_OFFSET = 14695981039346656037
+_FNV_PRIME = 1099511628211
+_MASK64 = 0xFFFFFFFFFFFFFFFF
+
+
+def _token_hash(tok: str, seed: int) -> int:
+    """64-bit FNV-1a over the token's UTF-8 bytes, from the seeded offset
+    basis (Python ints masked to 64 bits: the same values as unsigned
+    64-bit arithmetic, without a numpy scalar per byte)."""
+    h = (_FNV_OFFSET + seed) & _MASK64
+    for b in tok.encode("utf-8"):
+        h = ((h ^ b) * _FNV_PRIME) & _MASK64
+    return h
+
+
 def hash_embed_texts(texts: pd.Series, dim: int = DEFAULT_DIM, seed: int = 42) -> list[list[float]]:
     """Vectorized deterministic embedding for a batch of texts.
 
@@ -45,16 +60,12 @@ def hash_embed_texts(texts: pd.Series, dim: int = DEFAULT_DIM, seed: int = 42) -
     for text in texts:
         vec = np.zeros(dim, dtype=np.float64)
         for tok in _TOKEN_RE.findall((text or "").lower()):
-            h = np.uint64(14695981039346656037 + seed)
-            for b in tok.encode("utf-8"):
-                h = np.uint64((int(h) ^ b) * 1099511628211 & 0xFFFFFFFFFFFFFFFF)
-            idx = int(h % np.uint64(dim))
-            sign = 1.0 if (int(h) >> 32) & 1 else -1.0
-            vec[idx] += sign
+            h = _token_hash(tok, seed)
+            vec[h % dim] += 1.0 if (h >> 32) & 1 else -1.0
         n = float(np.linalg.norm(vec))
         if n > 0:
             vec /= n
-        out.append([float(x) for x in vec])
+        out.append(vec.tolist())
     return out
 
 

@@ -15,8 +15,10 @@ list_transform in element order, so oracle comparisons are bit-stable.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -79,11 +81,22 @@ def vec_norm(a: Column | str, dim: int | None = None) -> Column:
 
 
 def vec_literal(vec: Sequence[float]) -> Column:
-    """A driver-held vector as an ``array<float>`` plan literal: double
-    literals cast to float (``Double.toFloat``, the conversion a
+    """A driver-held vector as ONE ``array<float>`` plan literal. numpy's
+    float32 rounding equals ``Double.toFloat`` (the conversion a
     Python-built ``array<float>`` DataFrame applies), so the values equal
     a one-row DataFrame's without a Python-built relation in the plan."""
-    return F.array(*[F.lit(float(x)) for x in vec]).cast("array<float>")
+    return F.lit(np.asarray(vec, dtype=np.float32))
+
+
+def literal_norm(vec: Sequence[float]) -> float:
+    """``vec_norm`` of ``vec_literal(vec)``, folded on the driver: the
+    same float32 elements widened to double, summed left to right from
+    0.0, then a correctly rounded sqrt, so the double is bit-identical to
+    the engine's per-row value."""
+    acc = 0.0
+    for x in np.asarray(vec, dtype=np.float32).tolist():
+        acc += x * x
+    return math.sqrt(acc)
 
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:

@@ -20,7 +20,11 @@ reaches them. The checkpoint is taken from a briefly cached copy so it
 carries the relation's measured size and row count
 (:func:`_checkpoint`).
 :func:`clear_cache` releases every entry's blocks and forgets it (test
-hygiene, and the cold bench arm's per-query reset).
+hygiene, and the cold bench arm's reset before its suite).
+A relation checkpointed elsewhere enters with :func:`register` and a
+token; :func:`lookup` serves it only while the caller's token still
+matches (the RAG warehouse's embeddings checkpoint, whose token is the
+table's written file listing).
 
 The graph family's two base relations:
 
@@ -52,7 +56,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-_CACHE: dict[tuple[str, str, str], tuple[SparkSession, DataFrame]] = {}
+# key -> (owning session, checkpoint, token): see session_cached, register
+_CACHE: dict[tuple[str, str, str], tuple[SparkSession, DataFrame, object]] = {}
 # RLock (ADVICE r8): `build` recurses into session_cached (pairs ->
 # items), and concurrent first calls must not race to checkpoint two
 # copies of the same relation (one would leak, unreferenced but stored).
@@ -83,6 +88,30 @@ def _checkpoint(plan: DataFrame) -> DataFrame:
     return df
 
 
+def _key(spark: SparkSession, sf_dir: str, kind: str) -> tuple[str, str, str]:
+    return (spark.sparkContext.applicationId, os.path.realpath(sf_dir), kind)
+
+
+def _lookup(spark: SparkSession, key, token) -> DataFrame | None:
+    """The live entry under ``key`` if ``spark`` owns it and its token
+    equals ``token``; any other entry under ``key`` is released. The
+    caller holds ``_LOCK``."""
+    # evict entries owned by dead applications (ADVICE r8): their
+    # DataFrames can never be returned again (the app-id key check
+    # below misses them forever) and would otherwise linger in the
+    # module dict for the process lifetime.
+    for stale in [k for k in _CACHE if k[0] != key[0]]:
+        _release(_CACHE.pop(stale)[1])
+    hit = _CACHE.get(key)
+    if hit is None:
+        return None
+    if hit[0] is spark and hit[2] == token:
+        return hit[1]
+    # same app, different session, or the entry's source has changed
+    _release(_CACHE.pop(key)[1])
+    return None
+
+
 def session_cached(
     spark: SparkSession, sf_dir: str, kind: str, build
 ) -> DataFrame:
@@ -99,33 +128,56 @@ def session_cached(
     pressure, and the largest entries are fact-grain incidences
     (user_items) or |E|-grain edge lists — bounded well below the fact
     table they are derived from."""
-    app = spark.sparkContext.applicationId
-    key = (app, os.path.realpath(sf_dir), kind)
+    key = _key(spark, sf_dir, kind)
     with _LOCK:
-        # evict entries owned by dead applications (ADVICE r8): their
-        # DataFrames can never be returned again (the app-id key check
-        # below misses them forever) and would otherwise linger in the
-        # module dict for the process lifetime.
-        for stale in [k for k in _CACHE if k[0] != app]:
-            _release(_CACHE.pop(stale)[1])
-        hit = _CACHE.get(key)
-        if hit is not None:
-            if hit[0] is spark:
-                return hit[1]
-            # same app, different session: drop the stale entry
-            _release(_CACHE.pop(key)[1])
-        df = _checkpoint(build())
-        _CACHE[key] = (spark, df)
+        df = _lookup(spark, key, None)
+        if df is None:
+            df = _checkpoint(build())
+            _CACHE[key] = (spark, df, None)
         return df
+
+
+def register(
+    spark: SparkSession, sf_dir: str, kind: str, df: DataFrame, token
+) -> None:
+    """Register ``df``, already an eager local checkpoint, under
+    (applicationId, realpath(sf_dir), kind), releasing the entry it
+    replaces. :func:`lookup` serves it only while the caller's token
+    still equals ``token`` (the warehouse passes its table's written
+    file listing)."""
+    key = _key(spark, sf_dir, kind)
+    with _LOCK:
+        old = _CACHE.pop(key, None)
+        if old is not None and old[1] is not df:
+            _release(old[1])
+        _CACHE[key] = (spark, df, token)
+
+
+def lookup(
+    spark: SparkSession, sf_dir: str, kind: str, token
+) -> DataFrame | None:
+    """The relation :func:`register` stored under the key, or None when
+    there is none, another session owns it, or its token differs (then
+    the entry is released)."""
+    with _LOCK:
+        return _lookup(spark, _key(spark, sf_dir, kind), token)
+
+
+def release(spark: SparkSession, sf_dir: str, kind: str) -> None:
+    """Release and forget the entry under the key, if any."""
+    with _LOCK:
+        old = _CACHE.pop(_key(spark, sf_dir, kind), None)
+        if old is not None:
+            _release(old[1])
 
 
 def clear_cache() -> None:
     """Release and forget every registered relation (test hygiene, and
-    the cold bench arm's per-query reset). A DataFrame derived from a
-    released entry can no longer run — its checkpoint has no lineage to
+    the cold bench arm's reset). A DataFrame derived from a released
+    entry can no longer run — its checkpoint has no lineage to
     recompute from — so consumers re-read the registry afterwards."""
     with _LOCK:
-        for _, df in _CACHE.values():
+        for _, df, _ in _CACHE.values():
             _release(df)
         _CACHE.clear()
 

@@ -4,7 +4,7 @@ Reproduces (and generalizes) the reference's retrieval surface:
   - E2 cosine top-k search (src/vector_store.py:152-175: Chroma
     ``collection.query(query_texts=[q], n_results=top_k)``, cosine space,
     default top_k=5) — here exact and distributed: the query vector is
-    an ``array<float>`` literal column on the vectors side (a one-row
+    one ``array<float>`` literal on the vectors side (a one-row
     DataFrame, broadcast, when the query comes from a table), scoring is
     a narrow map, and ``orderBy().limit(k)`` compiles to
     TakeOrderedAndProject (per-partition top-k + driver merge, no global
@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import (
+    literal_norm,
     vec_dot,
     vec_dot_fixed,
     vec_literal,
@@ -73,33 +74,41 @@ def topk_by_cosine(
     """Exact top-k cosine search for one query: a driver-held vector or,
     for queries derived from a table, a 1-row DataFrame (same values).
 
-    A vector is an ``array<float>`` literal column on the vectors side:
-    no join, no broadcast, one job over the vectors' partitions. A
-    DataFrame row is broadcast and cross-joined without shuffling the
-    vectors side. orderBy+limit avoids a global sort; deterministic
-    tie-break on id_col.
+    A vector is one ``array<float>`` literal and its norm a double
+    literal folded on the driver: the scoring is one select over the
+    vectors, with no join and no broadcast, one job over their
+    partitions. A DataFrame row is broadcast and cross-joined without
+    shuffling the vectors side. When the vectors carry ``<vec_col>_norm``
+    (the warehouse stores it) that column is the vector-side norm; it is
+    the same ``vec_norm`` double, so results are unchanged, and it is not
+    returned. orderBy+limit avoids a global sort; deterministic tie-break
+    on id_col.
     """
-    side = with_norm(vectors, vec_col, "__norm_v", dim)
+    norm_col = f"{vec_col}_norm"
+    if norm_col in vectors.columns:
+        norm_v = F.col(norm_col)
+    else:
+        norm_v = vec_norm(vec_col, dim)
+    keep = [c for c in vectors.columns if c != norm_col]
     if isinstance(query, DataFrame):
-        side = side.crossJoin(
+        side = vectors.crossJoin(
             F.broadcast(with_norm(query, query_vec_col, "__norm_q", dim))
         )
+        keep += [c for c in query.columns if c != query_vec_col]
+        qvec, norm_q = F.col(query_vec_col), F.col("__norm_q")
     else:
-        side = with_norm(
-            side.withColumn(query_vec_col, vec_literal(query)),
-            query_vec_col, "__norm_q", dim,
-        )
-    scored = side.withColumn(
-        "cosine_sim",
-        F.round(
-            paired_cosine(vec_col, query_vec_col, "__norm_v", "__norm_q", dim),
-            6,
-        ),
+        side = vectors
+        qvec, norm_q = vec_literal(query), F.lit(literal_norm(query))
+    dot = (
+        vec_dot_fixed(vec_col, qvec, dim)
+        if dim is not None
+        else vec_dot(vec_col, qvec)
     )
+    cosine = F.round(dot / (norm_v * norm_q), 6).alias("cosine_sim")
     return (
-        scored.orderBy(F.desc("cosine_sim"), F.asc(id_col))
+        side.select(*keep, cosine)
+        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
         .limit(k)
-        .drop(query_vec_col, "__norm_v", "__norm_q")
     )
 
 

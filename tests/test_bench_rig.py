@@ -81,3 +81,21 @@ def test_failing_query_is_recorded_and_run_exits_without_result(
     }
     # the sweep went on past the failure
     assert list(full["queries"]) == ["nation_segment_listagg"]
+
+
+def test_cold_arm_clears_the_registry_once_per_suite(spark, rig, monkeypatch):
+    """The cold arm starts the suite from an empty registry, as a fresh
+    deployment does, instead of emptying it before every query."""
+    from data_engineering_1_spark.operators import edgecache
+
+    calls = []
+    monkeypatch.setattr(edgecache, "clear_cache", lambda: calls.append(1))
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_COLD", "1")
+    bench.main(["nation_segment_listagg", "q3_shipping_priority"])
+    assert calls == [1]
+    full = json.loads(rig.read_text())
+    assert full["cold_arm"] is True
+    assert set(full["cold_first_run"]) == {
+        "nation_segment_listagg",
+        "q3_shipping_priority",
+    }

@@ -36,6 +36,44 @@ class TestHashEmbedder:
         a = hash_embed_texts(pd.Series(["alpha beta gamma", "delta epsilon zeta"]))
         assert a[0] != a[1]
 
+    def test_kernel_matches_the_numpy_scalar_loop(self):
+        """The masked-int FNV-1a kernel returns exactly what the earlier
+        per-byte ``np.uint64`` loop (frozen here) returned."""
+        from data_engineering_1_spark.functions.embedding import _TOKEN_RE
+
+        def frozen(texts, dim=64, seed=42):
+            out = []
+            for text in texts:
+                vec = np.zeros(dim, dtype=np.float64)
+                for tok in _TOKEN_RE.findall((text or "").lower()):
+                    h = np.uint64(14695981039346656037 + seed)
+                    for b in tok.encode("utf-8"):
+                        h = np.uint64(
+                            (int(h) ^ b) * 1099511628211 & 0xFFFFFFFFFFFFFFFF
+                        )
+                    idx = int(h % np.uint64(dim))
+                    sign = 1.0 if (int(h) >> 32) & 1 else -1.0
+                    vec[idx] += sign
+                n = float(np.linalg.norm(vec))
+                if n > 0:
+                    vec /= n
+                out.append([float(x) for x in vec])
+            return out
+
+        texts = pd.Series([
+            "Apache Spark is a distributed engine, v3.5 — 100% ok",
+            "naïve café ÆØÅ straße ΣΊΣΥΦΟΣ",
+            "数据工程课程的助手 根据提供的参考文档回答用户问题",
+            "日本語のテキスト 한국어 텍스트",
+            "",
+            None,
+            "?!",
+        ])
+        for dim, seed in ((64, 42), (7, 0), (384, 1234)):
+            assert hash_embed_texts(texts, dim=dim, seed=seed) == frozen(
+                texts, dim=dim, seed=seed
+            )
+
     def test_udf_matches_local(self, spark):
         df = spark.createDataFrame(
             [("spark engine",), ("vector search",)], "text string"

@@ -173,6 +173,68 @@ class TestTopkVectorQuery:
             assert outcome(zero) == outcome(qdf)
 
 
+class TestStoredNorm:
+    """``topk_by_cosine`` reads ``<vec_col>_norm`` when the vectors carry
+    it; the result is the one it computes without it, and never carries
+    the column."""
+
+    @pytest.fixture(scope="class")
+    def emb(self, spark, sf_dir):
+        from data_engineering_1_spark.io import load_table
+
+        return load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "label", "embedding"
+        )
+
+    def test_literal_norm_is_the_engine_norm_bit_for_bit(self, spark):
+        import struct
+
+        from data_engineering_1_spark.functions.embedding import (
+            hash_embed_texts,
+        )
+        from data_engineering_1_spark.functions.vector import (
+            literal_norm,
+            vec_literal,
+        )
+
+        rng = np.random.default_rng(7)
+        vecs = [
+            [0.1 if i % 2 else 1 / 3 for i in range(64)],
+            list(rng.normal(size=64)),
+            list(rng.normal(scale=1e-20, size=8)),
+            hash_embed_texts(pd.Series(["distributed query engine"]))[0],
+            [0.0] * 64,
+            [-0.0, 3.0, -4.0],
+        ]
+        for v in vecs:
+            fold, unrolled = spark.range(1).select(
+                vec_norm(vec_literal(v)), vec_norm(vec_literal(v), len(v))
+            ).first()
+            want = struct.pack("<d", literal_norm(v))
+            assert struct.pack("<d", fold) == want
+            assert struct.pack("<d", unrolled) == want
+
+    def test_same_topk_with_and_without_stored_norm(self, emb):
+        from data_engineering_1_spark.functions.embedding import (
+            hash_embed_texts,
+        )
+
+        stored = emb.withColumn("embedding_norm", vec_norm("embedding"))
+        qdf = emb.filter(F.col("vec_id") == 3).select(
+            F.col("embedding").alias("query_vec")
+        )
+        for q in (
+            hash_embed_texts(pd.Series(["distributed query engine"]))[0],
+            qdf,
+        ):
+            for dim in (None, 64):
+                with_norm = topk_by_cosine(stored, q, k=5, dim=dim)
+                without = topk_by_cosine(emb, q, k=5, dim=dim)
+                assert with_norm.columns == without.columns
+                assert "embedding_norm" not in with_norm.columns
+                assert with_norm.collect() == without.collect()
+
+
 def test_knn_join_excludes_self(vec_df):
     queries = vec_df.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
