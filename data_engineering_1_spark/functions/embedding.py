@@ -6,21 +6,26 @@ The reference embeds with sentence-transformers
 Arrow-batched pandas UDF so each executor encodes whole columnar batches
 — never a row-at-a-time Python UDF.
 
-Two implementations behind one factory:
+Two implementations behind one choice, ``batch_embedder``:
 
-  * ``hash_embedder`` — a deterministic seeded bag-of-hashed-words
+  * ``hash_embed_texts`` — a deterministic seeded bag-of-hashed-words
     embedding (pure numpy). Not a semantic model; it exists so the full
     distributed pipeline (embed -> store -> top-k search) is testable and
     reproducible with no model download. Identical text -> identical
     vector, cosine equality preserved for identical token multisets.
-  * ``sentence_transformer_embedder`` — the real model, gated behind an
-    import-try (the library is not in this container); loads once per
-    executor inside the iterator UDF, mirroring the reference's
-    load-once-then-batch pattern (src/vector_store.py:52-79 retry wrapper).
+  * ``sentence_model`` — the real model, gated behind an import-try (the
+    library is an optional dependency); loaded once per process, mirroring the
+    reference's load-once-then-batch pattern (src/vector_store.py:52-79).
+
+``batch_embedder`` is a plain batch function, so PDF ingest calls it
+inside its one ``mapInPandas`` pass (``sources.pdf.extract_chunks``);
+``get_embedder`` wraps it as a pandas UDF for text already in a table, and
+the QA layer embeds each question with it.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Callable, Iterator
 
@@ -69,48 +74,51 @@ def hash_embed_texts(texts: pd.Series, dim: int = DEFAULT_DIM, seed: int = 42) -
     return out
 
 
-def hash_embedder(dim: int = DEFAULT_DIM, seed: int = 42):
-    """pandas UDF: STRING -> ARRAY<FLOAT> via the hashing-trick encoder."""
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def embed(texts: pd.Series) -> pd.Series:
-        return pd.Series(hash_embed_texts(texts, dim=dim, seed=seed))
-
-    return embed
-
-
-def sentence_transformer_embedder(
-    model_name: str = "paraphrase-multilingual-MiniLM-L12-v2",
-):
-    """The reference's real embedder (src/vector_store.py:13,92-94) as an
-    iterator pandas UDF: the model loads once per executor python worker,
-    then encodes every Arrow batch. Raises NotImplementedError at *plan
-    build time* when sentence-transformers is absent, so callers can fall
-    back to ``hash_embedder`` explicitly."""
+@functools.cache
+def sentence_model(model_name: str = "paraphrase-multilingual-MiniLM-L12-v2"):
+    """The reference's real encoder (src/vector_store.py:13,92-94), loaded
+    once per process and kept (a reused Python worker loads it once for
+    all its tasks); None when sentence-transformers does not import."""
     try:
-        import sentence_transformers  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "sentence-transformers is not installed in this environment; "
-            "use hash_embedder() for deterministic tests"
-        ) from exc
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def embed(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         from sentence_transformers import SentenceTransformer
+    except ImportError:
+        return None
+    return SentenceTransformer(model_name)
 
-        model = SentenceTransformer(model_name)
-        for texts in batches:
-            encoded = model.encode(list(texts.fillna("")))
-            yield pd.Series([[float(x) for x in row] for row in encoded])
 
-    return embed
+def batch_embedder(
+    dim: int = DEFAULT_DIM,
+    seed: int = 42,
+    hash_embed: Callable[..., list[list[float]]] = hash_embed_texts,
+) -> Callable[[pd.Series], list[list[float]]]:
+    """The package's one text encoder: texts -> one float vector each.
+
+    The sentence-transformers model when it imports (384-d, ``dim`` and
+    ``seed`` unused), else ``hash_embed`` at ``dim``/``seed``. Stored
+    chunks and questions both go through here, so they never mix widths.
+    ``hash_embed`` lets a caller hand over its own binding of
+    ``hash_embed_texts``: perfbench's traced runs wrap that name in each
+    importing module, so the QA layer's question encode stays a span.
+    """
+    model = sentence_model()
+    if model is None:
+        return functools.partial(hash_embed, dim=dim, seed=seed)
+
+    def encode(texts: pd.Series) -> list[list[float]]:
+        return [[float(x) for x in row] for row in model.encode(list(texts.fillna("")))]
+
+    return encode
 
 
 def get_embedder(dim: int = DEFAULT_DIM, seed: int = 42) -> Callable:
-    """Best-available embedder: the real model when importable, else the
-    deterministic stub."""
-    try:
-        return sentence_transformer_embedder()
-    except NotImplementedError:
-        return hash_embedder(dim=dim, seed=seed)
+    """``batch_embedder`` as an Arrow-batched iterator pandas UDF (STRING ->
+    ARRAY<FLOAT>): the encoder is picked once per task, then every batch
+    is encoded."""
+
+    @F.pandas_udf(T.ArrayType(T.FloatType()))
+    def embed(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        encode = batch_embedder(dim, seed)
+        for texts in batches:
+            yield pd.Series(encode(texts))
+
+    return embed

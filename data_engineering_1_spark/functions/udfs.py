@@ -10,9 +10,11 @@ made explicit:
     > pandas_udf / mapInPandas (Arrow batches)  — when Python is required
     > F.udf row-at-a-time                       — only for tiny columns
 
-The UDTF chunker here intentionally duplicates ``operators.chunking``'s
-pure-Spark plan so tests can pin them to identical outputs — in production
-use the pure-Spark one (codegen, no Python workers).
+The UDTF chunker and the row-at-a-time cleaner call the same plain
+function as PDF ingest's Python pass (``operators.chunking.chunk_paragraph``),
+and tests pin them to ``operators.chunking``'s pure-Spark plan. For text
+that is already a column, use the pure-Spark one (codegen, no Python
+workers).
 """
 
 from __future__ import annotations
@@ -25,36 +27,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 from pyspark.sql.types import DoubleType
 
-from ..operators.chunking import (
-    DEFAULT_CHUNK_SIZE,
-    DEFAULT_MIN_CHUNK,
-    DEFAULT_OVERLAP,
-)
+from ..operators.chunking import chunk_paragraph
 
 
 @udtf(returnType="chunk_number INT, chunk_text STRING")
 class ChunkTextUDTF:
-    """Python UDTF (Spark 4): one cleaned text -> its overlapping chunks,
-    same semantics as operators.chunking.chunk_text (reference
-    src/pdf_extractor.py:44-55). Registered for SQL via
-    ``register_udfs`` -> ``SELECT * FROM chunk_text_udtf('...')``."""
+    """Python UDTF (Spark 4): one text -> its overlapping chunks, through
+    ``operators.chunking.chunk_paragraph`` with no length filter, like
+    ``operators.chunking.chunk_text`` (reference src/pdf_extractor.py:
+    44-55; a cleaned text passes the clean rule unchanged). Registered
+    for SQL via ``register_udfs`` ->
+    ``SELECT * FROM chunk_text_udtf('...')``."""
 
     def eval(self, text: str):  # noqa: D102
-        if text is None:
-            return
-        size, overlap, min_chunk = (
-            DEFAULT_CHUNK_SIZE,
-            DEFAULT_OVERLAP,
-            DEFAULT_MIN_CHUNK,
-        )
-        if len(text) <= size:
-            yield None, text
-            return
-        stride = size - overlap
-        for start in range(0, len(text), stride):
-            piece = text[start : start + size]
-            if len(piece) >= min_chunk:
-                yield start // stride + 1, piece
+        if text is not None:
+            yield from chunk_paragraph(text, min_len=0)
 
 
 @F.pandas_udf(DoubleType())
@@ -90,13 +77,13 @@ def clean_whitespace_pyudf():
     """Row-at-a-time Python UDF of the P1 cleaner — exists to DEMONSTRATE
     the slow path and to pin its output to the fast JVM expression in
     tests. Never used in any shipped plan."""
-    import re
 
     @F.udf("string")
     def clean(s: str | None) -> str | None:
         if s is None:
             return None
-        return re.sub(r"\s{2,}", " ", s).strip()
+        # the clean rule alone: no length filter, one chunk of any length
+        return chunk_paragraph(s, chunk_size=len(s), min_len=0)[0][1]
 
     return clean
 

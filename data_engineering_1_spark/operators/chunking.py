@@ -1,8 +1,12 @@
-"""Text cleaning + fixed-size overlapping chunking, pure Spark.
+"""Text cleaning + fixed-size overlapping chunking, pure Spark, with one
+plain-Python twin of the same rule.
 
 Reproduces the reference's extraction-stage text pipeline with identical
-semantics but as one lazy, UDF-free DataFrame plan (whole-stage codegen,
-one-to-many via posexplode — no Python in the hot path):
+semantics as one lazy, UDF-free DataFrame plan (whole-stage codegen,
+one-to-many via posexplode — no Python in the hot path), for text that is
+already a column. ``chunk_paragraph`` is the same rule over one Python
+string, for text that is still in a Python worker: PDF ingest decodes,
+cleans, chunks and embeds in one pass (``sources.pdf.extract_chunks``):
 
   - whitespace normalization: collapse runs of >=2 whitespace chars to one
     space, then trim              (reference: src/pdf_extractor.py:30)
@@ -23,6 +27,8 @@ O(input size * (1 + overlap/stride)) ~= 1.11x input.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -31,19 +37,55 @@ DEFAULT_OVERLAP = 50  # reference src/pdf_extractor.py:15
 DEFAULT_MIN_PARAGRAPH = 10  # reference src/pdf_extractor.py:32
 DEFAULT_MIN_CHUNK = 50  # reference src/pdf_extractor.py:50
 
+# Python's ``re`` ``\s`` on str (the 29 characters of ``str.isspace``) as
+# an explicit class in the ``\x{...}`` syntax that both Java regex and
+# RE2 (DuckDB) read. Java's own ``\s`` is ASCII-only: it misses U+3000,
+# NBSP, U+001C-U+001F, U+0085, U+2000-U+200A and the rest.
+WS_CLASS = (
+    r"[\x{09}-\x{0D}\x{1C}-\x{20}\x{85}\x{A0}\x{1680}\x{2000}-\x{200A}"
+    r"\x{2028}\x{2029}\x{202F}\x{205F}\x{3000}]"
+)
+_WS_RUN = re.compile(r"\s{2,}")
+
 
 def clean_whitespace(col: Column | str) -> Column:
     """``re.sub(r'\\s{2,}', ' ', s).strip()`` (src/pdf_extractor.py:30).
 
-    The strip is a regex (``^\\s+|\\s+$``), not ``F.trim`` — Spark's trim
+    The strip is a regex (``^ws+|ws+$``), not ``F.trim`` — Spark's trim
     removes only spaces, while Python's ``str.strip()`` removes tabs and
     newlines too; a single trailing ``\\n`` survives the run-collapse
-    (it's not a run of 2+) and must still be stripped.
+    (it's not a run of 2+) and must still be stripped. Both regexes use
+    ``WS_CLASS``, Python's whitespace set.
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_replace(
-        F.regexp_replace(c, r"\s{2,}", " "), r"^\s+|\s+$", ""
+        F.regexp_replace(c, WS_CLASS + "{2,}", " "),
+        f"^{WS_CLASS}+|{WS_CLASS}+$",
+        "",
     )
+
+
+def chunk_paragraph(
+    text: str,
+    chunk_size: int = DEFAULT_CHUNK_SIZE,
+    min_len: int = DEFAULT_MIN_PARAGRAPH,
+) -> list[tuple[int | None, str]]:
+    """The reference's clean -> filter -> chunk rule for one text, in
+    Python (src/pdf_extractor.py:30-55): ``(chunk_number, chunk_text)``
+    pairs, the same rows as ``clean_documents`` + ``chunk_text`` give.
+    Used where the text is already in a Python worker (the ingest pass,
+    the UDF demos), so it never costs a boundary crossing of its own."""
+    cleaned = _WS_RUN.sub(" ", text).strip()
+    if len(cleaned) < min_len:
+        return []
+    if len(cleaned) <= chunk_size:
+        return [(None, cleaned)]
+    stride = chunk_size - DEFAULT_OVERLAP
+    pieces = (
+        (start // stride + 1, cleaned[start : start + chunk_size])
+        for start in range(0, len(cleaned), stride)
+    )
+    return [(n, p) for n, p in pieces if len(p) >= DEFAULT_MIN_CHUNK]
 
 
 def clean_documents(

@@ -17,7 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.embedding import DEFAULT_DIM, hash_embed_texts
+from ..functions.embedding import DEFAULT_DIM, batch_embedder, hash_embed_texts
 from ..functions.vector import vec_literal
 from .similarity import topk_by_cosine
 
@@ -158,7 +158,8 @@ def answer_with_sources(
     n_clusters: int = 16,
     nprobe: int = 4,
 ) -> dict[str, Any]:
-    """Q4 (src/qa_system.py:111-138): embed the query, distributed
+    """Q4 (src/qa_system.py:111-138): embed the query with
+    ``batch_embedder`` (the stored chunks' encoder), distributed
     top-k over the chunk table, then driver-side context/LLM composition.
     ``chunks`` must carry (id_col, text_col, vec_col [+ metadata cols]);
     ``similarity`` is plain cosine (reference: 1 - cosine_distance,
@@ -185,7 +186,10 @@ def answer_with_sources(
     ``dim`` is a parameter (default: the fixture embedding width) rather
     than a ``.first()`` sniff of the vector column — the only driver
     action here is the by-design collect of the k retrieved rows."""
-    qvec = hash_embed_texts(pd.Series([query]), dim=dim)[0]
+    # the encoder the build stored the chunks with; the hash fallback is
+    # this module's binding of hash_embed_texts
+    embed = batch_embedder(dim, hash_embed=hash_embed_texts)
+    qvec = embed(pd.Series([query]))[0]
     if method == "ivf":
         from .similarity import ivf_topk_search
 

@@ -11,16 +11,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ..operators.chunking import chunk_documents, clean_whitespace
+from ..operators.chunking import WS_CLASS, chunk_documents, clean_whitespace
 from .registry import declared_query
 
 # DuckDB twin of the clean step (src/pdf_extractor.py:30). NB: DuckDB
 # regexp_replace is single-match unless the 'g' flag is passed; Spark's
 # replaces all matches by default. The strip is a regex, not trim():
 # SQL trim removes only spaces, Python str.strip() all whitespace.
+# WS_CLASS is Python's whitespace set; RE2's \s is ASCII-only.
 _CLEAN_SQL = (
-    "regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'),"
-    " '^\\s+|\\s+$', '', 'g')"
+    f"regexp_replace(regexp_replace(text, '{WS_CLASS}{{2,}}', ' ', 'g'),"
+    f" '^{WS_CLASS}+|{WS_CLASS}+$', '', 'g')"
 )
 
 

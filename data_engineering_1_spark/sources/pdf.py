@@ -1,14 +1,18 @@
 """PDF directory source -> paragraph rows -> chunk table (SURVEY.md §2.1
-S1-S2, §2.3 C1-C3).
+S1-S2, §2.3 C1-C4, §2.4 E1).
 
 Spark-first split of the reference's extractor (src/pdf_extractor.py):
 
   * the scan is ``binaryFile`` with a ``*.pdf`` glob (reference: os.listdir
     + endswith filter, src/pdf_extractor.py:246-253);
-  * ONLY page decoding + layout segmentation run in Python (mapInPandas) —
-    they need the PDF library and produce paragraph rows;
-  * cleaning / length filters / overlapping chunking stay JVM-side in
-    ``operators.chunking`` (whole-stage codegen), NOT inside the UDF.
+  * everything after the scan runs in ONE Arrow-batched ``mapInPandas``
+    pass (``extract_chunks``): page decoding and layout segmentation (they
+    need the PDF library), the reference's clean / filter / chunk rule
+    (``operators.chunking.chunk_paragraph``) and, for ingest, the batch
+    embedder. The text is already in the Python worker; a second Python
+    operator would start a second Python runner per task, which cost about
+    1.3 s of CPU per 4-task build against about 0.1 s for the chunking and
+    embedding work itself.
 
 Segmentation semantics reproduce src/pdf_extractor.py:60-206 exactly,
 including its quirks (documented inline) — but as pure functions over plain
@@ -33,7 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.chunking import chunk_text, clean_documents
+from ..functions.embedding import batch_embedder
+from ..operators.chunking import chunk_paragraph
 
 # sentence-final punctuation (ASCII + CJK), reference src/pdf_extractor.py:132
 _SENT_END = re.compile(r"[.。?？!！]$")
@@ -44,6 +49,17 @@ _BLANK_SPLIT = re.compile(r"\n\s*\n")
 PARAGRAPH_SCHEMA = (
     "source STRING, page_number INT, paragraph_number INT, "
     "total_pages INT, text STRING"
+)
+_PARAGRAPH_COLUMNS = (
+    "source", "page_number", "paragraph_number", "total_pages", "text"
+)
+_CHUNK_SCHEMA = (
+    "text STRING, source STRING, page_number INT, paragraph_number INT, "
+    "total_pages INT, chunk_number INT"
+)
+_CHUNK_COLUMNS = (
+    "text", "source", "page_number", "paragraph_number", "total_pages",
+    "chunk_number",
 )
 
 
@@ -268,57 +284,70 @@ def scan_pdf_dir(spark: SparkSession, pdf_dir: str) -> DataFrame:
     )
 
 
-def _extract_batches(
+def _paragraph_rows(paths: Sequence[str], contents: Sequence[bytes]):
+    """(source, page_number, paragraph_number, total_pages, text) for every
+    paragraph of every file, 1-based numbers (src/pdf_extractor.py:36-41)."""
+    for path, content in zip(paths, contents):
+        filename = os.path.basename(path)
+        pages = decode_pages(bytes(content), path)
+        for page_idx, page in enumerate(pages):
+            for para_idx, para in enumerate(page_paragraphs(page)):
+                yield filename, page_idx + 1, para_idx + 1, len(pages), para
+
+
+def _by_path(files: DataFrame) -> DataFrame:
+    """(path, content) spread over the default parallelism by path: each
+    file is independent, so the Python pass parallelizes per file, and
+    one giant PDF doesn't serialize a partition."""
+    n = files.sparkSession.sparkContext.defaultParallelism
+    return files.select("path", "content").repartition(n, "path")
+
+
+def _decode_segment(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        rows: dict[str, list[Any]] = {
-            "source": [],
-            "page_number": [],
-            "paragraph_number": [],
-            "total_pages": [],
-            "text": [],
-        }
-        for path, content in zip(pdf["path"], pdf["content"]):
-            filename = os.path.basename(path)
-            pages = decode_pages(bytes(content), path)
-            for page_idx, page in enumerate(pages):
-                for para_idx, para in enumerate(page_paragraphs(page)):
-                    rows["source"].append(filename)
-                    rows["page_number"].append(page_idx + 1)
-                    rows["paragraph_number"].append(para_idx + 1)
-                    rows["total_pages"].append(len(pages))
-                    rows["text"].append(para)
-        yield pd.DataFrame(rows)
+        yield pd.DataFrame(
+            list(_paragraph_rows(pdf["path"], pdf["content"])),
+            columns=_PARAGRAPH_COLUMNS,
+        )
 
 
 def extract_paragraphs(files: DataFrame) -> DataFrame:
     """S2+C1-C3 as one Arrow-batched mapInPandas stage: (path, content) ->
-    paragraph rows with 1-based page/paragraph numbers
-    (src/pdf_extractor.py:36-41). Each input file is independent, so the
-    stage parallelizes per file with no shuffle; repartition first so one
-    giant PDF doesn't serialize a partition."""
-    n = files.sparkSession.sparkContext.defaultParallelism
-    return (
-        files.select("path", "content")
-        .repartition(n, "path")
-        .mapInPandas(_extract_batches, schema=PARAGRAPH_SCHEMA)
-    )
+    paragraph rows with 1-based page/paragraph numbers."""
+    return _by_path(files).mapInPandas(_decode_segment, PARAGRAPH_SCHEMA)
 
 
-def extract_chunks(spark: SparkSession, pdf_dir: str) -> DataFrame:
-    """The reference's full extraction stage (src/pdf_extractor.py:15-58) as
-    one lazy DAG: scan -> decode/segment (Python, minimal) -> clean/filter/
-    overlapping-chunk (JVM, codegen). Output schema = the flattened chunk
-    record of SURVEY.md §1.3."""
-    paragraphs = extract_paragraphs(scan_pdf_dir(spark, pdf_dir))
-    cleaned = clean_documents(paragraphs, text_col="text", min_len=10)
-    chunked = chunk_text(cleaned, text_col="cleaned")
-    return chunked.select(
-        F.col("chunk_text").alias("text"),
-        "source",
-        "page_number",
-        "paragraph_number",
-        "total_pages",
-        "chunk_number",
-    )
+def extract_chunks(
+    spark: SparkSession, pdf_dir: str, embed_dim: int | None = None
+) -> DataFrame:
+    """The reference's full extraction stage (src/pdf_extractor.py:15-58)
+    as one scan plus ONE Arrow-batched mapInPandas pass: decode ->
+    segment -> clean/filter/overlapping-chunk (``chunk_paragraph``) and,
+    with ``embed_dim``, -> ``embedding ARRAY<FLOAT>`` from
+    ``batch_embedder(embed_dim)``. Rows are the flattened chunk record of
+    SURVEY.md §1.3 (``chunk_number`` null for unchunked texts)."""
+    schema = _CHUNK_SCHEMA
+    if embed_dim is not None:
+        schema += ", embedding ARRAY<FLOAT>"
+
+    def decode_chunk_embed(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        embed = batch_embedder(embed_dim) if embed_dim is not None else None
+        for pdf in batches:
+            rows = [
+                (piece, source, page, para, total, number)
+                for source, page, para, total, text in _paragraph_rows(
+                    pdf["path"], pdf["content"]
+                )
+                for number, piece in chunk_paragraph(text)
+            ]
+            out = pd.DataFrame(rows, columns=_CHUNK_COLUMNS)
+            if embed is not None:
+                out["embedding"] = embed(out["text"])
+            yield out
+
+    files = scan_pdf_dir(spark, pdf_dir)
+    return _by_path(files).mapInPandas(decode_chunk_embed, schema)

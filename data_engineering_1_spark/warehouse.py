@@ -5,10 +5,13 @@ The reference pipeline (src/main.py:14-78) is: extract PDFs -> CSV,
 reload CSVs -> Chroma collection (skip when already populated, destroy on
 --force-rebuild), then dump for inspection. Here ingest is ONE pass:
 
-  * one plan: PDF dir scan + extraction + chunking -> ``chunk_id`` ->
-    embedding column (Arrow-batched UDF) -> ``embedding_norm``
-    (``vec_norm``, stored so a question never re-derives it), taken as
-    one eager local checkpoint
+  * one plan: PDF dir scan -> ONE Python pass per task that decodes,
+    segments, cleans, chunks and embeds (``extract_chunks`` with an
+    embedding width, one Python runner per task) -> ``chunk_id`` ->
+    ``embedding_norm`` (``vec_norm``, stored so a question never
+    re-derives it), taken as one eager local checkpoint. Only an
+    embeddings table rebuilt from stored chunks uses the embedding
+    pandas UDF (``get_embedder``)
   * ``embeddings`` and ``chunks`` parquet tables, both written from that
     checkpoint (no read-back, no second embedding pass); the build's
     counts are the checkpoint's
@@ -142,10 +145,13 @@ class ChunkWarehouse:
             return self.stats()
 
         if CHUNKS in todo:
-            # nullif keeps chunk_id nullable, as parquet reads it back, so
-            # the served relation has the table's schema; concat_ws ends
-            # in a non-null part here, so no id is empty or changed
-            rel = extract_chunks(self.spark, pdf_dir).withColumn(
+            # one Python pass per task: decode, chunk and, when the
+            # embeddings table is written too, embed. nullif keeps
+            # chunk_id nullable, as parquet reads it back, so the served
+            # relation has the table's schema; concat_ws ends in a
+            # non-null part here, so no id is empty or changed
+            dim = embed_dim if EMBEDDINGS in todo else None
+            rel = extract_chunks(self.spark, pdf_dir, dim).withColumn(
                 "chunk_id",
                 F.nullif(
                     F.concat_ws(
@@ -159,12 +165,14 @@ class ChunkWarehouse:
                 ),
             )
         else:
-            rel = self.load(CHUNKS)
-        if EMBEDDINGS in todo:
-            embed = get_embedder(dim=embed_dim)
-            rel = rel.select(  # the chunk columns in the embeddings order
-                *EMBEDDING_COLUMNS[:7], embed("text").alias("embedding")
-            ).withColumn("embedding_norm", vec_norm("embedding"))
+            rel = self.load(CHUNKS).withColumn(
+                "embedding", get_embedder(dim=embed_dim)("text")
+            )
+        if EMBEDDINGS in todo:  # the served relation: the table's columns
+            rel = rel.select(
+                *EMBEDDING_COLUMNS[:-1],
+                vec_norm("embedding").alias("embedding_norm"),
+            )
         # a plain checkpoint, not edgecache's measured-statistics one: the
         # ask path joins nothing, and the extra cache pass cost about 0.9 s
         # of CPU per build (8 PDFs, 807 chunks, 4 cores)

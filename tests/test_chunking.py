@@ -13,8 +13,13 @@ from hypothesis import strategies as st
 
 from data_engineering_1_spark.operators.chunking import (
     chunk_documents,
+    chunk_paragraph,
     clean_whitespace,
 )
+
+# every character Python's re \s matches (str.isspace): the reference
+# cleans with re.sub(r"\s{2,}", " ", s).strip()
+PY_WHITESPACE = [chr(c) for c in range(0x110000) if chr(c).isspace()]
 
 
 def run_chunks(spark, texts):
@@ -82,7 +87,7 @@ def test_clean_whitespace_column(spark):
 @given(
     st.lists(
         st.text(
-            alphabet=st.sampled_from("ab 字\t\n."),
+            alphabet=st.sampled_from("ab 字\t\n.　\xa0\x1c\x85\x0b"),
             min_size=0,
             max_size=1200,
         ),
@@ -94,6 +99,40 @@ def test_chunking_matches_reference_property(spark, texts):
     got = run_chunks(spark, texts)
     for i, t in enumerate(texts):
         assert got.get(i, []) == reference_chunks(t)
+        assert chunk_paragraph(t) == reference_chunks(t)
+
+
+def test_every_python_whitespace_char_cleans_like_the_reference(spark):
+    """The JVM cleaner, its DuckDB twin and ``chunk_paragraph`` treat all
+    29 characters of Python's ``\\s`` as whitespace, and nothing else (U+200B
+    and U+FEFF are not whitespace to Python)."""
+    import re
+
+    import duckdb
+
+    from data_engineering_1_spark.plans.chunking_queries import _CLEAN_SQL
+
+    assert len(PY_WHITESPACE) == 29
+    texts = [
+        f"{c}{c}lead{c}{c}run{c}single{c}x{c}trail{c}"
+        for c in PY_WHITESPACE + ["\u200b", "\ufeff", "\x1b", "_"]
+    ]
+    want = [re.sub(r"\s{2,}", " ", t).strip() for t in texts]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    jvm = [
+        r.c
+        for r in df.select("i", clean_whitespace("text").alias("c"))
+        .orderBy("i")
+        .collect()
+    ]
+    con = duckdb.connect()
+    query = f"SELECT {_CLEAN_SQL} FROM (SELECT ? AS text)"
+    sql = [con.execute(query, [t]).fetchone()[0] for t in texts]
+    python = [chunk_paragraph(t, min_len=0)[0][1] for t in texts]
+    assert jvm == want
+    assert sql == want
+    assert python == want
+    assert want[0] == "lead run\tsingle\tx\ttrail"
 
 
 def test_coverage_invariant(spark):

@@ -13,8 +13,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_1_spark.functions.embedding import (
+    batch_embedder,
+    get_embedder,
     hash_embed_texts,
-    hash_embedder,
 )
 from data_engineering_1_spark.operators import qa
 from data_engineering_1_spark.sources import pdf as P
@@ -78,8 +79,8 @@ class TestHashEmbedder:
         df = spark.createDataFrame(
             [("spark engine",), ("vector search",)], "text string"
         )
-        got = [r.e for r in df.select(hash_embedder()("text").alias("e")).collect()]
-        exp = hash_embed_texts(pd.Series(["spark engine", "vector search"]))
+        got = [r.e for r in df.select(get_embedder()("text").alias("e")).collect()]
+        exp = batch_embedder()(pd.Series(["spark engine", "vector search"]))
         for g, e in zip(got, exp):
             assert np.allclose(g, e, atol=1e-6)
 
@@ -156,7 +157,7 @@ class TestFullPipeline:
         chunks = P.extract_chunks(spark, str(d)).withColumn(
             "doc_id", F.monotonically_increasing_id()
         )
-        return chunks.withColumn("embedding", hash_embedder()("text")).cache()
+        return chunks.withColumn("embedding", get_embedder()("text")).cache()
 
     def test_ivf_method_with_full_probe_equals_exact(self, spark, sf_dir):
         """VERDICT r8 #8: the flag-gated IVF scale path, pinned equal to
@@ -242,6 +243,36 @@ class TestFullPipeline:
         assert 0.0 < top["similarity"] <= 1.0
         assert top["metadata"]["source"] == "spark.pdf"
         assert top["metadata"]["page_number"] == 1
+
+
+class TestOneEmbedder:
+    """Questions are embedded by the same ``batch_embedder`` as the stored
+    chunks, so an install with sentence-transformers never compares its
+    384-d chunk vectors with 64-d hash questions."""
+
+    def test_hash_encoder_without_the_model(self, monkeypatch):
+        from data_engineering_1_spark.functions import embedding
+
+        monkeypatch.setattr(embedding, "sentence_model", lambda: None)
+        texts = pd.Series(["distributed engine", ""])
+        assert batch_embedder()(texts) == hash_embed_texts(texts)
+
+    def test_question_uses_the_model_when_it_imports(self, spark, monkeypatch):
+        from data_engineering_1_spark.functions import embedding
+
+        class Model:  # a 384-d stand-in: every text -> the same direction
+            def encode(self, texts):
+                return np.full((len(texts), 384), 0.25, dtype=np.float32)
+
+        monkeypatch.setattr(embedding, "sentence_model", lambda: Model())
+        chunks = spark.createDataFrame(
+            [(1, "parallel", [0.5] * 384), (2, "orthogonal", [0.5, -0.5] * 192)],
+            "doc_id bigint, text string, embedding array<float>",
+        )
+        ans = qa.answer_with_sources(spark, "any question", chunks, top_k=2)
+        sims = {s["text"]: s["similarity"] for s in ans["sources"]}
+        assert sims["parallel"] == pytest.approx(1.0)
+        assert sims["orthogonal"] == pytest.approx(0.0)
 
 
 def test_demo_pipeline_end_to_end(spark, sf_dir, tmp_path):

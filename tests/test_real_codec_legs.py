@@ -41,11 +41,9 @@ def test_sentence_transformer_real_embedder(spark):
     """E1 real leg (reference src/vector_store.py:13,92-94): the MiniLM
     encoder as an Arrow-batched iterator pandas UDF."""
     pytest.importorskip("sentence_transformers")
-    from data_engineering_1_spark.functions.embedding import (
-        sentence_transformer_embedder,
-    )
+    from data_engineering_1_spark.functions.embedding import get_embedder
 
-    embed = sentence_transformer_embedder()
+    embed = get_embedder()  # picks the model when it imports
     df = spark.createDataFrame(
         [("数据工程",), ("data engineering",), ("",)], ["text"]
     ).withColumn("emb", embed("text"))

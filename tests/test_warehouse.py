@@ -266,3 +266,110 @@ def test_no_norm_in_sources_or_export(spark, built, tmp_path):
     built.export_json(out)
     cols = spark.read.json(out).columns
     assert "embedding_norm" not in cols and "embedding" not in cols
+
+
+# ---- the fused ingest pass: one Python operator per task ----
+
+
+def _para(n: int) -> str:
+    """One fake-PDF paragraph of exactly ``n`` chars after cleaning."""
+    words = ("spark chunk vector 数据 工程 embedding query " * 40)[: n - 1]
+    return words.rstrip() + "." * (n - len(words.rstrip()))
+
+
+@pytest.fixture(scope="module")
+def edge_pdf_dir(tmp_path_factory):
+    """Paragraphs at every chunking boundary, too-short fragments, and
+    whitespace that only Python's \\s matches (U+3000, NBSP, U+001C,
+    U+0085, U+2000-U+200A runs) inside lines."""
+    d = tmp_path_factory.mktemp("edge_pdfs")
+    lengths = (9, 10, 500, 501, 950, 951, 1400)
+    (d / "edges.pdf").write_text(
+        "\n\n".join(_para(n) for n in lengths)
+        + "\f"
+        + "tiny.\n\nshort 短.\n\n"
+        + "全角　　空格 and no\xa0\xa0break   runs, "
+        + "single　kept\x1c\x1cand\x85\x85end of the page paragraph."
+        + "\n\n"
+        + ("ideographic　　space repeated " * 30),
+        encoding="utf-8",
+    )
+    (d / "plain.pdf").write_text(
+        "A plain ascii paragraph that is long enough to be kept.",
+        encoding="utf-8",
+    )
+    return str(d)
+
+
+def test_build_equals_the_jvm_chunking_plan_bit_for_bit(
+    spark, edge_pdf_dir, tmp_path
+):
+    """The fused pass (decode -> clean -> chunk -> embed in one Python
+    operator) writes exactly what the composed plan writes: paragraphs
+    from Python, the JVM clean/chunk plan, then the embedding UDF."""
+    from pyspark.sql import functions as F
+
+    from data_engineering_1_spark.functions.embedding import get_embedder
+    from data_engineering_1_spark.functions.vector import vec_norm
+    from data_engineering_1_spark.operators.chunking import (
+        chunk_text,
+        clean_documents,
+    )
+    from data_engineering_1_spark.sources import pdf as P
+
+    wh = ChunkWarehouse(spark, str(tmp_path / "edges"))
+    wh.build(edge_pdf_dir)
+
+    paras = P.extract_paragraphs(P.scan_pdf_dir(spark, edge_pdf_dir))
+    oracle = (
+        chunk_text(clean_documents(paras, text_col="text"), text_col="cleaned")
+        .select(
+            F.col("chunk_text").alias("text"),
+            "source",
+            "page_number",
+            "paragraph_number",
+            "total_pages",
+            "chunk_number",
+            F.concat_ws(
+                ":",
+                "source",
+                "page_number",
+                "paragraph_number",
+                F.coalesce(F.col("chunk_number"), F.lit(0)),
+            ).alias("chunk_id"),
+        )
+        .withColumn("embedding", get_embedder()("text"))
+        .withColumn("embedding_norm", vec_norm("embedding"))
+    )
+    for table, cols in ((CHUNKS, CHUNK_COLUMNS), (EMBEDDINGS, EMBEDDING_COLUMNS)):
+        got = [repr(tuple(r)) for r in _rows(spark.read.parquet(wh.path(table)))]
+        want = [repr(tuple(r)) for r in _rows(oracle.select(*cols))]
+        assert got == want, table
+    lengths = {
+        len(r.text) for r in spark.read.parquet(wh.path(CHUNKS)).collect()
+    }
+    assert {10, 500, 501 - 450, 950 - 900, 951 - 900} <= lengths
+    assert 9 not in lengths
+
+
+def test_forced_build_runs_one_python_operator(
+    spark, pdf_dir, tmp_path, monkeypatch
+):
+    """The checkpointed plan of a forced build crosses into Python once:
+    one MapInPandas, no pandas-UDF or row-UDF evaluation node."""
+    wh = ChunkWarehouse(spark, str(tmp_path / "plan"))
+    wh.build(pdf_dir)
+    plans = []
+    DataFrame = type(spark.range(1))  # the concrete class
+    checkpoint = DataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    wh.build(pdf_dir, force_rebuild=True)
+    assert len(plans) == 1
+    assert plans[0].count("MapInPandas") == 1, plans[0]
+    assert "ArrowEvalPython" not in plans[0]
+    assert "BatchEvalPython" not in plans[0]

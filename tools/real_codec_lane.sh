@@ -34,17 +34,15 @@ PYTEST_TAIL=$(tail -1 /tmp/real_codec_pytest.log)
 # model vectors (not the hash-embedder stub) when the library exists.
 python - <<'EOF'
 from data_engineering_1_spark.session import get_spark
-from data_engineering_1_spark.functions.embedding import (
-    sentence_transformer_embedder,
-)
+from data_engineering_1_spark.functions.embedding import get_embedder
 
 spark = get_spark("real-codec-lane")
 df = spark.createDataFrame(
     [(1, "hello world"), (2, "guten tag")], "id long, text string"
 )
-emb = sentence_transformer_embedder()
+emb = get_embedder()  # the model when sentence-transformers imports
 out = df.select("id", emb("text").alias("embedding")).collect()
-assert len(out) == 2 and len(out[0]["embedding"]) > 0
+assert len(out) == 2 and len(out[0]["embedding"]) == 384
 print("E1 real-encoder smoke ok:", len(out[0]["embedding"]), "dims")
 EOF
 
