@@ -21,7 +21,7 @@ miner.
     value: the sampling-bias correction (inverse-propensity weighting
     with segment-share propensities == post-stratification).
   * ``kcore_copurchase`` (X183) — bounded k-core peeling
-    (`operators/graph.py::kcore_peel`, the FIFTH iterative graph
+    (`operators/graph.py::kcore_degree_rounds`, the FIFTH iterative graph
     algorithm under the full value hash); per-round survivor counts +
     node checksums, oracle unrolls the identical rounds.
   * ``mutual_best_match`` (X184) — reciprocal top-1 nearest neighbors
@@ -488,7 +488,7 @@ def _o_round_stats(rnd: int, rel: str) -> str:
 )
 def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X183: bounded k-core peeling of the co-purchase graph (k=100,
-    3 synchronous rounds via operators/graph.py::kcore_peel): each
+    3 synchronous rounds via operators/graph.py::kcore_degree_rounds): each
     round removes every part with fewer than 100 DISTINCT co-purchase
     partners, then re-checks — survivors of repeated peeling form the
     dense core (the bundle/spam-farm/community-nucleus signal; on a

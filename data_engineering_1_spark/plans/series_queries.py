@@ -7,10 +7,11 @@ numbers into a layout decision.
 
   * ``khop_copurchase_reach`` (X161) — minimum-hop BFS from a seed part
     set over the co-purchase graph, 3 synchronous frontier rounds
-    (operators/graph.py::bfs_hops); the oracle unrolls the SAME rounds
-    as CTEs and the per-hop (count, node-checksum) hash must match — the
-    third iterative graph algorithm under the strict gate (after X3's
-    connected components and X100's PageRank).
+    (operators/graph.py::bfs_hops, min-plus over unit costs); the
+    oracle unrolls the SAME rounds as CTEs and the per-hop (count,
+    node-checksum) hash must match — the third iterative graph
+    algorithm under the strict gate (after X3's connected components
+    and X100's PageRank).
   * ``degree_assortativity_copurchase`` (X162) — Pearson correlation of
     endpoint degrees across edges (do hubs link hubs?); exact
     DECIMAL(38,0) power sums over BIGINT degrees, one sqrt at the end.
@@ -73,8 +74,8 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _o_bfs_round(prev: str) -> str:
-    """One unrolled BFS round — the exact twin of
-    operators/graph.py:bfs_hops' loop body (min over BIGINT hops)."""
+    """One unrolled BFS round — the exact twin of one unit-cost round
+    of operators/graph.py:min_plus_hops (min over BIGINT hops)."""
     return f"""
         SELECT node, CAST(MIN(hop) AS BIGINT) AS hop FROM (
             SELECT node, hop FROM {prev}
@@ -113,13 +114,16 @@ def khop_copurchase_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, and the oracle unrolls the identical rounds as CTEs —
     min() over BIGINT hops is order-independent, so the match is exact.
 
-    Scale (operators/graph.py::bfs_hops): edges are pre-partitioned on
-    src ONCE and persisted; each round joins only the newly-discovered
-    frontier (<= |V| rows, far fewer after the expansion round) — the
-    frontier join is equi, map-side combinable, and round-for-round
-    identical to the full synchronous relaxation the oracle unrolls.
-    Hop count bounds work: k rounds = at most k small shuffles, never
-    an all-pairs closure."""
+    Scale (operators/graph.py::bfs_hops, a view of min_plus_hops over
+    unit costs): the edges are pre-partitioned on src ONCE into the
+    operator's one persisted working copy; each round joins only the
+    improvement frontier, which under unit costs is exactly the
+    newly-discovered node set (<= |V| rows, far fewer after the
+    expansion round), min-combines it and compares it against the
+    running min — one equi join and one map-side combinable aggregate
+    per round, round-for-round identical to the full synchronous
+    relaxation the oracle unrolls. Hop count bounds work: k rounds = at
+    most k small shuffles, never an all-pairs closure."""
     from ..operators.graph import bfs_hops
 
     edges = _copurchase_edges(spark, sf_dir)
