@@ -35,48 +35,8 @@ def vec_dot(a: Column | str, b: Column | str) -> Column:
     return F.aggregate(products, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def vec_dot_fixed(
-    a: Column | str, b: Column | str, dim: int, cast_elements: bool = True
-) -> Column:
-    """Dot product for arrays of KNOWN length ``dim``, unrolled into a flat
-    left-associated expression tree:
-
-        0.0 + a[1]*b[1] + a[2]*b[2] + ... + a[dim]*b[dim]
-
-    Bit-identical to ``vec_dot`` (aggregate is a left fold seeded with 0.0;
-    the leading ``0.0 +`` keeps even the -0.0 edge case identical), but the
-    whole expression is ordinary arithmetic — it stays inside whole-stage
-    codegen instead of the interpreted higher-order-function path.
-
-    Trade-off measured at sf0.1: the unrolled tree executes ~2x faster
-    than the fold but costs ~1-2 s of one-time Janino compilation for
-    dim=64, so it only wins when the kernel runs once per candidate PAIR
-    (quadratic evaluations); per-ROW usages (norms over the corpus, a
-    broadcast top-k against one query vector) amortize nothing and should
-    keep ``vec_dot``.
-
-    ``cast_elements=False`` skips the per-element ``cast(... as double)``
-    when the caller has already cast the whole array to array<double>
-    (one Cast node instead of 2*dim — SimplifyCasts does NOT remove the
-    redundant per-element casts, and the smaller tree compiles ~25%
-    faster; float->double is exact either way, so values are unchanged).
-    """
-    ca, cb = _c(a), _c(b)
-    out: Column = F.lit(0.0)
-    for i in range(1, dim + 1):
-        ea, eb = F.element_at(ca, i), F.element_at(cb, i)
-        if cast_elements:
-            ea, eb = ea.cast("double"), eb.cast("double")
-        out = out + ea * eb
-    return out
-
-
-def vec_norm(a: Column | str, dim: int | None = None) -> Column:
-    """L2 norm (sqrt is IEEE-correctly-rounded -> engine-portable).
-    Pass ``dim`` when the array length is known to get the codegen-friendly
-    unrolled kernel."""
-    if dim is not None:
-        return F.sqrt(vec_dot_fixed(a, a, dim))
+def vec_norm(a: Column | str) -> Column:
+    """L2 norm (sqrt is IEEE-correctly-rounded -> engine-portable)."""
     return F.sqrt(vec_dot(a, a))
 
 

@@ -1,23 +1,27 @@
-"""Lloyd's k-means over an embedding column — the iterative-algorithm
-pattern (X67) applied to float geometry.
+"""Lloyd's k-means over an embedding column on the 1e6 integer grid —
+the iterative-algorithm pattern (X67) applied to vector geometry.
+
+Inputs are quantized once (``quantize_grid``); after that every
+distance and centroid update is exact BIGINT arithmetic, so a DuckDB
+twin unrolling the same rounds reproduces the labels bit-exactly.
 
 The per-iteration shape is the one that survives 100 TB:
 
   assignment:   vectors x ONE broadcast row of all centroid arrays;
-                Euclidean distances reduced IN-ROW with
+                squared distances reduced IN-ROW with
                 transform + aggregate(zip_with(...)) and argmin via
                 array_min over (dist, label) structs — a map-side pass
                 with no shuffle and no aggregate at all (same
                 discipline as similarity.ivf_assign, which is the
                 dot-product special case of this assignment step);
-  update:       posexplode(vector) -> groupBy(label, pos).avg — ONE
-                map-side-combinable shuffle of |clusters| x dim rows.
+  update:       posexplode(vector) -> groupBy(label, pos) sum/count —
+                ONE map-side-combinable shuffle of |clusters| x dim rows.
 
 Iteration state (the centroid table) is k x dim — tiny — so each round
 re-broadcasts it; the vectors are scanned once per iteration and never
 shuffled. Deterministic init: the k lowest-id vectors seed the
 centroids (k-means++ would add a driver-side sampling loop; determinism
-matters more here than seeding quality, and the test pins convergence
+matters more here than seeding quality, and the test pins the labels
 against an independent numpy reference either way).
 """
 
@@ -37,162 +41,6 @@ def _centroid_arrays(centroids: DataFrame) -> DataFrame:
     )
 
 
-def assign(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Nearest-centroid assignment by squared Euclidean distance.
-
-    ALL k centroids collapse to ONE broadcast row holding an array of
-    (c_label, c_vec) structs; each vector computes every distance with
-    an in-row transform + aggregate(zip_with((x-y)^2)) and takes the
-    argmin with array_min over (dist, label) structs — ties
-    (measure-zero on float data) break to the smallest label
-    deterministically. Genuinely shuffle-free: no groupBy anywhere
-    (an earlier version crossed k rows then re-grouped by
-    (id, vector), which silently re-shuffled the whole vector table
-    per iteration AND demoted to SortAggregate on the array key —
-    pinned against regression by the no-Exchange plan test)."""
-    cent_one_row = F.broadcast(
-        _centroid_arrays(centroids).agg(
-            F.array_sort(
-                F.collect_list(F.struct("c_label", "c_vec"))
-            ).alias("cents")
-        )
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col),
-                        c["c_vec"],
-                        lambda x, y: (x.cast("double") - y)
-                        * (x.cast("double") - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, d: acc + d,
-                ).alias("dist"),
-                c["c_label"].alias("label"),
-            ),
-        )
-    )
-    return (
-        vectors.crossJoin(cent_one_row)
-        .select(id_col, vec_col, best.alias("best"))
-        .select(
-            id_col,
-            vec_col,
-            F.col("best.label").alias("label"),
-            F.col("best.dist").alias("sq_dist"),
-        )
-    )
-
-
-def kmeans_lloyd(
-    vectors: DataFrame,
-    k: int = 8,
-    n_iter: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> tuple[DataFrame, DataFrame]:
-    """Run ``n_iter`` Lloyd iterations; returns (assignment, centroids).
-
-    assignment: (id, label, sq_dist); centroids: (label, pos, val).
-    Each iteration: broadcast-assign (no shuffle) + one combinable
-    update shuffle of k x dim rows. The loop materializes only the
-    TINY centroid table per round (via its own aggregation); the
-    vector table is scanned per iteration, never cached mutably —
-    re-running the same plan is pure.
-
-    Empty-cluster semantics: a cluster that loses all members simply
-    drops out of the centroid table (k shrinks) — the standard Lloyd
-    variant. The numpy reference in the tests instead KEEPS the stale
-    centroid; the two agree exactly as long as no cluster empties,
-    which the assignment-equality test would expose if it ever
-    happened on a fixture."""
-    # deterministic seed: the k lowest-id vectors. Explode FIRST, then
-    # label with dense_rank — a window in the same select as a
-    # generator is evaluated over the already-exploded rows (one
-    # "label" per (vector, pos) — 1-element centroids; found the hard
-    # way), and the global window here runs on k x dim rows only.
-    seed = (
-        vectors.orderBy(id_col)
-        .limit(k)
-        .select(F.col(id_col), F.posexplode(vec_col).alias("pos", "val"))
-    )
-    init = seed.select(
-        (F.dense_rank().over(Window.orderBy(id_col)) - 1)
-        .cast("int")
-        .alias("label"),
-        "pos",
-        F.col("val").cast("double").alias("val"),
-    )
-    centroids = init
-    for _ in range(n_iter):
-        assigned = assign(vectors, centroids, vec_col=vec_col, id_col=id_col)
-        # Order-independent update (ADVICE r4): a plain float avg() is
-        # partial-aggregation-order dependent, so a boundary vector's
-        # label could flip between shuffle partitionings. Each component
-        # is rounded ONCE to DECIMAL(38,20) (deterministic, ~5e-21
-        # absolute — far below the double ulp at embedding magnitudes),
-        # summed EXACTLY in decimal (order-free), and divided once.
-        # decimal(38,20) leaves 18 integer digits: safe to ~1e18 members
-        # per cluster at unit-scale values. The non-ANSI double->decimal
-        # cast returns NULL on overflow (|v| >= ~1e18) and F.sum skips
-        # NULLs — which would silently DROP a rogue component from the
-        # mean (ADVICE r5). Count those nulls and raise_error instead,
-        # so an out-of-range vector fails the job loudly.
-        dec = F.col("v").cast("double").cast("decimal(38,20)")
-        centroids = (
-            assigned.select(
-                "label", F.posexplode(vec_col).alias("pos", "v")
-            )
-            .groupBy("label", "pos")
-            .agg(
-                F.sum(dec).alias("_s"),
-                F.count(F.lit(1)).alias("_n"),
-                F.sum(
-                    F.when(
-                        dec.isNull() & F.col("v").isNotNull(), 1
-                    ).otherwise(0)
-                ).alias("_overflow"),
-            )
-            .select(
-                "label",
-                "pos",
-                F.when(
-                    F.col("_overflow") > 0,
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                "kmeans: component overflows "
-                                "decimal(38,20) (|v| >= ~1e18) in "
-                                "cluster "
-                            ),
-                            F.col("label").cast("string"),
-                        )
-                    ).cast("double"),
-                )
-                .otherwise(
-                    F.col("_s").cast("double") / F.col("_n")
-                )
-                .alias("val"),
-            )
-            # k x dim rows: ACTUALLY materialize the per-round centroid
-            # table (the docstring always promised this; without it each
-            # round's assign re-ran every earlier round's assign+update,
-            # so the vector scan count grew with n_iter — 8 scans in the
-            # r13-before kmeans plans)
-            .localCheckpoint(eager=True)
-        )
-    final = assign(vectors, centroids, vec_col=vec_col, id_col=id_col)
-    return final, centroids
-
-
 def quantize_grid(vec_col: str = "embedding"):
     """Column expression: float vector -> 1e6-grid BIGINT vector.
 
@@ -200,8 +48,7 @@ def quantize_grid(vec_col: str = "embedding"):
     bits followed by a half-away-from-zero integer round both engines
     agree on (the _discipline.r6_exact argument) — after this, every
     distance and centroid update below is EXACT integer arithmetic,
-    which is what makes the grid variant cross-engine hash-matchable
-    where the float variant is rows-only."""
+    which is what makes the clustering cross-engine hash-matchable."""
     return F.transform(
         F.col(vec_col),
         lambda x: F.round(x.cast("double") * 1000000, 0).cast("bigint"),
@@ -209,12 +56,11 @@ def quantize_grid(vec_col: str = "embedding"):
 
 
 def _assign_grid(qvectors: DataFrame, centroids: DataFrame, id_col: str) -> DataFrame:
-    """Integer twin of assign(): nearest centroid by EXACT squared
-    grid distance; argmin over (dist, label) structs breaks ties to
-    the smallest label — and integer ties actually happen, unlike the
-    measure-zero float case, so the explicit break carries the
-    determinism. Same shuffle-free shape: one broadcast row of all
-    centroids, in-row zip_with reduction."""
+    """Nearest centroid by EXACT squared grid distance; argmin over
+    (dist, label) structs breaks ties to the smallest label — integer
+    ties actually happen, so the explicit break carries the
+    determinism. Shuffle-free: one broadcast row of all centroids,
+    in-row zip_with reduction, no groupBy on the vector side."""
     cent_one_row = F.broadcast(
         _centroid_arrays(centroids).agg(
             F.array_sort(
@@ -258,19 +104,23 @@ def kmeans_lloyd_grid(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> tuple[DataFrame, DataFrame]:
-    """Lloyd's k-means on the 1e6 integer grid — the hash-matchable
-    variant (VERDICT r11 #3).
+    """Run ``n_iter`` Lloyd iterations on the 1e6 integer grid;
+    returns (assignment, centroids).
 
-    Same plan shape as kmeans_lloyd (broadcast shuffle-free assign +
-    one combinable kxdim update shuffle per round), but every number
-    after the input quantization is an exact BIGINT: distances are
-    integer sums of squares, and the centroid update rounds the mean
-    back onto the grid with the half-away-from-zero integer division
-    from _discipline.r6_fp — so a DuckDB twin unrolling the same
-    rounds reproduces the labels BIT-exactly, boundary vectors
-    included. Quantization error vs the float variant is <=5e-7 per
-    component — far below the inter-centroid scale of any real
-    embedding space. Seeds: the k lowest-id vectors, like the float
+    assignment: (id, qv, label, sq_dist BIGINT); centroids: (label,
+    pos, val BIGINT). Each round is a broadcast shuffle-free assign +
+    one combinable k x dim update shuffle. Every number after the
+    input quantization is an exact BIGINT: distances are integer sums
+    of squares, and the centroid update rounds the mean back onto the
+    grid with the half-away-from-zero integer division from
+    _discipline.r6_fp — so a DuckDB twin unrolling the same rounds
+    reproduces the labels BIT-exactly, boundary vectors included.
+    Quantization error is <=5e-7 per component — far below the
+    inter-centroid scale of any real embedding space. Seeds: the k
+    lowest-id vectors.
+
+    Empty-cluster semantics: a cluster that loses all members drops
+    out of the centroid table (k shrinks) — the standard Lloyd
     variant."""
     # NOT materialized: re-running the vectorized parquet scan + grid
     # cast per consumer is cheaper than storing boxed array rows in the
@@ -278,6 +128,11 @@ def kmeans_lloyd_grid(
     # sf0.1 bench — deserialized MEMORY_AND_DISK blocks box every array
     # element, while the columnar scan is nearly free)
     qv = vectors.select(id_col, quantize_grid(vec_col).alias("qv"))
+    # deterministic seed: the k lowest-id vectors. Explode FIRST, then
+    # label with dense_rank — a window in the same select as a
+    # generator is evaluated over the already-exploded rows (one
+    # "label" per (vector, pos) — 1-element centroids), and the global
+    # window here runs on k x dim rows only.
     seed = (
         qv.orderBy(id_col)
         .limit(k)

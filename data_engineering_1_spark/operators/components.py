@@ -38,22 +38,16 @@ driver.
   without it the plan doubles per round and analysis time dominates.
   (On a real cluster with a checkpoint dir, ``checkpoint()`` to
   reliable storage is the durable equivalent.)
-- Convergence (r14, VERDICT r13 #1): the authoritative check — every
-  ORIGINAL edge must connect two identically-labeled nodes — is FUSED
-  into the round's single action (a crossJoin of two 1-row aggregates)
-  whenever the check is cheap relative to the round: small graphs
-  (below ``_FUSED_CHECK_MAX_EDGES``), or once the contraction has
-  nearly stalled (<10% edge-count shrink — the near-fixpoint tail).
+- Convergence: the authoritative check — every ORIGINAL edge must
+  connect two identically-labeled nodes — is fused into the round's
+  single action (a crossJoin of two 1-row aggregates), every round.
   ``bad == 0`` holds IFF the edge set is a disjoint union of stars
   rooted at component minima (labels equal along every original edge
   force one label per component; the minimum can never acquire a
   parent, so that label is the minimum), so the loop exits at the TRUE
-  fixpoint round — one round earlier than the old fingerprint-equality
-  scheme (which needed an extra no-op round to observe stability, plus
-  a separate confirm action). On huge graphs in the still-contracting
-  phase the check is skipped (it re-joins the full original edge set,
-  which would turn O(Σ|E_t|) total work into O(rounds x |E|)) and the
-  old fingerprint + standalone-check path remains as the exit.
+  fixpoint round. The check re-joins the full original edge set each
+  round, so total work is O(rounds x |E|) on top of the contraction's
+  O(Σ|E_t|).
 - If the loop hits ``max_iter`` without passing the authoritative
   check, the function RAISES rather than returning non-converged
   labels: a silently wrong clustering is strictly worse than a loud
@@ -73,14 +67,6 @@ from pyspark.sql import functions as F
 # One shuffle partition per this many edges; tiny graphs collapse to a
 # single dense task, billion-edge graphs fan out.
 _EDGES_PER_PARTITION = 1_000_000
-
-# Below this many (deduped) input edges the fused per-round convergence
-# check costs far less than the round's own job floor, so run it every
-# round and exit at the true fixpoint. Above it, the check (two joins
-# over the FULL original edge set) only fuses in once the per-round
-# edge-count shrink drops under 10% — the near-fixpoint tail — so the
-# still-contracting phase of a 100 TB graph never pays O(rounds x |E|).
-_FUSED_CHECK_MAX_EDGES = 10_000_000
 
 
 def _min_nbrs(sym: DataFrame) -> DataFrame:
@@ -170,21 +156,9 @@ def connected_components(
             .agg(F.count(F.lit(1)).alias("bad"))
         )
 
-    prev_fp = None
-    prev_n: int | None = None  # edge count of the last round
-    prev2_n: int | None = None  # ... and the round before it
     prev_ckpt: DataFrame | None = None
     converged = False
     for _ in range(max_iter):
-        # Fuse the authoritative check into this round's action when it
-        # is cheap relative to the round (small graph) or the
-        # contraction has nearly stalled (near fixpoint) — module
-        # docstring, convergence bullet.
-        fuse_check = n_edges <= _FUSED_CHECK_MAX_EDGES or (
-            prev_n is not None
-            and prev2_n is not None
-            and 10 * prev_n >= 9 * prev2_n
-        )
         # ---- large-star: (v, m(u)) for every neighbor v > u --------
         sym = _symmetrize(ee)
         large = (
@@ -211,20 +185,16 @@ def connected_components(
             .distinct()
             .localCheckpoint(eager=False)
         )
-        # One action per round: materializes both lazy checkpoints and
-        # yields the convergence fingerprint — plus, when fused, the
-        # authoritative violation count (both subtrees read the SAME
-        # checkpointed `small` RDD, so it is computed once).
-        stats = small.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
-            F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
+        # One action per round: the full count materializes both lazy
+        # checkpoints (the violation scan may stop at its first hit),
+        # and the authoritative violation count rides the same job
+        # (both subtrees read the SAME checkpointed `small` RDD, so it
+        # is computed once).
+        row = (
+            small.agg(F.count(F.lit(1)).alias("n"))
+            .crossJoin(_violations(small))
+            .first()
         )
-        if fuse_check:
-            row = stats.crossJoin(_violations(small)).first()
-        else:
-            row = stats.first()
-        fp = (row["n"], row["su"], row["sv"])
         # small is materialized: the round's large blocks and the
         # previous round's star set are dead — free them now or the
         # loop leaks one checkpoint per round.
@@ -232,19 +202,9 @@ def connected_components(
         if prev_ckpt is not None:
             prev_ckpt.unpersist()
         prev_ckpt, ee = ee if ee is not orig else None, small
-        if fuse_check:
-            if row["bad"] == 0:
-                converged = True
-                break
-        elif fp == prev_fp:
-            # Gate miss (huge graph, still-shrinking fingerprint went
-            # stable): standalone authoritative check, once per stable
-            # fingerprint, exactly the pre-r14 exit path.
-            if _violations(ee).first()["bad"] == 0:
-                converged = True
-                break
-        prev_fp = fp
-        prev2_n, prev_n = prev_n, int(row["n"])
+        if row["bad"] == 0:
+            converged = True
+            break
     if not converged:
         orig.unpersist()
         raise RuntimeError(

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from ..functions.vector import (
     literal_norm,
     vec_dot,
-    vec_dot_fixed,
     vec_literal,
     vec_norm,
 )
@@ -35,31 +34,21 @@ from ..functions.vector import (
 DEFAULT_TOP_K = 5  # reference default: src/vector_store.py:152, main.py:99
 
 
-def with_norm(
-    df: DataFrame, vec_col: str, out_col: str, dim: int | None = None
-) -> DataFrame:
+def with_norm(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
     """Precompute the L2 norm once per vector *before* any pairwise join.
 
     cosine(a,b) = dot(a,b) / (|a| * |b|): |a| and |b| are per-vector, so
     computing them inside an n^2 pair join wastes 2/3 of the kernel work.
     The precomputed value is the same double the per-pair expression would
     produce (pure function of the array), so oracle hashes are unaffected.
-    Pass ``dim`` when known to use the unrolled codegen kernel.
     """
-    return df.withColumn(out_col, vec_norm(vec_col, dim))
+    return df.withColumn(out_col, vec_norm(vec_col))
 
 
-def paired_cosine(
-    vec_a: str, vec_b: str, norm_a: str, norm_b: str, dim: int | None = None
-) -> F.Column:
+def paired_cosine(vec_a: str, vec_b: str, norm_a: str, norm_b: str) -> F.Column:
     """dot/(norm_a*norm_b) with precomputed norms — bit-identical to
-    cosine_similarity(vec_a, vec_b). ``dim`` selects the unrolled kernel."""
-    dot = (
-        vec_dot_fixed(vec_a, vec_b, dim)
-        if dim is not None
-        else vec_dot(vec_a, vec_b)
-    )
-    return dot / (F.col(norm_a) * F.col(norm_b))
+    cosine_similarity(vec_a, vec_b)."""
+    return vec_dot(vec_a, vec_b) / (F.col(norm_a) * F.col(norm_b))
 
 
 def topk_by_cosine(
@@ -69,7 +58,6 @@ def topk_by_cosine(
     vec_col: str = "embedding",
     query_vec_col: str = "query_vec",
     id_col: str = "vec_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine search for one query: a driver-held vector or,
     for queries derived from a table, a 1-row DataFrame (same values).
@@ -88,22 +76,18 @@ def topk_by_cosine(
     if norm_col in vectors.columns:
         norm_v = F.col(norm_col)
     else:
-        norm_v = vec_norm(vec_col, dim)
+        norm_v = vec_norm(vec_col)
     keep = [c for c in vectors.columns if c != norm_col]
     if isinstance(query, DataFrame):
         side = vectors.crossJoin(
-            F.broadcast(with_norm(query, query_vec_col, "__norm_q", dim))
+            F.broadcast(with_norm(query, query_vec_col, "__norm_q"))
         )
         keep += [c for c in query.columns if c != query_vec_col]
         qvec, norm_q = F.col(query_vec_col), F.col("__norm_q")
     else:
         side = vectors
         qvec, norm_q = vec_literal(query), F.lit(literal_norm(query))
-    dot = (
-        vec_dot_fixed(vec_col, qvec, dim)
-        if dim is not None
-        else vec_dot(vec_col, qvec)
-    )
+    dot = vec_dot(vec_col, qvec)
     cosine = F.round(dot / (norm_v * norm_q), 6).alias("cosine_sim")
     return (
         side.select(*keep, cosine)
@@ -120,7 +104,6 @@ def knn_join(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     id_col: str = "vec_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """E5: every query row -> its k nearest neighbors (excluding itself
     when ids collide). Queries broadcast; ranking is one shuffle on
@@ -133,18 +116,16 @@ def knn_join(
     the |pairs|-sized window shuffle below — and the broadcast side
     joins identically under any layout."""
     scored = (
-        with_norm(vectors, vec_col, "__norm_v", dim)
+        with_norm(vectors, vec_col, "__norm_v")
         .repartition(F.col(id_col))
         .crossJoin(
-            F.broadcast(with_norm(queries, query_vec_col, "__norm_q", dim))
+            F.broadcast(with_norm(queries, query_vec_col, "__norm_q"))
         )
         .filter(F.col(id_col) != F.col(query_id_col))
         .withColumn(
             "cosine_sim",
             F.round(
-                paired_cosine(
-                    vec_col, query_vec_col, "__norm_v", "__norm_q", dim
-                ),
+                paired_cosine(vec_col, query_vec_col, "__norm_v", "__norm_q"),
                 6,
             ),
         )
@@ -165,7 +146,6 @@ def cosine_neardup_pairs_bucketed(
     bucket_col: str = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
     max_bucket_rows: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs WITHIN buckets: all (a, b) with
@@ -173,9 +153,8 @@ def cosine_neardup_pairs_bucketed(
 
     The bucket key (IVF cluster / LSH band / shard key) bounds the
     quadratic pair blow-up: rows shuffle ONCE on the bucket and all
-    pairing happens within a bucket's group. ``dim`` is accepted for
-    backward compatibility and ignored (the kernel reads the width from
-    the data).
+    pairing happens within a bucket's group. The kernel reads the
+    vector width from the data.
 
     ``max_bucket_rows`` is the skew guard: within-bucket pairing is
     O(b^2), so one hot bucket can dominate the whole job. When set,
@@ -332,8 +311,8 @@ def ivf_assign(
     """
     # vectors quantize to the 1e8 grid, centroids (already on the 1e6
     # grid from label_centroids' round-6 mean, or quantized here for
-    # arbitrary float centroids like kmeans_lloyd's — the same round-6
-    # the old decimal(12,6) cast applied) to the 1e6 grid: after that
+    # any other float centroids — the same round-6 the old
+    # decimal(12,6) cast applied) to the 1e6 grid: after that
     # every dot is an exact BIGINT and the argmax is tie-free across
     # engines. The r12 30x sweep caught the previous float->decimal
     # cast diverging 1e-8 between engines (string-repr vs binary

@@ -534,52 +534,15 @@ def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MBM_Q = 1_000_000
 _MBM_B = 8  # anchor pair-join blocks; the grid has B*(B+1)/2 = 36 keys
-# Leg policy (r11, measurement-driven reversal of r10's auto swap):
-# the IVF leg's pair recall is a property of the CORPUS, not the
-# operator — tools/mbm_recall.py measured recall 1.0 (any nprobe) on
-# the 10x plain-stacked fixture, where mutual pairs are true
-# near-duplicates sharing cells, but only 0.20-0.49 (nprobe 2-8, both
-# label-column and learned k-means cells) on the 30x
-# constant-duplicate-density fixture, whose decorrelated space has no
-# structure a coarse quantizer can exploit (the standard
-# high-dimensional IVF recall@1 failure). Auto mode therefore NEVER
-# silently serves the approximation: past _MBM_IVF_MIN_ANCHORS it
-# stays exact and warns that the quadratic leg is engaged, pointing at
-# the opt-in. SPARK_GRAFT_MBM_MODE=ivf enables the IVF leg for corpora
-# whose recall has been MEASURED acceptable with tools/mbm_recall.py
-# (near-dup-structured corpora — the production bitext/near-dup mining
-# case — measure 1.0 and run 2.9x faster at 30x).
-#
-# Break-even (r13, closing the r11 #4 thread): the symmetric
-# ivf-rescore leg WINS on clustered corpora — 30x plain-stacked,
-# 12k anchors, K=32, nprobe=1: recall 1.0 in 97.6 s vs 157.8 s exact
-# solo (1.62x) — and LOSES on decorrelated ones (same anchors, 0.95
-# recall only at >= the exact wall; mbm_recall_curves.json has both
-# curves). Recall is a corpus property, so the serving rule stands:
-# exact + SHUFFLE_HASH below ~10-20k anchors or for unmeasured
-# corpora; ivf-rescore is the opt-in once tools/mbm_recall.py shows
-# recall ~1.0 at small nprobe on YOUR corpus, and its advantage grows
-# with anchor count (candidates ~ nprobe^2/K of exact's pair space).
-_MBM_IVF_MIN_ANCHORS = 5_000
-# The coarse quantizer is _MBM_IVF_K k-means cells fitted on the
-# anchors themselves (r11; r10 used the fixture's label column, which
-# does not exist in production corpora). nprobe=4 of 32 cells is the
-# measured curve's knee on the stacked fixture; on decorrelated data
-# no small nprobe is acceptable — see the policy note above.
-_MBM_IVF_K = 32
-_MBM_IVF_NPROBE = 4  # of _MBM_IVF_K learned cells
 
 
 def _mbm_anchor_qvecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The anchor subset (vec_id % 5 = 0) with its exactly-quantized
-    BIGINT vector (round(v * 1e6), the X173 grid) — shared by both
-    pair-enumeration legs so their dot products are bit-identical."""
+    BIGINT vector (round(v * 1e6), the X173 grid)."""
     return load_table(spark, sf_dir, "embeddings").where(
         F.col("vec_id") % 5 == 0
     ).select(
         "vec_id",
-        "embedding",
-        "label",
         F.transform(
             "embedding",
             lambda v: F.round(v.cast("double") * _MBM_Q, 0).cast("bigint"),
@@ -602,7 +565,7 @@ def _mbm_pair_dot() -> F.Column:
 
 
 def _mbm_mutual_top1(dots: DataFrame) -> DataFrame:
-    """Shared tail of both legs: per-va top-1 (dot DESC, vb ASC — total
+    """Per-va top-1 (dot DESC, vb ASC — total
     under exact integers) over a DIRECTED (va, vb, dot) candidate
     relation, then the reciprocity self-join keeps a pair only when
     each side is the other's best."""
@@ -674,225 +637,6 @@ def _mbm_exact_dots(spark: SparkSession, qv: DataFrame) -> DataFrame:
     )
 
 
-def _mbm_ivf_dots(qv: DataFrame, nprobe: int | None = None) -> DataFrame:
-    """IVF candidate enumeration — the X37 stored-index shape feeding
-    the mutual-rank filter (the scale path the exact leg's docstring
-    promised): _MBM_IVF_K k-means cells LEARNED on the anchors
-    (`kmeans_lloyd`, deterministic seed + exact-decimal updates),
-    per-anchor probe list of the ``nprobe`` best cells (`ivf_assign`,
-    n_best=nprobe — exactly `ivf_knn_join`'s probe stage), and the
-    candidate join lands probe x assignment on the cell key, so each
-    anchor scores only ~nprobe/_MBM_IVF_K of the corpus. The dot is the
-    SAME exact quantized fold as the exact leg, so at
-    nprobe = _MBM_IVF_K every surviving cell is probed, the candidate
-    set degenerates to all ordered pairs, and the result is bit-equal
-    to the exact leg (the X23 degeneracy pin, enforced by
-    tests/test_mbm_ivf.py). Learned cells replaced r10's label-column
-    centroids after the 30x recall measurement (see _MBM_IVF_K note).
-    ``nprobe`` defaults to the module global AT CALL TIME so
-    test/operator overrides of _MBM_IVF_NPROBE reach the declared query
-    (ADVICE r10)."""
-    from ..operators.clustering import kmeans_lloyd
-    from ..operators.similarity import ivf_assign
-
-    if nprobe is None:
-        nprobe = _MBM_IVF_NPROBE
-
-    vecs = qv.select("vec_id", "embedding")
-    _, km_cents = kmeans_lloyd(vecs, k=_MBM_IVF_K, n_iter=3)
-    cents = km_cents.select(
-        "label", "pos", F.col("val").alias("centroid_val")
-    )
-    assign = ivf_assign(vecs, cents).select("vec_id", "assigned_label")
-    probe = ivf_assign(vecs, cents, n_best=nprobe).select(
-        "vec_id", "assigned_label"
-    )
-    qarr = qv.select("vec_id", "qvec")
-    left = probe.join(qarr, "vec_id").select(
-        F.col("vec_id").alias("va"),
-        F.col("qvec").alias("qa"),
-        "assigned_label",
-    )
-    right = assign.join(qarr, "vec_id").select(
-        F.col("vec_id").alias("vb"),
-        F.col("qvec").alias("qb"),
-        "assigned_label",
-    )
-    # vb holds exactly one assigned label and va probes nprobe DISTINCT
-    # labels, so each directed (va, vb) appears at most once — no dedup.
-    # SHUFFLE_HASH for the same reason as _mbm_exact_dots: the cell key
-    # must SPREAD the candidate work; a broadcast would serialize it
-    # into the left side's (possibly single) input partition.
-    return (
-        left.join(right.hint("SHUFFLE_HASH"), "assigned_label")
-        .where(F.col("va") != F.col("vb"))
-        .select("va", "vb", _mbm_pair_dot())
-    )
-
-
-def _mbm_ivf_rescore_dots(qv: DataFrame, nprobe: int | None = None) -> DataFrame:
-    """IVF MULTI-PROBE candidate enumeration + exact rescore (VERDICT
-    r11 #4 — the X112 coarse-candidates/exact-rescore shape applied to
-    MBM's recall problem): BOTH sides of the candidate join expand to
-    their ``nprobe`` best cells, so a pair becomes a candidate when the
-    two probe lists intersect ANYWHERE — where _mbm_ivf_dots demands
-    the single assigned cell of vb be among va's probes. On
-    decorrelated corpora that one-sided test is exactly what collapses
-    (the r11 curves: recall 0.28 at nprobe=1 because mutual-best pairs
-    straddle cell boundaries); two near vectors' top-nprobe cell RANK
-    lists overlap far more reliably than their argmin cells coincide —
-    see the r12 curve in mbm_recall_curves.json for the measured
-    recall on the 30x decorrelated fixture.
-
-    Cost: candidates ~ N^2 * nprobe^2 / K ordered pairs (nprobe=4,
-    K=32: HALF the exact leg's), each scored with the same exact
-    quantized fold — the 'rescore' is exact, so the only approximation
-    is candidate RECALL, never score error. A pair sharing several
-    probed cells is emitted once per shared cell; duplicates carry the
-    identical exact dot, so the downstream argmax is unaffected and a
-    distinct() shuffle would cost more than the duplicate folds."""
-    from ..operators.clustering import kmeans_lloyd
-    from ..operators.similarity import ivf_assign
-
-    if nprobe is None:
-        nprobe = _MBM_IVF_NPROBE
-    vecs = qv.select("vec_id", "embedding")
-    _, km_cents = kmeans_lloyd(vecs, k=_MBM_IVF_K, n_iter=3)
-    cents = km_cents.select(
-        "label", "pos", F.col("val").alias("centroid_val")
-    )
-    probe = ivf_assign(vecs, cents, n_best=nprobe).select(
-        "vec_id", "assigned_label"
-    )
-    qarr = qv.select("vec_id", "qvec")
-    left = probe.join(qarr, "vec_id").select(
-        F.col("vec_id").alias("va"),
-        F.col("qvec").alias("qa"),
-        "assigned_label",
-    )
-    right = probe.join(qarr, "vec_id").select(
-        F.col("vec_id").alias("vb"),
-        F.col("qvec").alias("qb"),
-        "assigned_label",
-    )
-    # SHUFFLE_HASH: same single-task broadcast hazard as the other two
-    # candidate joins — the cell key must spread the pair work
-    return (
-        left.join(right.hint("SHUFFLE_HASH"), "assigned_label")
-        .where(F.col("va") != F.col("vb"))
-        .select("va", "vb", _mbm_pair_dot())
-    )
-
-
-# auto-mode embedding counts, memoized per (applicationId, sf_dir) —
-# every other relation in the edgecache/sigcache discipline memoizes;
-# this one-row job should not re-run per invocation (ADVICE r10).
-_MBM_COUNT_CACHE: dict[tuple[str, str], int] = {}
-
-
-def _mbm_embedding_count(spark: SparkSession, sf_dir: str) -> int:
-    import os
-
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    if key not in _MBM_COUNT_CACHE:
-        _MBM_COUNT_CACHE[key] = load_table(
-            spark, sf_dir, "embeddings"
-        ).count()
-    return _MBM_COUNT_CACHE[key]
-
-
-def _mbm_leg(spark: SparkSession, sf_dir: str) -> str:
-    """Leg selection: SPARK_GRAFT_MBM_MODE =
-    exact | ivf | ivf-rescore | auto.
-
-    Auto (the default) ALWAYS runs the exact leg — the r11 recall
-    measurement showed the one-sided IVF approximation's pair recall
-    is corpus-dependent (1.0 on near-dup-structured data, 0.2-0.5 on
-    decorrelated data; see the module policy note), so silently
-    swapping semantics on a size threshold serves wrong-ish answers on
-    exactly the corpora that can't tolerate it. Past
-    _MBM_IVF_MIN_ANCHORS auto warns that the quadratic leg is engaged
-    at scale and points at the measured opt-ins (the count is a
-    memoized parquet-metadata job). SPARK_GRAFT_MBM_MODE=ivf-rescore
-    (r12) is the higher-recall opt-in — symmetric multi-probe
-    candidates recover recall on decorrelated corpora (measured
-    0.95-0.97 at nprobe 5/K=32 and 7/K=64 on the 30x fixture, vs
-    0.2-0.5 one-sided), though at 12k anchors candidate duplication
-    keeps its wall AT OR ABOVE the exact leg's — it pays off on
-    clustered corpora or anchor counts where N^2 dwarfs the index
-    cost; =ivf keeps the cheapest one-sided probe for corpora whose
-    recall tools/mbm_recall.py has measured 1.0."""
-    import os
-    import warnings
-
-    mode = os.environ.get("SPARK_GRAFT_MBM_MODE", "auto").strip().lower()
-    mode = mode.replace("_", "-")
-    if mode in {"exact", "ivf", "ivf-rescore"}:
-        return mode
-    if _mbm_embedding_count(spark, sf_dir) // 5 >= _MBM_IVF_MIN_ANCHORS:
-        warnings.warn(
-            "mutual_best_match is running the EXACT quadratic leg on "
-            f">= {_MBM_IVF_MIN_ANCHORS} anchors. The approximate legs "
-            f"(SPARK_GRAFT_MBM_MODE=ivf-rescore or ivf; "
-            f"nprobe={_MBM_IVF_NPROBE} of {_MBM_IVF_K} learned cells) "
-            "are faster but their pair recall is corpus-dependent — "
-            "measure it on YOUR corpus with tools/mbm_recall.py before "
-            "opting in (see mbm_recall_curves.json: one-sided ivf "
-            "collapses to 0.2-0.5 on decorrelated corpora while "
-            "measuring 1.0 on near-dup-structured ones; ivf-rescore "
-            "measures 0.95-0.97 there at nprobe 5/K=32 or 7/K=64)",
-            stacklevel=3,
-        )
-    return "exact"
-
-
-def mbm_ivf_pair_recall(
-    spark: SparkSession,
-    sf_dir: str,
-    nprobe: int | None = None,
-    leg: str = "ivf",
-) -> DataFrame:
-    """Evaluation query for the MBM IVF swap (VERDICT r10 #4 — the
-    X174 discipline applied to X184): pair recall of the IVF leg
-    against the exact leg's mutual-best pairs on the SAME anchors.
-    One row: (nprobe, n_exact, n_ivf, n_common, recall) with recall =
-    |IVF ∩ exact| / |exact| rounded 6. Not a declared query (it prices
-    an approximation, there is no oracle to match) — it is the
-    measurement behind the documented default nprobe: run it at the
-    scales where auto takes the IVF leg (tools/mbm_recall.py drives
-    10x/30x) and pick nprobe from the curve."""
-    if nprobe is None:
-        nprobe = _MBM_IVF_NPROBE
-    dots_fn = (
-        _mbm_ivf_rescore_dots
-        if leg.replace("_", "-") == "ivf-rescore"
-        else _mbm_ivf_dots
-    )
-    qv = _mbm_anchor_qvecs(spark, sf_dir)
-    exact = _mbm_mutual_top1(_mbm_exact_dots(spark, qv)).select(
-        "vec_a", "vec_b"
-    )
-    ivf = _mbm_mutual_top1(dots_fn(qv, nprobe)).select(
-        "vec_a", "vec_b"
-    )
-    common = exact.join(ivf, ["vec_a", "vec_b"], "inner")
-    return (
-        exact.agg(F.count("*").alias("n_exact"))
-        .crossJoin(ivf.agg(F.count("*").alias("n_ivf")))
-        .crossJoin(common.agg(F.count("*").alias("n_common")))
-        .select(
-            F.lit(nprobe).alias("nprobe"),
-            "n_exact",
-            "n_ivf",
-            "n_common",
-            F.round(
-                F.col("n_common") / F.greatest(F.col("n_exact"), F.lit(1)),
-                6,
-            ).alias("recall"),
-        )
-    )
-
-
 @declared_query(
     "mutual_best_match",
     oracle=f"""
@@ -934,28 +678,11 @@ def mutual_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     X173 grid), so every dot product is an exact integer and the
     top-1 argmax (dot DESC, vec_id ASC) is total.
 
-    Scale shape (r9 exact leg, r10 IVF leg): the exact leg enumerates
-    every unordered anchor pair through the literal (b1 <= b2)
-    pair-block grid (_mbm_exact_dots — 36 broadcast grid rows, one
-    codegen'd in-row dot per pair); honest but quadratic in anchors
-    (the 30x probe measured 346 s). SPARK_GRAFT_MBM_MODE=ivf opts in
-    to the X37 IVF candidate enumeration (_mbm_ivf_dots — learned
-    k-means cells, per-anchor nprobe-best probe list, candidate join
-    on the cell key) with the SAME mutual-rank filter and the SAME
-    exact quantized dot on top, so per-anchor work drops to
-    ~nprobe/_MBM_IVF_K of the corpus. At nprobe = _MBM_IVF_K the IVF
-    leg is bit-equal to the exact leg (tests/test_mbm_ivf.py pins it);
-    at the default nprobe it is the standard IVF recall trade, whose
-    recall is CORPUS-DEPENDENT — measured 1.0 on near-dup-structured
-    data and 0.2-0.5 on decorrelated data (tools/mbm_recall.py, the
-    r11 curves), which is why auto mode never takes it silently (see
-    _mbm_leg). Parity always exercises the exact leg."""
+    Scale shape: every unordered anchor pair is enumerated through the
+    literal (b1 <= b2) pair-block grid (_mbm_exact_dots — 36 broadcast
+    grid rows, one codegen'd in-row dot per pair); exact but quadratic
+    in anchors (the 30x probe measured 346 s). Approximate IVF
+    candidate legs were measured at 0.2-0.5 pair recall on
+    decorrelated corpora and are not offered."""
     qv = _mbm_anchor_qvecs(spark, sf_dir)
-    leg = _mbm_leg(spark, sf_dir)
-    if leg == "ivf":
-        dots = _mbm_ivf_dots(qv)
-    elif leg == "ivf-rescore":
-        dots = _mbm_ivf_rescore_dots(qv)
-    else:
-        dots = _mbm_exact_dots(spark, qv)
-    return _mbm_mutual_top1(dots)
+    return _mbm_mutual_top1(_mbm_exact_dots(spark, qv))

@@ -1075,20 +1075,14 @@ def _o_kmeans_round(i: int) -> str:
 def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means (X67): two iterations from the deterministic
     lowest-id seed over the embeddings table, emitting (vec_id,
-    label) — hash-matched against an unrolled DuckDB twin since r12.
+    label) — hash-matched against an unrolled DuckDB twin.
 
-    Rows-only until r11 because the float variant's in-row distance
-    reductions could legitimately flip a boundary assignment in the
-    last ulp between engines. The declared query now runs the GRID
-    variant (operators/clustering.kmeans_lloyd_grid): inputs quantized
-    once to the 1e6 integer grid, after which every distance and
-    centroid update is exact BIGINT arithmetic with the r6_fp
+    operators/clustering.kmeans_lloyd_grid quantizes the inputs once
+    to the 1e6 integer grid, after which every distance and centroid
+    update is exact BIGINT arithmetic with the r6_fp
     half-away-from-zero mean rounding — bit-identical labels on both
-    engines, boundary vectors included, at any fixture scale. The
-    full-float kmeans_lloyd stays the library operator (MBM quantizer,
-    tests/test_clustering.py numpy pins); the grid twin is pinned
-    against it by test (labels agree on the fixture) so the oracle
-    upgrade did not change the clustering."""
+    engines, boundary vectors included, at any fixture scale
+    (tests/test_clustering.py pins it to an integer numpy Lloyd)."""
     from ..operators.clustering import kmeans_lloyd_grid
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -64,11 +64,11 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Wide unrolled kernels (functions.vector.vec_dot_fixed) generate
-        # single methods past HotSpot's 8 KB JIT cutoff; without this flag
-        # they run in the bytecode interpreter (measured 2.4x slower on
-        # the pairwise-cosine query). Extra code cache keeps the JIT from
-        # flushing hot compiled query stages.
+        # Whole-stage codegen can emit single methods past HotSpot's 8 KB
+        # JIT cutoff; without this flag they run in the bytecode
+        # interpreter (a wide unrolled kernel measured 2.4x slower).
+        # Extra code cache keeps the JIT from flushing hot compiled
+        # query stages.
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=512m",

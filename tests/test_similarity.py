@@ -207,12 +207,8 @@ class TestStoredNorm:
             [-0.0, 3.0, -4.0],
         ]
         for v in vecs:
-            fold, unrolled = spark.range(1).select(
-                vec_norm(vec_literal(v)), vec_norm(vec_literal(v), len(v))
-            ).first()
-            want = struct.pack("<d", literal_norm(v))
-            assert struct.pack("<d", fold) == want
-            assert struct.pack("<d", unrolled) == want
+            got = spark.range(1).select(vec_norm(vec_literal(v))).first()[0]
+            assert struct.pack("<d", got) == struct.pack("<d", literal_norm(v))
 
     def test_same_topk_with_and_without_stored_norm(self, emb):
         from data_engineering_1_spark.functions.embedding import (
@@ -227,12 +223,11 @@ class TestStoredNorm:
             hash_embed_texts(pd.Series(["distributed query engine"]))[0],
             qdf,
         ):
-            for dim in (None, 64):
-                with_norm = topk_by_cosine(stored, q, k=5, dim=dim)
-                without = topk_by_cosine(emb, q, k=5, dim=dim)
-                assert with_norm.columns == without.columns
-                assert "embedding_norm" not in with_norm.columns
-                assert with_norm.collect() == without.collect()
+            with_norm = topk_by_cosine(stored, q, k=5)
+            without = topk_by_cosine(emb, q, k=5)
+            assert with_norm.columns == without.columns
+            assert "embedding_norm" not in with_norm.columns
+            assert with_norm.collect() == without.collect()
 
 
 def test_knn_join_excludes_self(vec_df):
@@ -279,19 +274,6 @@ class TestApproxLSH:
         assert all(b - a == 100 for a, b in got)
 
 
-def test_unrolled_dot_bit_identical_to_fold(vec_df):
-    """vec_dot_fixed must produce the exact double vec_dot produces (same
-    left-fold addition order), since declared-query oracles assume it."""
-    from data_engineering_1_spark.functions.vector import vec_dot_fixed
-
-    rows = vec_df.select(
-        vec_dot("embedding", "embedding").alias("fold"),
-        vec_dot_fixed("embedding", "embedding", 4).alias("unrolled"),
-    ).collect()
-    for r in rows:
-        assert r.fold == r.unrolled  # bitwise, not approx
-
-
 class TestBucketedNearDup:
     def _df(self, spark, sizes):
         """Buckets of the given sizes; identical vectors within a bucket."""
@@ -311,7 +293,7 @@ class TestBucketedNearDup:
         )
 
         df = self._df(spark, [3, 2])
-        got = cosine_neardup_pairs_bucketed(df, threshold=0.9, dim=4).collect()
+        got = cosine_neardup_pairs_bucketed(df, threshold=0.9).collect()
         # identical vectors: all within-bucket pairs, cosine 1.0
         pairs = {(r.id_a, r.id_b) for r in got}
         assert pairs == {(0, 1), (0, 2), (1, 2), (3, 4)}
@@ -324,7 +306,7 @@ class TestBucketedNearDup:
 
         df = self._df(spark, [5, 2])
         got = cosine_neardup_pairs_bucketed(
-            df, threshold=0.9, dim=4, max_bucket_rows=3
+            df, threshold=0.9, max_bucket_rows=3
         ).collect()
         # bucket 0 (5 rows) is over the cap -> excluded from exact pairing;
         # bucket 1 (2 rows) survives

@@ -20,12 +20,6 @@ documented resource/precondition classification attached — so one
 command generates the complete sweep artifact end-to-end. ``--json``
 merges into an existing artifact (resumable); ``--resume-from`` skips
 the alphabetical prefix.
-
-The harness forces SPARK_GRAFT_MBM_MODE=exact (unless already set):
-mutual_best_match's auto mode stays exact since r11 (the measured
-recall reversal), but a stray ivf opt-in in the environment would
-compare the approximate leg against the exact oracle — a parity run
-must compare exact against exact (ADVICE r10).
 """
 
 from __future__ import annotations
@@ -44,9 +38,6 @@ import pandas as pd
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-# exact-vs-exact: see module docstring (must be set before plan import)
-os.environ.setdefault("SPARK_GRAFT_MBM_MODE", "exact")
 
 from data_engineering_1_spark.io import TABLES  # noqa: E402
 from data_engineering_1_spark.plans import registry  # noqa: E402
