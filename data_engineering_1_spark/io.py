@@ -50,13 +50,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Lazy: nothing is read until an action runs.
 
     ``events.ts`` is parquet TIMESTAMP(MICROS) on this fixture set (verified
-    with pyarrow at all three scale factors); Spark 4 reads MICROS — and
-    NANOS — natively as TIMESTAMP_NTZ. Builds that cannot read a NANOS
-    column natively instead take the nanosAsLong retry in
-    ``_read_parquet_nanos_safe`` and surface ``ts`` as a long, which we
-    truncate to microseconds — exactly what DuckDB's scanner does
-    (TIMESTAMP_NS -> µs TIMESTAMP truncates), so oracle comparisons stay
-    exact on either path.
+    with pyarrow at all three scale factors), which Spark reads natively.
+    Spark 4.1 rejects a TIMESTAMP(NANOS) column (PARQUET_TYPE_ILLEGAL), so
+    such a file takes the nanosAsLong retry in ``_read_parquet_nanos_safe``
+    and surfaces ``ts`` as a long, which we truncate to microseconds —
+    exactly what DuckDB's scanner does (TIMESTAMP_NS -> µs TIMESTAMP
+    truncates), so oracle comparisons stay exact on either path.
 
     Whatever path was taken, ``ts`` is normalized to one canonical type —
     TIMESTAMP_NTZ (the native-read result, values unchanged under the UTC
@@ -141,10 +140,6 @@ def _read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
                 spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
             else:
                 spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in (names or TABLES))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -50,10 +50,6 @@ def avg6(col: Column | str, scale: int = 2) -> Column:
     )
 
 
-def count_big(col: Column | str = "*") -> Column:
-    return (F.count(F.lit(1)) if col == "*" else F.count(col)).alias("n")
-
-
 # Oracle-side (DuckDB) SQL fragments mirroring the helpers above.
 def o_sum_dec(expr: str, scale: int = 2) -> str:
     # ROUND-to-cents before DOUBLE: see sum_dec's scale note. ROUND, not

@@ -11,19 +11,30 @@ twins carry the DuckDB oracle; these carry the incremental semantics
 Scale notes: every pipeline keys its state by (window/bucket, key) so state
 is partitioned across executors by the same shuffle as the aggregation;
 watermarks bound state size — without one, a windowed agg on an unbounded
-stream grows state forever. foreachBatch sinks write idempotently by epoch
-so task retries don't duplicate output.
+stream grows state forever.
+
+Sinks: each concern has one mechanism. Every ``run_*`` sink drains through
+``_drain`` (trigger availableNow). foreachBatch sinks write idempotently by
+epoch so task retries don't duplicate output. The incremental MV (X46) has
+one on-disk layout, an ``__epoch=<batchId>`` partition per micro-batch,
+written by ``_rollup_epoch_writer`` for both the drained and the sustained
+sink, read by :func:`read_rollup` and compacted by
+:func:`fold_rollup_epochs`. The three stream-stream joins share one
+interval-join body, ``_interval_join``.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 from collections.abc import Iterable, Iterator
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType
 
@@ -46,12 +57,15 @@ def events_file_stream(
     resolution (io.resolve_raw_ts_type) for how THIS build reads the
     fixture's timestamp unit, and mirrors it:
 
-      * native path (Spark 4, fixture is TIMESTAMP(MICROS) — or NANOS,
-        which Spark 4 also reads): declare ``ts`` with the batch-resolved
-        timestamp type and cast to the canonical TIMESTAMP_NTZ;
-      * fallback path (older builds that surface NANOS only as a long via
-        spark.sql.legacy.parquet.nanosAsLong): declare ``ts BIGINT`` and
-        truncate nanos -> micros exactly like io.load_table.
+      * native path (fixture is TIMESTAMP(MICROS), as every ``events``
+        fixture is): declare ``ts`` with the batch-resolved timestamp type
+        and cast to the canonical TIMESTAMP_NTZ;
+      * NANOS path (Spark 4.1 rejects parquet TIMESTAMP(NANOS) with
+        PARQUET_TYPE_ILLEGAL, so the batch loader resolves such a file
+        through spark.sql.legacy.parquet.nanosAsLong): declare ``ts
+        BIGINT`` and truncate nanos -> micros exactly like io.load_table.
+        The stream must read under that conf too, so this path sets it
+        for the whole session.
 
     Either way the stream's ``ts`` is value- and type-identical to the
     batch twin's (pinned by tests/test_streaming.py's stream/batch
@@ -61,7 +75,7 @@ def events_file_stream(
 
     raw_ts = engine_io.resolve_raw_ts_type(spark, sf_dir, name=path_glob)
     if isinstance(raw_ts, LongType):
-        # legacy build: the conf must be live while the stream runs, not
+        # NANOS file: the conf must be live while the stream runs, not
         # just at schema-resolution time
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         schema = EVENTS_SCHEMA.replace("ts TIMESTAMP_NTZ", "ts BIGINT")
@@ -381,67 +395,6 @@ def _parse_duration_ms(spec: str) -> int:
     return int(amount) * _DURATION_UNITS_MS[unit.lower()]
 
 
-class _RunningTotalsProcessor:
-    """Deferred-import holder: pyspark.sql.streaming.stateful_processor is
-    a Spark 4 module; build() returns a StatefulProcessor subclass
-    instance."""
-
-    @staticmethod
-    def build():
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-
-        class RunningTotals(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._totals = handle.getValueState(
-                    "totals", _RUNNING_STATE_SCHEMA
-                )
-
-            def handleInputRows(self, key, rows, timerValues):
-                total, n = (
-                    self._totals.get() if self._totals.exists() else (0.0, 0)
-                )
-                batch_n = 0
-                for pdf in rows:
-                    batch_n += len(pdf)
-                    n += len(pdf)
-                    total += float(pdf["value"].fillna(0.0).sum())
-                self._totals.update((total, n))
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "batch_events": [batch_n],
-                        "running_events": [n],
-                        "running_value": [total],
-                    }
-                )
-
-            def close(self) -> None:
-                pass
-
-        return RunningTotals()
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """ST6 via transformWithStateInPandas (Spark 4's successor to
-    applyInPandasWithState): same running per-user totals, but state is a
-    named ValueState on a StatefulProcessor — the API that adds state TTL,
-    timers, and multiple state variables per key.
-
-    Runtime requirement: the transformWithState python<->JVM state server
-    speaks protobuf, so this path needs the ``protobuf`` package (absent
-    in this container — the test skips; ``running_user_totals`` is the
-    dependency-free equivalent)."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningTotalsProcessor.build(),
-        outputStructType=_RUNNING_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def enrich_with_customer_stream(
     events: DataFrame, customer: DataFrame
 ) -> DataFrame:
@@ -481,20 +434,13 @@ def segment_counts_stream(
     )
 
 
-def run_to_memory(
-    stream_df: DataFrame,
-    name: str,
-    checkpoint_dir: str,
-    output_mode: str = "append",
-    timeout_sec: int = 120,
-) -> DataFrame:
-    """Drain a stream into an in-memory table with availableNow (process
-    everything currently available, then stop) and return it as a batch
-    DataFrame — the test/demo harness for every pipeline above."""
+def _drain(
+    writer: DataStreamWriter, checkpoint_dir: str, output_mode: str, timeout_sec: int
+) -> None:
+    """The one drain every run_* sink goes through: run the configured sink
+    with availableNow (process everything currently available, then stop)."""
     q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
+        writer.outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -503,6 +449,19 @@ def run_to_memory(
         q.awaitTermination(timeout_sec)
     finally:
         q.stop()
+
+
+def run_to_memory(
+    stream_df: DataFrame,
+    name: str,
+    checkpoint_dir: str,
+    output_mode: str = "append",
+    timeout_sec: int = 120,
+) -> DataFrame:
+    """Drain a stream into an in-memory table and return it as a batch
+    DataFrame — the test/demo harness for every pipeline above."""
+    writer = stream_df.writeStream.format("memory").queryName(name)
+    _drain(writer, checkpoint_dir, output_mode, timeout_sec)
     return stream_df.sparkSession.table(name)
 
 
@@ -532,20 +491,8 @@ def run_foreach_batch_parquet(
     """ST7 sink: foreachBatch writing each micro-batch to parquet,
     partitioned by epoch so a retried batch overwrites its own output
     (idempotent replay) instead of appending duplicates."""
-
-    write_batch = make_epoch_overwrite_writer(out_dir)
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        q.stop()
+    writer = stream_df.writeStream.foreachBatch(make_epoch_overwrite_writer(out_dir))
+    _drain(writer, checkpoint_dir, output_mode, timeout_sec)
 
 
 def run_foreach_batch_upsert(
@@ -574,24 +521,44 @@ def run_foreach_batch_upsert(
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         upsert_parquet(
-            batch_df.sparkSession,
-            table_path,
-            batch_df,
-            key_cols=key_cols,
-            version_col=version_col,
+            batch_df.sparkSession, table_path, batch_df, key_cols, version_col
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        q.stop()
+    writer = stream_df.writeStream.foreachBatch(merge_batch)
+    _drain(writer, checkpoint_dir, output_mode, timeout_sec)
+
+
+def _rollup_epoch_writer(table_path: str, key_cols: list[str], value_col: str):
+    """The incremental-MV (X46) foreachBatch body both rollup sinks share:
+    the micro-batch's per-key partial aggregate (count, decimal sum) lands
+    as the ``__epoch=<batchId>`` partition via dynamic partition overwrite.
+
+    The write is O(batch) however old the MV is, and exactly-once needs no
+    side meta-file: a replayed batchId re-derives identical partial rows
+    and overwrites exactly its own partition, so retries and restarts can
+    neither lose nor double-count an epoch. Partials stay per-epoch
+    disjoint, so :func:`read_rollup` folds them exactly and
+    :func:`fold_rollup_epochs` can compact old epochs."""
+
+    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        (
+            batch_df.groupBy(*key_cols)
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(
+                    F.coalesce(F.col(value_col), F.lit(0.0)).cast(
+                        "decimal(18,2)"
+                    )
+                ).alias("sum_value"),
+            )
+            .withColumn("__epoch", F.lit(int(epoch_id)))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__epoch")
+            .parquet(table_path)
+        )
+
+    return write_epoch
 
 
 def run_foreach_batch_rollup(
@@ -603,53 +570,14 @@ def run_foreach_batch_rollup(
     output_mode: str = "append",
     timeout_sec: int = 120,
 ) -> None:
-    """Incremental materialized-view maintenance: each micro-batch's
-    per-key partial aggregate (count, decimal sum) is MERGEd into a
-    stored partials table keyed by (keys..., __epoch), and the MV read
-    (:func:`read_rollup`) folds the partials. The additive twin of the
-    X42 latest-state sink.
-
-    Exactly-once WITHOUT a side meta-file: a replayed batchId re-derives
-    the identical partial rows and the upsert replaces its own previous
-    (keys, epoch) rows — a set-idempotent merge — so retries/restarts
-    can neither lose nor double-count an epoch. Storing per-epoch
-    partials (instead of read-modify-writing one running total) is what
-    makes that possible; a periodic compaction can fold old epochs
-    without changing read results."""
-    from ..operators.maintenance import upsert_parquet
-
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        partial = (
-            batch_df.groupBy(*key_cols)
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(
-                    F.coalesce(F.col(value_col), F.lit(0.0)).cast(
-                        "decimal(18,2)"
-                    )
-                ).alias("sum_value"),
-            )
-            .withColumn("__epoch", F.lit(int(epoch_id)))
-        )
-        upsert_parquet(
-            batch_df.sparkSession,
-            table_path,
-            partial,
-            key_cols=[*key_cols, "__epoch"],
-            version_col="__epoch",
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        q.stop()
+    """Incremental materialized-view maintenance, drained: every
+    currently available micro-batch's partials land as one ``__epoch``
+    partition (see ``_rollup_epoch_writer``), and the MV read
+    (:func:`read_rollup`) folds them. The additive twin of the X42
+    latest-state sink."""
+    write_epoch = _rollup_epoch_writer(table_path, key_cols, value_col)
+    writer = stream_df.writeStream.foreachBatch(write_epoch)
+    _drain(writer, checkpoint_dir, output_mode, timeout_sec)
 
 
 def start_rollup_stream(
@@ -660,44 +588,16 @@ def start_rollup_stream(
     value_col: str = "value",
     trigger_interval: str = "500 milliseconds",
 ):
-    """Sustained-rate incremental-MV maintenance (X46's soak shape,
-    VERDICT r11 #6): per-batch partials land as an ``__epoch=<id>``
-    PARTITION via dynamic partition overwrite, instead of MERGEing
-    into the whole table. run_foreach_batch_rollup's upsert re-reads
-    and rewrites the entire partials table every epoch — fine for the
-    availableNow catch-up it models, but O(total table) per batch, so
-    per-batch latency GROWS linearly under a sustained trigger. The
-    partition write is O(batch) forever: a replayed batchId overwrites
-    exactly its own partition (same idempotence argument — the partial
-    rows re-derive identically), and read_rollup's fold is unchanged
-    because the partials stay per-epoch disjoint. Returns the started
-    StreamingQuery; the caller owns stop().
+    """Sustained-rate incremental-MV maintenance (X46's soak shape):
+    the same per-epoch partition writer as run_foreach_batch_rollup,
+    under a processing-time trigger instead of a drain. Per-batch
+    latency stays flat because each write is O(batch). Returns the
+    started StreamingQuery; the caller owns stop().
 
-    100 TB story: this is the shape that survives — the MV ingests at
-    O(input) regardless of MV age, and a periodic compact_parquet /
-    fold of old epochs (X35 maintenance) bounds partition count
+    100 TB story: the MV ingests at O(input) regardless of MV age, and
+    a periodic :func:`fold_rollup_epochs` bounds the partition count
     without changing read results."""
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        partial = (
-            batch_df.groupBy(*key_cols)
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(
-                    F.coalesce(F.col(value_col), F.lit(0.0)).cast(
-                        "decimal(18,2)"
-                    )
-                ).alias("sum_value"),
-            )
-            .withColumn("__epoch", F.lit(int(epoch_id)))
-        )
-        (
-            partial.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(table_path)
-        )
-
+    write_epoch = _rollup_epoch_writer(table_path, key_cols, value_col)
     return (
         stream_df.writeStream.foreachBatch(write_epoch)
         .option("checkpointLocation", checkpoint_dir)
@@ -718,26 +618,22 @@ def _fold_commit(table_path: str) -> int:
     partition is hidden — so NO crash point ever exposes a double
     count to readers (mid-commit readers can transiently UNDERcount,
     which re-running this function heals)."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    stage = _os.path.join(table_path, _FOLD_STAGE)
-    with open(_os.path.join(stage, "_MANIFEST.json")) as fh:
-        manifest = _json.load(fh)
+    stage = os.path.join(table_path, _FOLD_STAGE)
+    with open(os.path.join(stage, "_MANIFEST.json")) as fh:
+        manifest = json.load(fh)
     base, old = manifest["base"], manifest["old"]
     for e in old:
-        src = _os.path.join(table_path, f"__epoch={e}")
-        if _os.path.exists(src):  # idempotent across recovery re-runs
-            _os.rename(src, _os.path.join(table_path, f".trash_epoch={e}"))
-    dst = _os.path.join(table_path, f"__epoch={base}")
-    if not _os.path.exists(dst):
-        _os.rename(stage, dst)
-    elif _os.path.exists(stage):  # re-run after a crash past the rename
-        _shutil.rmtree(stage, ignore_errors=True)
+        src = os.path.join(table_path, f"__epoch={e}")
+        if os.path.exists(src):  # idempotent across recovery re-runs
+            os.rename(src, os.path.join(table_path, f".trash_epoch={e}"))
+    dst = os.path.join(table_path, f"__epoch={base}")
+    if not os.path.exists(dst):
+        os.rename(stage, dst)
+    elif os.path.exists(stage):  # re-run after a crash past the rename
+        shutil.rmtree(stage, ignore_errors=True)
     for e in old:
-        _shutil.rmtree(
-            _os.path.join(table_path, f".trash_epoch={e}"),
+        shutil.rmtree(
+            os.path.join(table_path, f".trash_epoch={e}"),
             ignore_errors=True,
         )
     return len(old)
@@ -749,18 +645,18 @@ def fold_rollup_epochs(
     key_cols: list[str],
     keep_last_n: int = 10,
 ) -> int:
-    """Compact an epoch-partitioned rollup table: fold every partition
-    older than the newest ``keep_last_n`` epochs into ONE base
-    partition (__epoch = the oldest folded id), leaving read_rollup's
-    result unchanged (counts and decimal sums are re-aggregable, so
-    folding partials is exact). Returns the number of epochs folded.
+    """Compact a rollup table (either rollup sink's ``__epoch``
+    partitions): fold every partition older than the newest
+    ``keep_last_n`` epochs into ONE base partition (__epoch = the oldest
+    folded id), leaving read_rollup's result unchanged (counts and
+    decimal sums are re-aggregable, so folding partials is exact).
+    Returns the number of epochs folded.
 
-    This is the periodic maintenance start_rollup_stream's docstring
-    promises: the streaming sink appends O(batch) partitions forever;
-    this fold bounds the partition count without touching the recent
-    epochs a replayed batch could still overwrite (a restarted query
-    replays at most the last uncommitted epoch, so any keep_last_n >= 1
-    is replay-safe; older epochs are committed by definition).
+    The rollup sinks add one O(batch) partition per epoch forever; this
+    fold bounds the partition count without touching the recent epochs
+    a replayed batch could still overwrite (a restarted query replays at
+    most the last uncommitted epoch, so any keep_last_n >= 1 is
+    replay-safe; older epochs are committed by definition).
 
     Crash discipline (plain parquet has no ACID; this is the manifest
     protocol a transactional format would give for free): the fold is
@@ -770,14 +666,10 @@ def fold_rollup_epochs(
     leaves either the original table, a transient undercount, or the
     folded table — never a double count — and re-running this function
     detects the leftover stage and completes the commit."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    stage = _os.path.join(table_path, _FOLD_STAGE)
-    if _os.path.exists(_os.path.join(stage, "_MANIFEST.json")):
+    stage = os.path.join(table_path, _FOLD_STAGE)
+    if os.path.exists(os.path.join(stage, "_MANIFEST.json")):
         return _fold_commit(table_path)  # recover a crashed fold first
-    _shutil.rmtree(stage, ignore_errors=True)  # stage w/o manifest: junk
+    shutil.rmtree(stage, ignore_errors=True)  # stage w/o manifest: junk
 
     cur = spark.read.parquet(table_path)
     epochs = sorted(
@@ -789,34 +681,65 @@ def fold_rollup_epochs(
     base = min(old)
     # files in a partition dir carry only the non-partition columns;
     # the dir NAME supplies __epoch once the stage renames into place
-    (
-        cur.where(F.col("__epoch").isin(old))
-        .groupBy(*key_cols)
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("sum_value").alias("sum_value"),
-        )
-        .write.mode("overwrite")
-        .parquet(stage)
-    )
-    with open(_os.path.join(stage, "_MANIFEST.json"), "w") as fh:
-        _json.dump({"base": base, "old": old}, fh)
+    folded = _fold_partials(cur.where(F.col("__epoch").isin(old)), key_cols)
+    folded.write.mode("overwrite").parquet(stage)
+    with open(os.path.join(stage, "_MANIFEST.json"), "w") as fh:
+        json.dump({"base": base, "old": old}, fh)
     return _fold_commit(table_path)
+
+
+def _fold_partials(partials: DataFrame, key_cols: list[str]) -> DataFrame:
+    return partials.groupBy(*key_cols).agg(
+        F.sum("n_rows").alias("n_rows"), F.sum("sum_value").alias("sum_value")
+    )
 
 
 def read_rollup(
     spark: SparkSession, table_path: str, key_cols: list[str]
 ) -> DataFrame:
-    """The MV read over run_foreach_batch_rollup's partials table: fold
-    per-epoch partials into the current totals (counts and decimal sums
-    are re-aggregable, so the fold is exact under any epoch layout)."""
-    return (
-        spark.read.parquet(table_path)
-        .groupBy(*key_cols)
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("sum_value").alias("sum_value"),
-        )
+    """The MV read over a rollup table: fold per-epoch partials into the
+    current totals (counts and decimal sums are re-aggregable, so the
+    fold is exact however fold_rollup_epochs has compacted the epochs)."""
+    return _fold_partials(spark.read.parquet(table_path), key_cols)
+
+
+def _interval_join(
+    clicks: DataFrame, purchases: DataFrame, within: str, watermark: str, how: str
+) -> DataFrame:
+    """The one stream-stream interval join body: each purchase against the
+    same user's clicks in the preceding ``within``.
+
+    Both sides carry a watermark and the condition bounds the click's
+    event time on both sides (``p_ts - within <= c_ts <= p_ts``) — that
+    pair is what lets Spark's state store evict buffered rows (an
+    unbounded stream-stream join would hold every row forever). The full
+    outer form coalesces ``user_id`` across sides, since either side can
+    be the null one; the others keep the purchase's ``p_user``."""
+    p = _with_watermark(purchases, watermark).select(
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("p_ts"),
+        F.col("event_id").alias("purchase_id"),
+    )
+    c = _with_watermark(clicks, watermark).select(
+        F.col("user_id").alias("c_user"),
+        F.col("ts").alias("c_ts"),
+        F.col("event_id").alias("click_id"),
+    )
+    full = how == "fullOuter"
+    user = F.coalesce("p_user", "c_user").alias("user_id") if full else "p_user"
+    return p.join(
+        c,
+        F.expr(
+            f"p_user = c_user AND c_ts <= p_ts "
+            f"AND c_ts >= p_ts - INTERVAL {within}"
+        ),
+        how,
+    ).select(
+        user,
+        "purchase_id",
+        "click_id",
+        F.col("p_ts").cast("timestamp_ntz").alias("p_ts"),
+        F.col("c_ts").cast("timestamp_ntz").alias("c_ts"),
     )
 
 
@@ -826,40 +749,12 @@ def click_purchase_join_stream(
     within: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """ST-family stream-stream inner join with event-time bounds: each
-    purchase joined to the same user's clicks in the preceding ``within``.
-
-    Both sides carry a watermark and the join condition carries a
-    two-sided time bound — that pair is what lets Spark's state store
-    evict buffered rows (an unbounded stream-stream join would hold every
-    row forever). The batch twin is the declared query
-    ``clicks_before_purchase_1h``'s join stage (operators/rangejoin.py
-    solves the same problem for batch with bucket equi-keys; streaming
-    gets the bound from watermarks instead)."""
-    c = _with_watermark(clicks, watermark).select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    p = _with_watermark(purchases, watermark).select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    return c.join(
-        p,
-        F.expr(
-            f"c_user = p_user AND c_ts <= p_ts "
-            f"AND c_ts >= p_ts - INTERVAL {within}"
-        ),
-        "inner",
-    ).select(
-        "p_user",
-        "purchase_id",
-        "click_id",
-        F.col("p_ts").cast("timestamp_ntz").alias("p_ts"),
-        F.col("c_ts").cast("timestamp_ntz").alias("c_ts"),
-    )
+    """ST-family stream-stream INNER interval join (``_interval_join``).
+    The batch twin is the declared query ``clicks_before_purchase_1h``'s
+    join stage (operators/rangejoin.py solves the same problem for batch
+    with bucket equi-keys; streaming gets the bound from watermarks
+    instead)."""
+    return _interval_join(clicks, purchases, within, watermark, "inner")
 
 
 def purchase_click_left_outer_stream(
@@ -868,44 +763,18 @@ def purchase_click_left_outer_stream(
     within: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """X66 stream-stream LEFT OUTER interval join: every purchase emits —
-    joined to the same user's preceding-``within`` clicks when they
-    exist, or ONCE with a NULL click after the watermark proves no
-    in-range click can still arrive.
+    """X66 stream-stream LEFT OUTER interval join (``_interval_join``):
+    every purchase emits — joined to the same user's preceding-``within``
+    clicks when they exist, or ONCE with a NULL click after the watermark
+    proves no in-range click can still arrive.
 
     The null side of an outer stream-stream join is watermark-driven
     output: Spark buffers the preserved (purchase) row in the state
     store and only emits the null-padded result when the watermark
     passes the row's join-window end (p_ts: no earlier-click can arrive
     once the watermark clears p_ts, since c_ts <= p_ts) — so "no match"
-    is a PROVEN fact, not a timeout guess. Both sides carry watermarks
-    and the condition bounds the click's event time on both sides,
-    which is what lets state evict; the batch twin is a plain left
-    join."""
-    p = _with_watermark(purchases, watermark).select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    c = _with_watermark(clicks, watermark).select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    return p.join(
-        c,
-        F.expr(
-            f"p_user = c_user AND c_ts <= p_ts "
-            f"AND c_ts >= p_ts - INTERVAL {within}"
-        ),
-        "leftOuter",
-    ).select(
-        "p_user",
-        "purchase_id",
-        "click_id",
-        F.col("p_ts").cast("timestamp_ntz").alias("p_ts"),
-        F.col("c_ts").cast("timestamp_ntz").alias("c_ts"),
-    )
+    is a PROVEN fact, not a timeout guess. Batch twin: a plain left join."""
+    return _interval_join(clicks, purchases, within, watermark, "leftOuter")
 
 
 def purchase_click_full_outer_stream(
@@ -914,40 +783,13 @@ def purchase_click_full_outer_stream(
     within: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """X66 stream-stream FULL OUTER interval join: BOTH sides null-emit
-    on watermark expiry. A matched (purchase, click) pair emits
-    immediately; an unmatched purchase emits once with a NULL click when
-    the watermark clears p_ts (no earlier click can still arrive, since
-    c_ts <= p_ts); an unmatched click emits once with a NULL purchase
-    when the watermark clears c_ts + ``within`` (its join window's end —
-    a matching purchase must satisfy p_ts <= c_ts + within).
-
-    Same eviction discipline as the inner/left variants: watermarks on
-    both inputs plus a two-sided event-time bound in the condition, so
-    each side's state is droppable the moment its window provably
-    closed. ``user_id`` is coalesced across sides because either side
-    can be the null one. Batch twin: a plain FULL OUTER theta join."""
-    p = _with_watermark(purchases, watermark).select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    c = _with_watermark(clicks, watermark).select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    return p.join(
-        c,
-        F.expr(
-            f"p_user = c_user AND c_ts <= p_ts "
-            f"AND c_ts >= p_ts - INTERVAL {within}"
-        ),
-        "fullOuter",
-    ).select(
-        F.coalesce("p_user", "c_user").alias("user_id"),
-        "purchase_id",
-        "click_id",
-        F.col("p_ts").cast("timestamp_ntz").alias("p_ts"),
-        F.col("c_ts").cast("timestamp_ntz").alias("c_ts"),
-    )
+    """X66 stream-stream FULL OUTER interval join (``_interval_join``):
+    BOTH sides null-emit on watermark expiry. A matched (purchase, click)
+    pair emits immediately; an unmatched purchase emits once with a NULL
+    click when the watermark clears p_ts (no earlier click can still
+    arrive, since c_ts <= p_ts); an unmatched click emits once with a
+    NULL purchase when the watermark clears c_ts + ``within`` (its join
+    window's end — a matching purchase must satisfy p_ts <= c_ts +
+    within). Output ``user_id`` is coalesced across sides. Batch twin: a
+    plain FULL OUTER theta join."""
+    return _interval_join(clicks, purchases, within, watermark, "fullOuter")

@@ -84,14 +84,47 @@ def test_partitioned_write_prunes(spark, chunks_df, tmp_path):
 
 
 def test_load_table_events_nanos_safe(spark):
-    """events.ts is parquet TIMESTAMP(NANOS). Spark 4 reads it natively as
-    timestamp_ntz (micros, truncated) — value-identical to DuckDB's scanner,
-    which is what the oracle comparisons rely on. The nanosAsLong retry in
-    _read_parquet_nanos_safe only fires on Spark builds without native
-    NANOS support, where load_table converts the long to a timestamp."""
+    """events.ts is parquet TIMESTAMP(MICROS) on every fixture, which Spark
+    reads natively; load_table normalizes it to timestamp_ntz. NANOS files
+    take the nanosAsLong retry instead (test_load_table_nanos_file)."""
     ev = io.load_table(spark, "/root/testdata/sf0.001", "events")
     assert dict(ev.dtypes)["ts"] in ("timestamp", "timestamp_ntz")
     assert ev.count() > 0
+
+
+def test_load_table_nanos_file(spark, tmp_path):
+    """A parquet TIMESTAMP(NANOS) column is rejected by a plain Spark read,
+    so load_table goes through _read_parquet_nanos_safe's nanosAsLong retry:
+    ``ts`` comes back as timestamp_ntz truncated to microseconds, the
+    legacy conf is unset again afterwards, and resolve_raw_ts_type reports
+    the long that a stream reader must declare."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    pq.write_table(
+        pa.table(
+            {"ts": pa.array([1_700_000_000_123_456_789], pa.timestamp("ns"))}
+        ),
+        str(tmp_path / "nanos.parquet"),
+    )
+    prev = spark.conf.get(conf, None)
+    spark.conf.unset(conf)
+    try:
+        df = io.load_table(spark, str(tmp_path), "nanos")
+        assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+        assert df.collect()[0]["ts"] == datetime.datetime(
+            2023, 11, 14, 22, 13, 20, 123456
+        )
+        assert spark.conf.get(conf, None) is None
+        raw = io.resolve_raw_ts_type(spark, str(tmp_path), "nanos")
+        assert isinstance(raw, LongType)
+    finally:
+        if prev is not None:
+            spark.conf.set(conf, prev)
 
 
 def test_orc_roundtrip(spark, sf_dir, tmp_path):

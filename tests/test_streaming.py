@@ -192,40 +192,6 @@ def test_rate_stream_schema(spark):
     ]
 
 
-def test_transform_with_state_matches_batch(spark, sf_dir, events_batch, tmp_path):
-    # the transformWithState runtime speaks protobuf to the JVM state
-    # server; without the protobuf package the API cannot run at all
-    pytest.importorskip("google.protobuf.descriptor")
-    out_dir = str(tmp_path / "tws_out")
-    sp.run_foreach_batch_parquet(
-        sp.running_user_totals_tws(sp.events_file_stream(spark, sf_dir)),
-        out_dir,
-        str(tmp_path / "ckpt_tws"),
-        output_mode="update",
-    )
-    got = (
-        spark.read.parquet(os.path.join(out_dir, "epoch=*"))
-        .groupBy("user_id")
-        .agg(F.max("running_events").alias("n"), F.max("running_value").alias("v"))
-        .toPandas()
-        .sort_values("user_id")
-        .reset_index(drop=True)
-    )
-    exp = (
-        events_batch.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.coalesce("value", F.lit(0.0))).alias("v"),
-        )
-        .toPandas()
-        .sort_values("user_id")
-        .reset_index(drop=True)
-    )
-    assert (got["user_id"].values == exp["user_id"].values).all()
-    assert (got["n"].values == exp["n"].values).all()
-    assert abs(got["v"] - exp["v"]).max() < 1e-6
-
-
 def test_stream_static_join_matches_batch(spark, sf_dir, events_batch, tmp_path):
     """Stream-static enrichment: the streaming broadcast join against the
     static customer dim must produce exactly the batch twin's per-segment
@@ -731,10 +697,11 @@ def test_foreach_batch_upsert_maintains_latest_state(
 def test_foreach_batch_rollup_incremental_mv(
     spark, sf_dir, events_batch, tmp_path
 ):
-    """Incremental MV: per-epoch partial aggregates merged per batch must
+    """Incremental MV: per-epoch partial aggregates written per batch must
     fold to exactly the batch groupBy, across MULTIPLE micro-batches
     (maxFilesPerTrigger=1 over two source files), and replaying an
-    epoch's merge must leave the MV unchanged (set-idempotent upsert)."""
+    epoch's write must leave the MV unchanged (the replayed batch
+    overwrites its own __epoch partition)."""
     from datetime import datetime, timedelta
 
     src_dir = tmp_path / "mv_events"
@@ -788,16 +755,73 @@ def test_foreach_batch_rollup_incremental_mv(
     assert (got["n_rows"].values == exp["n_rows"].values).all()
     assert (got["sum_value"].values == exp["sum_value"].values).all()
 
-    # replay epoch 0's merge: identical partial rows replace themselves
-    from data_engineering_1_spark.operators.maintenance import upsert_parquet
-
-    epoch0 = spark.read.parquet(table).filter(F.col("__epoch") == 0)
+    # replay epoch 0's write: dynamic-overwriting its partition with its
+    # own rows (what a restarted query's re-run of batch 0 does)
     before = sorted(map(tuple, spark.read.parquet(table).collect()))
-    upsert_parquet(
-        spark, table, epoch0, ["user_id", "__epoch"], "__epoch"
+    epoch0 = spark.read.parquet(table).filter(F.col("__epoch") == 0)
+    (
+        epoch0.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__epoch")
+        .parquet(table)
     )
     after = sorted(map(tuple, spark.read.parquet(table).collect()))
     assert before == after
+
+
+def test_foreach_batch_rollup_fold_keeps_every_epoch(spark, tmp_path):
+    """The drained rollup sink's table is one the epoch fold serves: after
+    four epochs (maxFilesPerTrigger=1 over four files) and
+    fold_rollup_epochs(keep_last_n=2), read_rollup still equals the batch
+    groupBy. The table must hold only __epoch partition directories: flat
+    data files beside the fold's __epoch=0 directory would make readers
+    see only that partition."""
+    from datetime import datetime, timedelta
+
+    src_dir = tmp_path / "mv_fold_events"
+    src_dir.mkdir()
+    t0 = datetime(2024, 1, 1)
+    for f in range(4):
+        path = src_dir / f"e{f}.parquet"
+        _write_events_file(
+            path,
+            [(10 * f + i, t0 + timedelta(hours=f, minutes=i), i % 3, "view")
+             for i in range(10)],
+        )
+        os.utime(path, (1_000_000_000 + 100 * f, 1_000_000_000 + 100 * f))
+
+    table = str(tmp_path / "mv_fold_user_totals")
+    sp.run_foreach_batch_rollup(
+        sp.events_file_stream(
+            spark, str(src_dir), max_files_per_trigger=1, path_glob="*.parquet"
+        ),
+        table,
+        str(tmp_path / "ckpt_mv_fold"),
+        key_cols=["user_id"],
+    )
+    # one layout: a partition per epoch, no flat data files at the root
+    assert sorted(os.path.basename(d) for d in glob.glob(f"{table}/__epoch=*")) == [
+        "__epoch=0", "__epoch=1", "__epoch=2", "__epoch=3"
+    ]
+    assert not glob.glob(f"{table}/*.parquet")
+    assert sp.fold_rollup_epochs(spark, table, ["user_id"], keep_last_n=2) == 2
+
+    exp = sorted(
+        map(
+            tuple,
+            spark.read.parquet(str(src_dir))
+            .groupBy("user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
+            )
+            .collect(),
+        )
+    )
+    got = sorted(
+        map(tuple, sp.read_rollup(spark, table, ["user_id"]).collect())
+    )
+    assert got == exp
 
 
 def test_stream_stream_join_matches_batch(spark, sf_dir, events_batch, tmp_path):

@@ -14,7 +14,7 @@ size over time:
   * incremental MV (X46): the epoch-partitioned rollup sink
     (streaming.pipelines.start_rollup_stream) — per-batch work is
     O(batch) by construction; the soak proves the sink's write cost
-    does NOT grow with MV age (the upsert variant's would).
+    does NOT grow with MV age.
 
 Emits ONE JSON artifact with the full per-batch series plus a
 summary verdict per pipeline: state_bounded (max state rows in the
