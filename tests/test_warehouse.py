@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import os
+import shutil
 import struct
 
 import pytest
@@ -36,6 +38,7 @@ def test_cold_build_then_warm_skip(spark, pdf_dir, tmp_path):
     stats = wh.build(pdf_dir)
     assert stats["chunk_count"] > 0
     assert stats["chunk_count"] == stats["document_count"]
+    assert os.listdir(wh.root) == [EMBEDDINGS]  # one stored table
 
     # warm restart (§3.3): same build call must be a no-op, not a failure
     again = wh.build(pdf_dir)
@@ -68,6 +71,20 @@ def test_reset_drops_tables(spark, pdf_dir, tmp_path):
     wh.build(pdf_dir)
     wh.reset()
     assert wh.count(CHUNKS) == 0
+    assert wh.stats() == {"chunk_count": 0, "document_count": 0}
+
+
+def test_reset_clears_a_root_an_older_build_wrote(spark, pdf_dir, tmp_path):
+    """Older builds stored a ``chunks`` table beside ``embeddings``; a
+    build on such a root skips, serves ``chunks`` as the projection, and
+    ``reset()`` leaves neither directory behind."""
+    wh = ChunkWarehouse(spark, str(tmp_path / "older"))
+    stats = wh.build(pdf_dir)
+    wh.load(CHUNKS).write.parquet(wh.path(CHUNKS))
+    assert sorted(os.listdir(wh.root)) == [CHUNKS, EMBEDDINGS]
+    assert wh.build(pdf_dir) == stats
+    wh.reset()
+    assert os.listdir(wh.root) == []
     assert wh.stats() == {"chunk_count": 0, "document_count": 0}
 
 
@@ -118,9 +135,24 @@ def test_served_relation_equals_the_table(spark, built):
     assert served.schema == disk.schema  # nullability included
     assert served.columns == list(EMBEDDING_COLUMNS)
     assert _rows(served) == _rows(disk)
-    chunks = spark.read.parquet(built.path(CHUNKS))
-    assert chunks.columns == list(CHUNK_COLUMNS)
-    assert _rows(chunks) == _rows(served.select(*CHUNK_COLUMNS))
+
+
+def test_chunks_is_the_projection_of_embeddings(spark, built, tmp_path):
+    """``load(CHUNKS)`` is ``load(EMBEDDINGS)`` without the vector
+    columns, in rows and schema (nullability included), both when served
+    and when read from parquet (a copy of the root has no entry)."""
+    copy = ChunkWarehouse(spark, str(tmp_path / "copy"))
+    shutil.copytree(built.root, copy.root)
+    for wh, served in ((built, True), (copy, False)):
+        chunks = wh.load(CHUNKS)
+        want = wh.load(EMBEDDINGS).select(*CHUNK_COLUMNS)
+        assert _served(chunks) is served
+        assert chunks.columns == list(CHUNK_COLUMNS)
+        assert chunks.schema == want.schema
+        assert _rows(chunks) == _rows(want)
+    assert copy.load(CHUNKS).schema == built.load(CHUNKS).schema
+    with pytest.raises(ValueError):
+        built.load("chunk")
 
 
 def test_stored_norm_is_vec_norm_bit_for_bit(spark, built):
@@ -140,17 +172,43 @@ def test_stored_norm_is_vec_norm_bit_for_bit(spark, built):
     assert built.load(EMBEDDINGS).filter(F.col("embedding_norm") <= 0).count() == 0
 
 
-def test_forced_build_submits_at_most_six_jobs(spark, pdf_dir, tmp_path):
-    wh = ChunkWarehouse(spark, str(tmp_path / "jobs"))
-    first = wh.build(pdf_dir)
+def _jobs(spark, group: str, call) -> tuple[object, int]:
+    """``call()``'s result and the Spark jobs it submitted."""
     sc = spark.sparkContext
-    group = "test-warehouse-forced-build"
-    sc.setJobGroup(group, "one forced build")
+    sc.setJobGroup(group, group)
     try:
-        assert wh.build(pdf_dir, force_rebuild=True) == first
+        out = call()
     finally:
         sc.setJobGroup("", "")
-    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_forced_build_submits_at_most_five_jobs(spark, pdf_dir, tmp_path):
+    """Checkpoint, count, one parquet write."""
+    wh = ChunkWarehouse(spark, str(tmp_path / "jobs"))
+    first = wh.build(pdf_dir)
+    got, jobs = _jobs(
+        spark,
+        "test-warehouse-forced-build",
+        lambda: wh.build(pdf_dir, force_rebuild=True),
+    )
+    assert got == first
+    assert 0 < jobs <= 5
+
+
+def test_skip_build_submits_at_most_three_jobs(spark, pdf_dir, tmp_path):
+    """A build that skips counts the one table once: served, or read from
+    parquet (a copy of the root has no entry)."""
+    wh = ChunkWarehouse(spark, str(tmp_path / "skip"))
+    first = wh.build(pdf_dir)
+    copy = ChunkWarehouse(spark, str(tmp_path / "skip_copy"))
+    shutil.copytree(wh.root, copy.root)
+    for i, w in enumerate((wh, copy)):
+        got, jobs = _jobs(
+            spark, f"test-warehouse-skip-{i}", lambda: w.build(pdf_dir)
+        )
+        assert got == first
+        assert 0 < jobs <= 3
 
 
 def test_rebuild_from_another_instance_serves_new_vectors(
@@ -212,35 +270,26 @@ def test_reset_and_force_rebuild_release_the_entry(spark, pdf_dir, tmp_path):
 
 
 def test_every_branch_returns_the_table_counts(spark, pdf_dir, tmp_path):
-    import shutil
-
     wh = ChunkWarehouse(spark, str(tmp_path / "branches"))
     fresh = wh.build(pdf_dir)
     n = fresh["chunk_count"]
     assert fresh == {"chunk_count": n, "document_count": n}
     assert wh.build(pdf_dir) == fresh  # skip
     assert wh.build(pdf_dir, force_rebuild=True) == fresh  # force
+    assert wh.stats() == fresh
 
-    # embeddings missing: embedded from the stored chunks, not the PDFs
+    # a directory that holds no table counts 0 and is left alone
     shutil.rmtree(wh.path(EMBEDDINGS))
-    assert wh.build(str(tmp_path / "no_pdfs_here")) == fresh
-    assert _rows(wh.load(EMBEDDINGS)) == _rows(
-        spark.read.parquet(wh.path(EMBEDDINGS))
-    )
+    os.mkdir(wh.path(EMBEDDINGS))
+    assert wh.build(pdf_dir) == {"chunk_count": 0, "document_count": 0}
+    assert wh.count(CHUNKS) == 0
+    assert os.listdir(wh.path(EMBEDDINGS)) == []
 
-    # chunks missing: rebuilt from the PDFs; embeddings kept as stored
-    one = tmp_path / "one_pdf"
-    one.mkdir()
-    shutil.copy(f"{pdf_dir}/a.pdf", one / "a.pdf")
-    shutil.rmtree(wh.path(CHUNKS))
-    got = wh.build(str(one))
-    assert got == {"chunk_count": 1, "document_count": n}
-    assert wh.stats() == got
-
-    # a directory that holds no table is left alone (mode "ignore")
-    shutil.rmtree(wh.path(CHUNKS))
-    (tmp_path / "branches" / CHUNKS).mkdir()
-    assert wh.build(pdf_dir) == {"chunk_count": 0, "document_count": n}
+    # only a missing table counts 0: an unreadable one raises
+    with open(os.path.join(wh.path(EMBEDDINGS), "part-0.parquet"), "wb") as f:
+        f.write(b"not parquet")
+    with pytest.raises(Exception, match="part-0.parquet"):
+        wh.count(EMBEDDINGS)
 
 
 def test_no_norm_in_sources_or_export(spark, built, tmp_path):
@@ -341,13 +390,14 @@ def test_build_equals_the_jvm_chunking_plan_bit_for_bit(
         .withColumn("embedding", get_embedder()("text"))
         .withColumn("embedding_norm", vec_norm("embedding"))
     )
-    for table, cols in ((CHUNKS, CHUNK_COLUMNS), (EMBEDDINGS, EMBEDDING_COLUMNS)):
-        got = [repr(tuple(r)) for r in _rows(spark.read.parquet(wh.path(table)))]
+    for name, df, cols in (
+        ("stored embeddings", spark.read.parquet(wh.path(EMBEDDINGS)), EMBEDDING_COLUMNS),
+        ("loaded chunks", wh.load(CHUNKS), CHUNK_COLUMNS),
+    ):
+        got = [repr(tuple(r)) for r in _rows(df)]
         want = [repr(tuple(r)) for r in _rows(oracle.select(*cols))]
-        assert got == want, table
-    lengths = {
-        len(r.text) for r in spark.read.parquet(wh.path(CHUNKS)).collect()
-    }
+        assert got == want, name
+    lengths = {len(r.text) for r in wh.load(CHUNKS).collect()}
     assert {10, 500, 501 - 450, 950 - 900, 951 - 900} <= lengths
     assert 9 not in lengths
 

@@ -127,13 +127,14 @@ CLASSIFICATIONS: dict[str, str] = {
     ),
     "mutual_best_match": (
         "oracle-resource at 30x: the symmetric top-1 twin spills past "
-        "free disk solo (parity_30x_r2c/r3, 478-686 s before dying); "
-        "value-exact at 30x via the staged bucketed twin "
-        "(parity_staged_30x_d, 3002 pairs)"
+        "free disk solo (478-686 s before dying, at 3002 Spark "
+        "rows); value-exact at 30x via the staged bucketed twin "
+        "(3002 pairs, 178.9 s oracle)"
     ),
     "temporal_reach_parts": (
         "oracle-resource at 30x: the nested temporal-BFS twin spills "
-        "past free disk solo (parity_30x_r2c); value-exact at 30x via "
+        "past free disk solo (459.6 s before dying, at 30 Spark "
+        "rows); value-exact at 30x via "
         "the staged round-by-round twin (r13)"
     ),
     "pagerank_copurchase": (

@@ -1,7 +1,7 @@
 """Dump ``explain('formatted')`` for named declared queries to files.
 
 Usage:
-  python tools/dump_plans.py q1 q2 --out plans/r14 --suffix _before
+  python tools/dump_plans.py q1 q2 --out /tmp/plans --suffix _before
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="plans/r14")
+    ap.add_argument("--out", required=True, help="directory (a relative one is under the checkout)")
     ap.add_argument("--suffix", default="")
     args = ap.parse_args()
 

@@ -22,7 +22,7 @@ final third <= 1.15x the middle third's max) and latency_flat (median
 trigger latency in the final third <= 1.5x the first third's).
 
 Usage:
-    python tools/stream_soak.py --batches 250 --json stream_soak.json
+    python tools/stream_soak.py --batches 250 --json /tmp/stream_soak.json
 """
 
 from __future__ import annotations

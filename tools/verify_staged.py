@@ -514,7 +514,7 @@ def staged_temporal_reach(con: duckdb.DuckDBPyConnection) -> pd.DataFrame:
     co-purchase graph, one temp table per round (mirrors horizon's
     r0..r3 CTEs; the naive twin nests the rounds inside one operator
     tree over the t-stamped edge multiset and spills past free disk at
-    30x — parity_30x_r2c). Each round here is one bounded
+    30x after 460 s). Each round here is one bounded
     |ball| x tedges join with the time predicate + a MIN fold."""
     con.execute(
         "CREATE TEMP TABLE tr_items AS "
